@@ -1,6 +1,15 @@
 package graft
 
+import scala.collection.immutable.{ListMap, SortedMap}
+
+import graft.core.{BenchRecord, Json, Verdict}
+
 /** Benchmark main — one JSON line on stdout per the driver contract.
+  *
+  * A run is measure → decide → write: `main` times the queries, the pure
+  * [[Bench.decide]] turns the measurements and the committed reference
+  * (read once) into the stdout record, the verdict trailer and what, if
+  * anything, `BENCH_LOCAL.json` becomes, and `main` writes that out.
   *
   * Methodology:
   *  - a warmup pass (flagship query) absorbs JVM/codegen/classloading cost
@@ -64,6 +73,12 @@ object Bench {
     * elsewhere). */
   val DefaultSfDir = "/root/testdata/sf0.1"
 
+  /** The committed per-query rerun reference (clean runs only). */
+  val ReferenceFile = "BENCH_LOCAL.json"
+
+  /** The committed record of the last full-suite run, refused or not. */
+  val VerdictFile = "BENCH_VERDICT.json"
+
   /** Pinned CPU-calibration microbenchmark: a fixed integer-hash loop whose
     * wall-time depends only on host throughput (no allocation, no I/O, no
     * Spark). Emitted into every artifact as `calibration_sec` so a reader
@@ -111,9 +126,107 @@ object Bench {
     common.isEmpty ||
       common.map(_._1).sum <= common.map(_._2).sum * RatchetFactor
 
+  /** One query's measurement: the minimum seconds over its attempts (-1
+    * when every attempt failed), the GC ms of that attempt, and how many
+    * reruns it took. */
+  final case class QueryRun(name: String, sec: Double, gcMs: Long, reruns: Int)
+
+  /** Everything a run measured: the input to [[decide]]. */
+  final case class Run(sf: String, cpus: Int, queries: Seq[QueryRun],
+      calibrationSec: Double, loadAvgStart: Double, loadAvgEnd: Double)
+
+  /** What [[decide]] concluded. `record` is the stdout line and carries
+    * `ratchet_refused`/`ratchet_reason`; `verdict` is the trailer, saved
+    * to `BENCH_VERDICT.json` when `writeVerdict`; `reference` is what
+    * `BENCH_LOCAL.json` becomes (None: it stays as it is); `mergeRefusal`
+    * is why a GRAFT_BENCH_MERGE run may not splice (the run exits 1). */
+  final case class Decision(record: BenchRecord, verdict: String,
+      writeVerdict: Boolean, reference: Option[BenchRecord],
+      mergeRefusal: Option[String])
+
+  /** The committed per-query reference a run at `sf` is judged against.
+    * Only meaningful at the SAME scale factor: an sf0.01 iteration run
+    * judged against committed sf0.1 times would never trip, and the
+    * converse would mark everything contaminated. */
+  def referenceTimes(committed: Option[BenchRecord], sf: String): Map[String, Double] =
+    committed.filter(_.sf.contains(sf)).fold(Map.empty[String, Double])(_.queries)
+
+  /** A measurement past the drift-normalized rerun threshold of a usable
+    * (positive) reference time. */
+  def overThreshold(sec: Double, ref: Option[Double], drift: Double): Boolean =
+    ref.exists(r => r > 0 && sec > rerunThreshold(r, drift))
+
+  /** The whole refusal policy, as a pure function of what was measured
+    * and what is committed. Reasons, first match wins:
+    *  - `merge_run` / `filtered_run`: a GRAFT_BENCH_MERGE or positional-args
+    *    run never becomes the full-suite record (merge mode splices via
+    *    [[mergeDecision]] instead);
+    *  - `sf_mismatch_vs_committed_reference`: the committed reference was
+    *    recorded at another scale factor, or carries no `sf` at all
+    *    (VERDICT r10 #1: an sf0.001 iteration run overwrote the sf0.1
+    *    reference, because cross-sf totals are not comparable and so the
+    *    ratchet waved it through). An absent file is a first recording;
+    *  - `contaminated_queries`: some query stayed past its rerun threshold;
+    *  - `aggregate_total_gt_1.15x_committed_reference`: ambient load that
+    *    slows every query ~1.5× trips NO per-query rerun, so a noisy run
+    *    would silently become the reference and raise the bar the next
+    *    noisy run is judged against (observed: 112s → 124s → 174s across
+    *    three same-code runs as machine load rose; VERDICT r6 #3, r7 #8).
+    * `force` (GRAFT_BENCH_FORCE) is the human-in-the-loop lever for a
+    * LEGITIMATE whole-suite or per-query change (new algorithm, regenerated
+    * testdata, a new sf): it lifts the sf, contamination and aggregate
+    * gates — without it a legitimately-slower query could never enter the
+    * reference (the r8 deadlock). Never set it on ambient suspicion. */
+  def decide(run: Run, committed: Option[BenchRecord], force: Boolean,
+      only: Set[String], mergeSet: Set[String], drift: Double): Decision = {
+    val ref = referenceTimes(committed, run.sf)
+    val ok = run.queries.filter(_.sec >= 0)
+    val failed = run.queries.filter(_.sec < 0).map(_.name)
+    val dirty = ok.filter(q => overThreshold(q.sec, ref.get(q.name), drift)).map(_.name)
+    val total = ok.map(_.sec).sum
+    val sfMismatch = committed.exists(!_.sf.contains(run.sf))
+    val ratchetOk = force ||
+      ratchetAllows(ok.flatMap(q => ref.get(q.name).filter(_ > 0).map(q.sec -> _)))
+    val reason =
+      if (mergeSet.nonEmpty) "merge_run"
+      else if (only.nonEmpty) "filtered_run"
+      else if (!force && sfMismatch) "sf_mismatch_vs_committed_reference"
+      else if (!force && dirty.nonEmpty) "contaminated_queries"
+      else if (!ratchetOk) s"aggregate_total_gt_${RatchetFactor}x_committed_reference"
+      else ""
+    val refused = reason.nonEmpty
+    def byName[V](f: QueryRun => V, qs: Seq[QueryRun] = run.queries) =
+      SortedMap.from(qs.map(q => q.name -> f(q)))
+    val record = BenchRecord("total", total, "sec", byName(_.sec), failed, dirty,
+      byName(_.gcMs), byName(_.reruns, run.queries.filter(_.reruns > 0)), None,
+      run.loadAvgStart, run.loadAvgEnd, run.calibrationSec, drift, refused, reason,
+      run.cpus, Some(run.sf))
+    val verdict = verdictJson(total, run.queries.size, failed, dirty,
+      run.queries.count(_.reruns > 0), ok.sortBy(-_.sec).take(10).map(q => q.name -> q.sec),
+      run.loadAvgStart, run.loadAvgEnd, run.calibrationSec, drift, run.sf, refused, reason)
+    val merge =
+      if (mergeSet.isEmpty) None
+      else Some(mergeDecision(mergeSet, run.queries.map(q => q.name -> q.sec),
+        committed.flatMap(_.sf).getOrElse(""), ref, run.sf, drift))
+    // calibration of a merged reference = the FASTEST host that contributed
+    // entries, so future drift normalization never under-scales a threshold
+    // recorded on a quicker machine
+    val calRef = committed.fold(0.0)(_.calibrationSec)
+    val mergedCal = if (calRef > 0) math.min(run.calibrationSec, calRef) else run.calibrationSec
+    val reference = merge match {
+      case Some(Right(m)) => Some(BenchRecord("total", m.values.sum, "sec",
+        SortedMap.from(m), Nil, Nil, SortedMap.empty, SortedMap.empty,
+        Some(mergeSet.toSeq.sorted), run.loadAvgStart, run.loadAvgEnd, mergedCal,
+        drift, ratchetRefused = false, "merge", run.cpus, Some(run.sf)))
+      case _ => if (refused) None else Some(record)
+    }
+    Decision(record, verdict, writeVerdict = only.isEmpty && mergeSet.isEmpty,
+      reference, merge.flatMap(_.left.toOption))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", DefaultSfDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     // optional positional args: run only the named queries (local iteration
     // aid — the driver passes none and gets the full suite)
     val only: Set[String] = args.toSet
@@ -128,14 +241,19 @@ object Bench {
         unknownMerge.toSeq.sorted.mkString(","))
       sys.exit(1)
     }
-    val spark = graft.core.GraftSession.builder(cpus.toInt, "graft-bench").getOrCreate()
+    val force = sys.env.contains("GRAFT_BENCH_FORCE")
+    // absent or unreadable reads as None: the first recording
+    val committed = Json.readFile[BenchRecord](ReferenceFile).toOption
+    val ref = referenceTimes(committed, sfDir)
+
+    val spark = graft.core.GraftSession.builder(cpus, "graft-bench").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // shuffle partitions sized to the INPUT, not the host (VERDICT r7 #3):
     // at the driver SFs this is the old per-core default; on a multi-GB
     // decade slice it reproduces the cluster-shape partition count without
     // the manual SPARK_GRAFT_SHUFFLE_PARTITIONS lever
-    val shuffleParts = graft.core.GraftSession.autoTuneShuffle(spark, sfDir, cpus.toInt)
-    if (shuffleParts != cpus.toInt)
+    val shuffleParts = graft.core.GraftSession.autoTuneShuffle(spark, sfDir, cpus)
+    if (shuffleParts != cpus)
       System.err.println(s"[bench] shuffle partitions auto-tuned to $shuffleParts for $sfDir")
 
     import scala.jdk.CollectionConverters._
@@ -143,15 +261,6 @@ object Bench {
     def gcTotalMs(): Long = gcBeans.map(_.getCollectionTime).sum
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     val loadStart = osBean.getSystemLoadAverage
-
-    // the committed per-query reference this run is judged against — only
-    // meaningful at the SAME scale factor (an sf0.01 iteration run judged
-    // against committed sf0.1 times would never trip; the converse would
-    // mark everything contaminated)
-    val prev: Map[String, Double] = {
-      val (refSf, times) = loadCommitted()
-      if (refSf == sfDir) times else Map.empty
-    }
 
     /** One timed execution → (seconds, gcMsDuringRun). */
     def runOnce(name: String, dir: String = sfDir): (Double, Long) = {
@@ -197,18 +306,16 @@ object Bench {
     // one scheduler preemption): normalizes per-query rerun thresholds
     // against the committed run's host speed and rides into the artifact
     val calNow = math.min(calibrate(), calibrate())
-    val calRef = loadCalibration()
+    val calRef = committed.fold(0.0)(_.calibrationSec)
     val drift = driftFactor(calNow, calRef)
     if (drift > 1.05)
       System.err.println(f"[bench] host ${drift}%.2fx slower than the committed " +
         f"reference's calibration ($calNow%.3fs vs $calRef%.3fs) — rerun " +
         "thresholds normalized; reference will not be overwritten on drift")
 
-    val failed = Seq.newBuilder[String]
-    val contaminated = Seq.newBuilder[String]
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => if (mergeSet.nonEmpty) mergeSet(n) else only.isEmpty || only(n))
-    val results = names.map { name =>
+    val measured = names.map { name =>
       var sec = -1.0
       var gc = 0L
       var runs = 0
@@ -226,164 +333,58 @@ object Bench {
       // merge mode re-records reference entries: always min-of-3 (the
       // r8 re-record contract) before the usual suspicion logic runs
       while (mergeSet.nonEmpty && sec >= 0 && runs < 3) attempt()
-      if (sec < 0) failed += name
-      else {
-        val ref = prev.get(name).filter(_ > 0)
-        // threshold vs max(drift-normalized reference, 1s noise floor):
-        // sub-second queries 3×-ing on scheduler jitter must not burn
-        // reruns or flag contamination (round-6 tx_mix_report false alarm)
-        def suspect = ref.map(r => sec > rerunThreshold(r, drift))
-          .getOrElse(runs < 2) // no reference → always min-of-2
-        // up to 3 retries: the round-5 burst pattern can span two
-        // consecutive attempts of a heavy query
-        while (suspect && runs < 4 && sec >= 0) attempt()
-        if (ref.exists(r => sec > rerunThreshold(r, drift))) {
-          contaminated += name
-          System.err.println(f"[bench] $name still $sec%.2fs after ${runs - 1} rerun(s) " +
-            f"vs committed ${ref.get}%.2fs — treat this artifact as contaminated")
-        }
-      }
-      (name, sec, gc, runs - 1)
+      // threshold vs max(drift-normalized reference, 1s noise floor):
+      // sub-second queries 3×-ing on scheduler jitter must not burn
+      // reruns or flag contamination (round-6 tx_mix_report false alarm).
+      // No reference → always min-of-2. Up to 3 retries: the round-5
+      // burst pattern can span two consecutive attempts of a heavy query.
+      val r = ref.get(name).filter(_ > 0)
+      while (sec >= 0 && runs < 4 && r.fold(runs < 2)(_ => overThreshold(sec, r, drift)))
+        attempt()
+      if (sec >= 0 && overThreshold(sec, r, drift))
+        System.err.println(f"[bench] $name still $sec%.2fs after ${runs - 1} rerun(s) " +
+          f"vs committed ${r.get}%.2fs — treat this artifact as contaminated")
+      QueryRun(name, sec, gc, runs - 1)
     }
-    val bad = failed.result()
-    val dirty = contaminated.result()
-    val total = results.collect { case (_, v, _, _) if v >= 0 => v }.sum
-    val loadEnd = osBean.getSystemLoadAverage
+    val run = Run(sfDir, cpus, measured, calNow, loadStart, osBean.getSystemLoadAverage)
+    val d = decide(run, committed, force, only, mergeSet, drift)
 
-    // AGGREGATE ratchet guard, decided BEFORE any output so the decision
-    // rides the artifact as a first-class field (VERDICT r7 #8 — the r7
-    // refusal left the round with "parsed": null and the verdict only in a
-    // log tail): ambient load that slows every query ~1.5× trips NO
-    // per-query rerun, so a noisy run would silently become the reference
-    // and raise the bar the NEXT noisy run is judged against (observed:
-    // 112s → 124s → 174s across three same-code runs as machine load
-    // rose). A run whose common-query total exceeds the committed total by
-    // >RatchetFactor does not overwrite — above run-to-run plan noise, far
-    // below regressions worth recording; a LEGITIMATE whole-suite slowdown
-    // (e.g. regenerated testdata) re-records by deleting the stale file or
-    // setting GRAFT_BENCH_FORCE=1.
-    // GRAFT_BENCH_FORCE is the human-in-the-loop lever for a LEGITIMATE
-    // whole-suite or per-query change (new algorithm, regenerated
-    // testdata): it overrides BOTH automated refusal gates — without it a
-    // legitimately-slower query could never enter the reference (every
-    // later run re-flags it "contaminated" forever, the r8 deadlock).
-    // Never set it on ambient suspicion; the gates exist for that.
-    val force = sys.env.contains("GRAFT_BENCH_FORCE")
-    val ratchetOk = {
-      val (refSf2, refT) = loadCommitted()
-      val common = results.collect {
-        case (n, v, _, _) if v >= 0 && refT.get(n).exists(_ > 0) => (v, refT(n))
-      }
-      force || refSf2 != sfDir || ratchetAllows(common)
-    }
-    val filtered = only.nonEmpty || mergeSet.nonEmpty
-    // sf guard on the FULL-RECORD path (VERDICT r10 #1: an sf0.001 local
-    // iteration run overwrote the committed sf0.1 reference — the ratchet
-    // auto-passed because cross-sf totals aren't comparable, which is
-    // exactly why the overwrite must be refused, not waved through; the
-    // merge path already refuses via merge_sf_mismatch). GRAFT_BENCH_FORCE
-    // stays the conscious lever for genuinely re-basing at a new sf.
-    val sfMismatch = {
-      val refSf = loadCommitted()._1
-      refSf.nonEmpty && refSf != sfDir
-    }
-    val refused = filtered || (!force && (dirty.nonEmpty || sfMismatch)) || !ratchetOk
-    val reason =
-      if (mergeSet.nonEmpty) "merge_run"
-      else if (only.nonEmpty) "filtered_run"
-      else if (!force && sfMismatch) "sf_mismatch_vs_committed_reference"
-      else if (!force && dirty.nonEmpty) "contaminated_queries"
-      else if (!ratchetOk) s"aggregate_total_gt_${RatchetFactor}x_committed_reference"
-      else ""
-    if (!force && sfMismatch)
-      System.err.println(s"[bench] run sf '$sfDir' differs from the committed " +
-        "reference's — BENCH_LOCAL.json NOT updated (GRAFT_BENCH_FORCE=1 re-bases)")
-    if (only.isEmpty && dirty.isEmpty && !ratchetOk)
-      System.err.println(s"[bench] aggregate total >${RatchetFactor}x the committed reference — " +
-        "ambient load suspected; BENCH_LOCAL.json NOT updated (GRAFT_BENCH_FORCE=1 overrides)")
-
-    def jmap[T](f: ((String, Double, Long, Int)) => T): String =
-      results.map(r => "\"" + r._1 + "\":" + f(r)).mkString("{", ",", "}")
-    val qs = jmap(_._2)
-    val gcs = jmap(_._3)
-    val reruns = results.filter(_._4 > 0)
-      .map(r => "\"" + r._1 + "\":" + r._4).mkString("{", ",", "}")
-    def jarr(xs: Seq[String]) = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-      s""""failed":${jarr(bad)},"contaminated":${jarr(dirty)},"gc_ms":$gcs,""" +
-      s""""reruns":$reruns,"load_avg_start":$loadStart,"load_avg_end":$loadEnd,""" +
-      s""""calibration_sec":$calNow,"drift_factor":$drift,""" +
-      s""""ratchet_refused":$refused,"ratchet_reason":"$reason",""" +
-      s""""cpus":${Runtime.getRuntime.availableProcessors},"sf":"$sfDir"}"""
-    println(json)
-    val top = results.filter(_._2 >= 0).sortBy(-_._2).take(10)
-      .map(r => "\"" + r._1 + "\":" + f"${r._2}%.2f").mkString("{", ",", "}")
-    val verdict = verdictJson(total, results.size, jarr(bad), jarr(dirty),
-      results.count(_._4 > 0), top, loadStart, loadEnd, calNow, drift, sfDir,
-      refused, reason)
+    if (d.writeVerdict && d.record.ratchetRefused)
+      System.err.println(s"[bench] $ReferenceFile NOT updated: ${d.record.ratchetReason} " +
+        "(GRAFT_BENCH_FORCE=1 overrides; never on ambient suspicion)")
+    println(Json.write(d.record))
+    def save(path: String, write: => Unit): Unit =
+      try write catch { case e: Throwable => System.err.println(s"[bench] $path write failed: $e") }
     // Every full-suite run — contaminated or refused INCLUDED — records its
     // verdict to the repo as a committed artifact, so wall-time and the
     // ratchet decision are never read from a log tail. This file is the
     // round's RECORD; BENCH_LOCAL.json stays the clean-runs-only rerun
-    // REFERENCE (the ratchet protects it, not this). Filtered/merge runs
-    // must not overwrite the full-suite round record.
-    if (only.isEmpty && mergeSet.isEmpty) {
-      try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_VERDICT.json"),
-        (verdict + "\n").getBytes("UTF-8"))
-      catch { case e: Throwable => System.err.println(s"[bench] BENCH_VERDICT.json write failed: $e") }
+    // REFERENCE (the ratchet protects it, not this). The reference file
+    // also persists the stdout line, which can exceed the driver's tail
+    // capture (r3 lost the head of the per-query map).
+    if (d.writeVerdict)
+      save(VerdictFile, java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(VerdictFile), d.verdict + "\n"))
+    d.reference.foreach { r =>
+      save(ReferenceFile, Json.writeFile(ReferenceFile, r))
+      r.merged.foreach(m => System.err.println(s"[bench] merged ${m.size} re-recorded " +
+        s"entr${if (m.size == 1) "y" else "ies"} into $ReferenceFile"))
     }
-    if (!refused) {
-      // The stdout line can exceed the driver's tail capture (r3 lost the
-      // head of the per-query map); persist the identical JSON so
-      // per-query numbers survive regardless of how stdout is captured.
-      try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LOCAL.json"),
-        (json + "\n").getBytes("UTF-8"))
-      catch { case e: Throwable => System.err.println(s"[bench] BENCH_LOCAL.json write failed: $e") }
-    }
-    // merge mode: splice ONLY the named re-records into the committed
-    // reference (every other entry byte-identical), or refuse with a
-    // machine-readable reason
-    if (mergeSet.nonEmpty) {
-      val pairs = results.map(r => (r._1, r._2))
-      mergeDecision(mergeSet, pairs, loadCommitted()._1, prev, sfDir, drift) match {
-        case Left(why) =>
-          System.err.println(s"[bench] GRAFT_BENCH_MERGE refused: $why " +
-            "(BENCH_LOCAL.json unchanged; GRAFT_BENCH_FORCE remains the " +
-            "break-glass lever for a change past the threshold)")
-          spark.stop()
-          sys.exit(1)
-        case Right(merged) =>
-          // calibration of the merged reference = the FASTEST host that
-          // contributed entries, so future drift normalization never
-          // under-scales a threshold recorded on a quicker machine
-          val mcal =
-            if (calRef > 0) math.min(calNow, calRef) else calNow
-          val mq = merged.toSeq.sortBy(_._1)
-            .map { case (n, v) => "\"" + n + "\":" + v }.mkString("{", ",", "}")
-          val mjson = s"""{"metric":"total","value":${merged.values.sum},""" +
-            s""""unit":"sec","queries":$mq,"failed":[],"contaminated":[],""" +
-            s""""merged":${jarr(mergeSet.toSeq.sorted)},""" +
-            s""""load_avg_start":$loadStart,"load_avg_end":$loadEnd,""" +
-            s""""calibration_sec":$mcal,"drift_factor":$drift,""" +
-            s""""ratchet_refused":false,"ratchet_reason":"merge",""" +
-            s""""cpus":${Runtime.getRuntime.availableProcessors},"sf":"$sfDir"}"""
-          try {
-            java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LOCAL.json"),
-              (mjson + "\n").getBytes("UTF-8"))
-            System.err.println(s"[bench] merged ${mergeSet.size} re-recorded " +
-              s"entr${if (mergeSet.size == 1) "y" else "ies"} into BENCH_LOCAL.json")
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] merge write failed: $e") }
-      }
+    d.mergeRefusal.foreach { why =>
+      System.err.println(s"[bench] GRAFT_BENCH_MERGE refused: $why " +
+        s"($ReferenceFile unchanged; GRAFT_BENCH_FORCE remains the " +
+        "break-glass lever for a change past the threshold)")
+      spark.stop()
+      sys.exit(1)
     }
     // The driver's round artifact keeps only the LAST ~2,000 chars of
     // stdout, so the trailer must be the FINAL app line (all stderr
     // messages above were printed before it): total + verdict fields +
     // slowest queries, self-sufficient no matter how long the full line
     // grows.
-    println(verdict)
+    println(d.verdict)
     spark.stop()
-    if (bad.nonEmpty) sys.exit(1)
+    if (run.queries.exists(_.sec < 0)) sys.exit(1)
   }
 
   /** GRAFT_BENCH_MERGE decision (VERDICT r8 #8): may this run's re-records
@@ -426,48 +427,26 @@ object Bench {
 
   /** The verdict trailer JSON — the round's first-class wall-time record
     * (VERDICT r7 #8). `ratchet_refused` true means this run did NOT become
-    * the committed rerun reference; `ratchet_reason` says why
-    * (filtered_run / contaminated_queries / aggregate drift). `failedArr`,
-    * `dirtyArr` and `slowest` arrive pre-rendered as JSON fragments. */
-  def verdictJson(total: Double, nQueries: Int, failedArr: String,
-      dirtyArr: String, rerunsN: Int, slowest: String, loadStart: Double,
-      loadEnd: Double, calNow: Double, drift: Double, sfDir: String,
-      refused: Boolean, reason: String): String =
-    s"""{"trailer":"verdict","value":$total,"unit":"sec",""" +
-      s""""n_queries":$nQueries,"failed":$failedArr,""" +
-      s""""contaminated":$dirtyArr,"reruns_n":$rerunsN,""" +
-      s""""slowest":$slowest,"load_avg_start":$loadStart,"load_avg_end":$loadEnd,""" +
-      s""""calibration_sec":$calNow,"drift_factor":$drift,""" +
-      s""""ratchet_refused":$refused,"ratchet_reason":"$reason",""" +
-      s""""sf":"$sfDir"}"""
+    * the committed rerun reference; `ratchet_reason` says why, one of the
+    * [[decide]] reasons: `merge_run`, `filtered_run`,
+    * `sf_mismatch_vs_committed_reference`, `contaminated_queries`,
+    * `aggregate_total_gt_1.15x_committed_reference`. `slowest` keeps its
+    * order and is rounded to 0.01 s. */
+  def verdictJson(total: Double, nQueries: Int, failed: Seq[String],
+      dirty: Seq[String], rerunsN: Int, slowest: Seq[(String, Double)],
+      loadStart: Double, loadEnd: Double, calNow: Double, drift: Double,
+      sfDir: String, refused: Boolean, reason: String): String =
+    Json.write(Verdict("verdict", total, "sec", nQueries, failed, dirty, rerunsN,
+      ListMap.from(slowest.map { case (n, s) => n -> Json.decimal(s, 2) }),
+      loadStart, loadEnd, calNow, drift, refused, reason, sfDir))
 
-  /** (sfDir, per-query seconds) from the committed `BENCH_LOCAL.json`
-    * (("", empty) if absent/unreadable). The file is machine-written
-    * single-line JSON; the queries object is extracted structurally, then
-    * pairs by regex — no JSON library needed for a map of number-valued
-    * string keys. */
-  def loadCommitted(path: String = "BENCH_LOCAL.json"): (String, Map[String, Double]) =
-    try {
-      val text = new String(
-        java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)), "UTF-8")
-      val sf = raw""""sf":"([^"]+)"""".r.findFirstMatchIn(text).map(_.group(1)).getOrElse("")
-      val start = text.indexOf("\"queries\":{")
-      if (start < 0) (sf, Map.empty)
-      else {
-        val body = text.substring(start + "\"queries\":{".length,
-          text.indexOf('}', start))
-        (sf, raw""""([A-Za-z0-9_]+)":(-?[0-9.eE+-]+)""".r.findAllMatchIn(body)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap)
-      }
-    } catch { case _: Throwable => ("", Map.empty) }
+  /** (sf, per-query seconds) of a committed reference (("", empty) if
+    * absent or unreadable). */
+  def loadCommitted(path: String = ReferenceFile): (String, Map[String, Double]) =
+    Json.readFile[BenchRecord](path).fold(_ => ("", Map.empty), r => (r.sf.getOrElse(""), r.queries))
 
-  /** The committed artifact's `calibration_sec` (0 if absent — pre-round-7
+  /** A committed reference's `calibration_sec` (0 if absent — pre-round-7
     * artifacts carry none, and [[driftFactor]] degrades to 1). */
-  def loadCalibration(path: String = "BENCH_LOCAL.json"): Double =
-    try {
-      val text = new String(
-        java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)), "UTF-8")
-      raw""""calibration_sec":(-?[0-9.eE+-]+)""".r.findFirstMatchIn(text)
-        .map(_.group(1).toDouble).getOrElse(0.0)
-    } catch { case _: Throwable => 0.0 }
+  def loadCalibration(path: String = ReferenceFile): Double =
+    Json.readFile[BenchRecord](path).fold(_ => 0.0, _.calibrationSec)
 }

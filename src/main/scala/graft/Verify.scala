@@ -1,23 +1,15 @@
 package graft
-import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
 
-  /** JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    * — a tab or CR in builder-authored SQL would otherwise make the
-    * driver's json.load fail and silently zero the round's correctness
-    * (exactly the r9 empty-artifact failure; red-teamed in
-    * CorrectnessGateSpec against the real oracle corpus). */
-  def jsonEscape(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+  /** A string as a JSON literal, through [[graft.core.Json]]: quote,
+    * backslash and ALL control chars (<0x20) escaped — a tab or CR in
+    * builder-authored SQL would otherwise make the driver's json.load fail
+    * and silently zero the round's correctness (exactly the r9
+    * empty-artifact failure; red-teamed in CorrectnessGateSpec against the
+    * real oracle corpus). */
+  def jsonEscape(s: String): String = graft.core.Json.write(s)
 
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir, only) = (args(0), args(1), args.drop(2).toSet)
@@ -42,11 +34,8 @@ object Verify {
       // contract, same reason)
       spark.catalog.clearCache()
     }
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.isEmpty || only(k) }
-      .map { case (k, v) => s"${jsonEscape(k)}: ${jsonEscape(v)}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    graft.core.Json.writeFile(s"$outDir/oracle_sql.json",
+      SparkEntry.oracleSql.filter { case (k, _) => only.isEmpty || only(k) })
     spark.stop()
   }
 }

@@ -13,46 +13,43 @@ package graft.core
   *   "schema_match":true,"values_match":true}, ...},"sf":".../sf0.01"}
   * }}}
   * Oracle-less queries carry `{"rows_gt_zero":true}` instead of the triple.
-  *
-  * Parsing is structural-regex like [[graft.Bench.loadCommitted]] — per-query
-  * objects are flat boolean maps, so `"name":{...}` extraction needs no JSON
-  * library and cannot mis-nest.
+  * The artifact is read through [[Json]] as a [[CorrectnessRecord]].
   */
 object CorrectnessGate {
 
   /** Validate artifact content against the full expected query set.
-    * Left(reason) when the artifact is empty, missing queries, carrying
-    * unknown queries, or any per-query boolean is false. */
-  def check(json: String, expected: Set[String]): Either[String, Unit] = {
+    * Left(reason) when the artifact is empty, malformed, missing queries,
+    * carrying unknown queries, or any per-query check is not `true`. */
+  def check(json: String, expected: Set[String]): Either[String, Unit] =
     if (json.trim.isEmpty || json.trim == "{}")
-      return Left("artifact is empty — the r9 failure mode; regenerate via " +
+      Left("artifact is empty — the r9 failure mode; regenerate via " +
         "graft.Verify + scripts/selfcheck.py")
-    val qIdx = json.indexOf("\"queries\"")
-    if (qIdx < 0) return Left("no queries object in artifact")
-    val entry = """"([A-Za-z0-9_]+)":\{([^{}]*)\}""".r
-    val entries = entry.findAllMatchIn(json.substring(qIdx))
-      .map(m => m.group(1) -> m.group(2)).toMap
-    if (entries.isEmpty) return Left("queries object is empty")
-    val missing = (expected -- entries.keySet).toSeq.sorted
-    if (missing.nonEmpty)
-      return Left(s"${missing.size} registered queries missing from artifact: " +
-        missing.take(5).mkString(", "))
-    val extra = (entries.keySet -- expected).toSeq.sorted
-    if (extra.nonEmpty)
-      return Left(s"artifact names unregistered queries (stale file?): " +
-        extra.take(5).mkString(", "))
-    val red = entries.collect {
-      case (k, body) if body.trim.isEmpty || body.contains("false") => k
-    }.toSeq.sorted
-    if (red.nonEmpty)
-      return Left(s"${red.size} red rows: " + red.take(5).mkString(", "))
-    Right(())
-  }
+    else
+      try Json.read[CorrectnessRecord](json).queries match {
+        case None => Left("no queries object in artifact")
+        case Some(entries) if entries.isEmpty => Left("queries object is empty")
+        case Some(entries) =>
+          val missing = (expected -- entries.keySet).toSeq.sorted
+          val extra = (entries.keySet -- expected).toSeq.sorted
+          val red = entries.collect {
+            case (k, checks) if checks.isEmpty || checks.values.exists(!_) => k
+          }.toSeq.sorted
+          if (missing.nonEmpty)
+            Left(s"${missing.size} registered queries missing from artifact: " +
+              missing.take(5).mkString(", "))
+          else if (extra.nonEmpty)
+            Left(s"artifact names unregistered queries (stale file?): " +
+              extra.take(5).mkString(", "))
+          else if (red.nonEmpty) Left(s"${red.size} red rows: " + red.take(5).mkString(", "))
+          else Right(())
+      } catch {
+        // a non-boolean check value surfaces here too, as a ClassCastException
+        case e: Exception => Left(s"malformed artifact: $e")
+      }
 
   /** [[check]] on a file path; a missing/unreadable file is a failure (the
     * artifact must exist in the tree every round). */
   def checkFile(path: String, expected: Set[String]): Either[String, Unit] =
-    try check(new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8"), expected)
+    try check(java.nio.file.Files.readString(java.nio.file.Paths.get(path)), expected)
     catch { case e: Exception => Left(s"cannot read $path: $e") }
 }

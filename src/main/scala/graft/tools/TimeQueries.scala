@@ -39,7 +39,8 @@ object TimeQueries {
       graft.SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
       val sec = (System.nanoTime() - t0) / 1e9
-      println(f"""{"query":"$name","sf":"$sfDir","sec":$sec%.2f}""")
+      println(graft.core.Json.write(scala.collection.immutable.ListMap(
+        "query" -> name, "sf" -> sfDir, "sec" -> graft.core.Json.decimal(sec, 2))))
       spark.catalog.clearCache()
     }
     spark.stop()

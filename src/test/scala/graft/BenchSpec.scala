@@ -1,6 +1,9 @@
 package graft
 
+import scala.collection.immutable.SortedMap
+
 import org.scalatest.funsuite.AnyFunSuite
+import graft.core.BenchRecord
 
 /** The contamination defenses only work if the committed-reference parse
   * works — a silent empty map would quietly disable the rerun policy. */
@@ -87,8 +90,8 @@ class BenchSpec extends AnyFunSuite {
   }
 
   test("verdictJson carries the ratchet decision as a first-class field (VERDICT r7 #8)") {
-    val v = Bench.verdictJson(208.35, 181, "[]", "[]", 3,
-      """{"sim_components_kmeans_scaled":7.96}""", 9.85, 5.14, 0.7238, 1.0,
+    val v = Bench.verdictJson(208.35, 181, Nil, Nil, 3,
+      Seq("sim_components_kmeans_scaled" -> 7.96), 9.85, 5.14, 0.7238, 1.0,
       "/root/testdata/sf0.1", refused = true,
       reason = "aggregate_total_gt_1.15x_committed_reference")
     // the exact failure mode this fixes: a judge reading wall-time from a
@@ -101,7 +104,7 @@ class BenchSpec extends AnyFunSuite {
     assert(v.contains(""""calibration_sec":0.7238"""))
     assert(v.contains(""""slowest":{"sim_components_kmeans_scaled":7.96}"""))
     // a clean run records the flag false, never omits it
-    val clean = Bench.verdictJson(168.2, 181, "[]", "[]", 0, "{}",
+    val clean = Bench.verdictJson(168.2, 181, Nil, Nil, 0, Nil,
       1.0, 1.0, 0.72, 1.0, "/root/testdata/sf0.1", refused = false, reason = "")
     assert(clean.contains(""""ratchet_refused":false"""))
   }
@@ -141,6 +144,65 @@ class BenchSpec extends AnyFunSuite {
       == Left("merge_sf_mismatch:/root/testdata/sf0.01"))
     assert(Bench.mergeDecision(Set("q"), Seq(("q", 0.9)), "", Map.empty, sf, 1.0)
       == Left("merge_no_committed_reference"))
+  }
+
+  // decide() is the whole refusal policy: table-driven, no SparkSession
+  private val sf01 = Bench.DefaultSfDir
+  private def committedRef(sf: Option[String]) = BenchRecord("total", 12.0, "sec",
+    SortedMap("q_heavy" -> 10.0, "q_light" -> 2.0), Nil, Nil, SortedMap.empty,
+    SortedMap.empty, None, 1.0, 1.0, 0.9, 1.0, ratchetRefused = false, "", 4, sf)
+  private def run(sf: String, times: (String, Double)*) = Bench.Run(sf, 4,
+    times.map { case (n, s) => Bench.QueryRun(n, s, 10L, 0) }, 0.9, 1.0, 1.0)
+  private val ref01 = Some(committedRef(Some(sf01)))
+
+  test("decide: each gate returns its reason and only a clean or forced full run writes the reference") {
+    val small = run("sf0.001", "q_heavy" -> 0.5, "q_light" -> 0.1)
+    val clean = run(sf01, "q_heavy" -> 10.5, "q_light" -> 2.0)
+    // (case, run, committed, force, only, merge, reason, writes BENCH_LOCAL.json)
+    val cases = Seq(
+      ("sf0.001 run vs committed sf0.1", small, ref01, false, Set.empty[String], Set.empty[String],
+        "sf_mismatch_vs_committed_reference", false),
+      ("the same run with FORCE re-bases", small, ref01, true, Set.empty[String], Set.empty[String],
+        "", true),
+      ("a reference without sf is a mismatch", clean, Some(committedRef(None)), false,
+        Set.empty[String], Set.empty[String], "sf_mismatch_vs_committed_reference", false),
+      ("an absent reference is a first recording", small, None, false, Set.empty[String],
+        Set.empty[String], "", true),
+      ("filtered run", clean, ref01, false, Set("q_heavy"), Set.empty[String], "filtered_run", false),
+      ("FORCE does not lift the filtered refusal", clean, ref01, true, Set("q_heavy"),
+        Set.empty[String], "filtered_run", false),
+      ("merge run", run(sf01, "q_heavy" -> 9.0), ref01, false, Set.empty[String], Set("q_heavy"),
+        "merge_run", true),
+      ("contaminated: 25s vs a 10s reference", run(sf01, "q_heavy" -> 25.0, "q_light" -> 2.0),
+        ref01, false, Set.empty[String], Set.empty[String], "contaminated_queries", false),
+      ("ratchet: 14.4s vs 12s common total", run(sf01, "q_heavy" -> 12.0, "q_light" -> 2.4),
+        ref01, false, Set.empty[String], Set.empty[String],
+        "aggregate_total_gt_1.15x_committed_reference", false),
+      ("clean run", clean, ref01, false, Set.empty[String], Set.empty[String], "", true))
+    for ((label, r, committed, force, only, merge, reason, writes) <- cases) {
+      val d = Bench.decide(r, committed, force, only, merge, drift = 1.0)
+      assert(d.record.ratchetReason == reason, label)
+      assert(d.record.ratchetRefused == reason.nonEmpty, label)
+      assert(d.reference.nonEmpty == writes, label)
+      assert(d.writeVerdict == (only.isEmpty && merge.isEmpty), label)
+      assert(d.verdict.contains(s""""ratchet_reason":"$reason""""), label)
+      // cpus is the configured core count, not the host's
+      assert(d.record.cpus == 4 && d.record.sf.contains(r.sf), label)
+      if (writes && merge.isEmpty) assert(d.reference.contains(d.record), label)
+    }
+  }
+
+  test("decide: a merge splices the named entries or returns the refusal") {
+    val d = Bench.decide(run(sf01, "q_heavy" -> 9.0), ref01, force = false, Set.empty,
+      Set("q_heavy"), drift = 1.0)
+    val m = d.reference.get
+    assert(m.queries == Map("q_heavy" -> 9.0, "q_light" -> 2.0))
+    assert(m.merged.contains(Seq("q_heavy")) && m.ratchetReason == "merge" && !m.ratchetRefused)
+    assert(m.calibrationSec == 0.9 && d.mergeRefusal.isEmpty)
+    val over = Bench.decide(run(sf01, "q_heavy" -> 25.0), ref01, force = false, Set.empty,
+      Set("q_heavy"), drift = 1.0)
+    assert(over.reference.isEmpty)
+    assert(over.mergeRefusal.contains("merge_exceeds_threshold:q_heavy"))
   }
 
   test("autoShufflePartitions: input-derived, clamped to [cores, 512] (VERDICT r7 #3)") {

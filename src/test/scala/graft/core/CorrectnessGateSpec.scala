@@ -60,6 +60,13 @@ class CorrectnessGateSpec extends AnyFunSuite {
       Set("a", "c")).isLeft)
   }
 
+  test("malformed artifacts are red with a reason, never a throw") {
+    Seq("""{"queries":{"a":{"rows_match":tr""", "[1]", "null", """{"queries":[1]}""",
+      """{"queries":{"a":1}}""", """{"queries":{"a":{"rows_match":"yes"}}}""",
+      """{"queries":{"a":{"rows_match":1}}}""", """{"queries":{"a":{"rows_match":null}}}"""
+    ).foreach(json => assert(CorrectnessGate.check(json, Set("a")).isLeft, json))
+  }
+
   test("jsonEscape survives control characters in builder-authored SQL (red-team)") {
     // plant the exact corruption class Verify.scala:30-33 anticipates: a
     // tab, CR, and a raw 0x01 inside an oracle string

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 import java.time.Instant
 
 import org.apache.spark.sql.streaming.Trigger
@@ -16,8 +16,10 @@ import graft.SparkSpec
   * 1 s tumbling windows → memory sink, update mode) runs at 25× the
   * reference rate and sustained throughput is computed from the engine's
   * own progress stream over ≥10 s of steady state, then written to
-  * `STREAM_RATE.json` so the number is a committed artifact, not an
-  * assertion in a log.
+  * `target/stream-rate/STREAM_RATE.json` so the number is a record, not an
+  * assertion in a log. The committed `STREAM_RATE_*.json` at the repo root
+  * are copies refreshed on purpose, so a test run leaves tracked files
+  * alone.
   *
   * Methodology: the first progress entry absorbs codegen/state-store
   * warmup and is excluded; sustained rate = Σ numInputRows of subsequent
@@ -74,15 +76,10 @@ class ThroughputSpec extends SparkSpec {
       assert(best.nonEmpty, "never reached 10s of steady-state progress")
       val (rate, span, totalRows) = best.get
       val perPartition = rate / numPartitions
-      val json =
-        s"""{"pipeline":"$pipeline",
-           |"partitions":$numPartitions,"offered_rows_per_sec":$offeredPerSec,
-           |"measured_rows_per_sec":${"%.1f".format(rate)},
-           |"measured_rows_per_sec_per_partition":${"%.1f".format(perPartition)},
-           |"target_rows_per_sec_per_partition":100,
-           |"steady_state_sec":${"%.1f".format(span)},"total_rows":$totalRows}"""
-          .stripMargin.replaceAll("\n", "")
-      Files.write(Paths.get(artifact), (json + "\n").getBytes("UTF-8"))
+      import graft.core.Json.decimal
+      graft.core.Json.writeFile(s"target/stream-rate/$artifact", graft.core.StreamRate(
+        pipeline, numPartitions, offeredPerSec, decimal(rate, 1), decimal(perPartition, 1),
+        100, decimal(span, 1), totalRows))
       info(s"sustained $rate rows/s over $span s ($perPartition rows/s/partition)")
       assert(perPartition >= 100.0,
         s"no trailing window sustained 100 rec/s/partition before the deadline " +
