@@ -502,48 +502,50 @@ object DedupQueries {
     componentsLoop(edges, tag)
   }
 
+  /** Truncate `df`'s lineage for an iterative loop: localCheckpoint it,
+    * then rebuild a fresh frame over the checkpointed rows. Returns the
+    * frame and the checkpoint block sets it pinned (the getPersistentRDDs
+    * delta — the internal RDD localCheckpoint persisted is not otherwise
+    * reachable from the API).
+    *
+    * The rebuild matters: localCheckpoint truncates LINEAGE but carries the
+    * child plan's ESTIMATED statistics forward (LogicalRDD.originStats). In
+    * [[componentsLoop]] each round's plan references `labels` four times
+    * (nmin, withNmin, jump×2), so the carried sizeInBytes PRODUCT grows
+    * ~4^k in DIGIT COUNT; past ~14 rounds the optimizer's
+    * canBroadcastBySize sits in BigInteger.multiply on numbers with 1e8+
+    * digits and the driver wedges single-threaded for minutes (observed on
+    * the mutual-kNN graph at sf0.1). Rebuilding drops originStats back to
+    * defaultSizeInBytes; the only cost is a row re-encode. The same cut
+    * bounds the plan walks of [[SimilarityQueries.kmeansScaledLayer]].
+    *
+    * The pinned block sets are the caller's to free: catalog.clearCache()
+    * cannot release them (ADVICE r9), so a 20-round loop would otherwise
+    * hold 20 dead label generations for the rest of the session (the r10
+    * components warm-run band, 76–184 s at the sixth decade, tracked
+    * this). A localCheckpoint RDD is non-recomputable, so free a set only
+    * once nothing reads its frame. */
+  private[llm] def truncated(df: DataFrame): (DataFrame, Seq[org.apache.spark.rdd.RDD[_]]) = {
+    val sc = df.sparkSession.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val ck = df.localCheckpoint()
+    val delta = sc.getPersistentRDDs.view.filterKeys(!before(_)).values.toSeq
+    // Bound the checkpointed RDD's partition count by CLUSTER WIDTH
+    // (defaultParallelism scales with executors×cores), not by the
+    // static shuffle.partitions: AQE coalesces SQL exchanges but not an
+    // RDD materialization, so under a cluster-shaped config (the
+    // 256-partition dry run, SCALING.md) every loop round otherwise
+    // schedules shuffle.partitions near-empty tasks × rounds — measured
+    // 2-3× wall on the whole components family at sf0.1/256. The
+    // coalesce is a no-op when partitions already fit the width.
+    val width = 2 * ck.sparkSession.sparkContext.defaultParallelism
+    val rdd = if (ck.rdd.getNumPartitions > width) ck.rdd.coalesce(width) else ck.rdd
+    (ck.sparkSession.createDataFrame(rdd, ck.schema), delta)
+  }
+
   /** The distributed pointer-jump label loop — the >[[localEdgeLimitDefault]]
     * path of [[componentsOf]], unchanged machinery. */
   private[llm] def componentsLoop(edges: DataFrame, tag: String): DataFrame = {
-    // localCheckpoint truncates LINEAGE but carries the child plan's
-    // ESTIMATED statistics forward (LogicalRDD.originStats — so broadcast
-    // decisions survive a checkpoint). In this loop each round's plan
-    // references `labels` four times (nmin, withNmin, jump×2), so the
-    // carried sizeInBytes PRODUCT grows ~4^k in DIGIT COUNT; past ~14
-    // rounds the optimizer's canBroadcastBySize sits in
-    // BigInteger.multiply on numbers with 1e8+ digits and the driver
-    // wedges single-threaded for minutes (observed on the mutual-kNN
-    // graph at sf0.1, which needs more pointer-jump rounds than the
-    // near-dup clusters). Rebuilding the frame from the checkpointed RDD
-    // drops originStats back to defaultSizeInBytes — stats stay O(1) per
-    // round; the only cost is a row re-encode over the (node, lbl) pairs.
-    // Each truncation pins a localCheckpoint BLOCK SET that
-    // catalog.clearCache() cannot release (the ScaledFit.release rule,
-    // generalized — ADVICE r9): without per-round release a 20-round loop
-    // holds 20 dead label generations for the rest of the session, and a
-    // bench/notebook session running many component queries accumulates
-    // them until eviction pressure (the r10 components warm-run band,
-    // 76–184 s at the sixth decade, tracked this). Track each call's
-    // block-set delta; the loop frees generation n−1 as soon as n is
-    // materialized, and only the FINAL generation (backing the returned
-    // frame — non-recomputable by design) stays pinned.
-    def truncated(df: DataFrame): (DataFrame, Seq[org.apache.spark.rdd.RDD[_]]) = {
-      val sc = df.sparkSession.sparkContext
-      val before = sc.getPersistentRDDs.keySet
-      val ck = df.localCheckpoint()
-      val delta = sc.getPersistentRDDs.view.filterKeys(!before(_)).values.toSeq
-      // Bound the checkpointed RDD's partition count by CLUSTER WIDTH
-      // (defaultParallelism scales with executors×cores), not by the
-      // static shuffle.partitions: AQE coalesces SQL exchanges but not an
-      // RDD materialization, so under a cluster-shaped config (the
-      // 256-partition dry run, SCALING.md) every loop round otherwise
-      // schedules shuffle.partitions near-empty tasks × rounds — measured
-      // 2-3× wall on the whole components family at sf0.1/256. The
-      // coalesce is a no-op when partitions already fit the width.
-      val width = 2 * ck.sparkSession.sparkContext.defaultParallelism
-      val rdd = if (ck.rdd.getNumPartitions > width) ck.rdd.coalesce(width) else ck.rdd
-      (ck.sparkSession.createDataFrame(rdd, ck.schema), delta)
-    }
     // sym is scanned by EVERY round's nmin join — truncate its lineage
     // BEFORE the loop, not just cache it: an InMemoryRelation keeps its
     // child SparkPlan for eviction recompute, and every stage scanning the

@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.functions._
 import graft.batch.Q
-import graft.core.Tables
+import graft.core.{StagedTable, Tables}
 import LlmHash._
 
 /** Multimodal-column plumbing for LLM pipelines — north-star work.
@@ -908,23 +908,11 @@ object MultimodalQueries {
     * half-alignable-frames video rule), so a changed corpus or constant
     * recomputes and a matching one adopts across sessions. */
   private[llm] def stageMmPairs(s: org.apache.spark.sql.SparkSession,
-      d: String): String = {
-    graft.functions.GraftFunctions.register(s)
-    def fp = {
-      val r = Tables.documents(s, d).agg(
-        count(lit(1)).as("n"),
-        expr("coalesce(bit_xor(md5_long60(concat(cast(doc_id as string), '|', text))), 0L)").as("x"))
-        .head
-      s"mm-pairs-v1;ham=6;cap=64;bands=4x16;vhalf=1;docs=${r.getLong(0)};xor=${r.getLong(1)}"
+      d: String): String =
+    StagedTable.getOrStage(s, d, StagedTable.Stage("mm_pairs", StagedTable.Docs,
+        "mm-pairs-v1;ham=6;cap=64;bands=4x16;vhalf=1")) { write =>
+      write(mmEdgesDF(s, d))
     }
-    graft.core.StagedTable.getOrStage(s,
-      "graft_mm_pairs_" + math.abs(d.hashCode).toString, fp) { (table, loc) =>
-      s.sql(s"CREATE TABLE $table (d1 BIGINT, d2 BIGINT) USING parquet LOCATION '$loc'")
-    } { (table, loc) =>
-      mmEdgesDF(s, d)
-        .write.mode("overwrite").option("path", loc.toString).saveAsTable(table)
-    }
-  }
 
   /** Oracle CTE chain ending in `afp(doc_id, n_windows, fp_hi, fp_lo)` —
     * the generation-formula recomputation of the windowed-energy audio

@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.batch.Q
-import graft.core.Tables
+import graft.core.{StagedTable, Tables}
 
 /** The end-to-end corpus-prep pipeline — the north-star composition: the
   * individual operators (quality gate, exact dedup, near-dup clustering,
@@ -34,59 +34,21 @@ import graft.core.Tables
   */
 object PipelineQueries {
 
-  /** sfDir → staged cluster table, scoped to this JVM — the first consumer
-    * in a process validates (or stages) once; later consumers skip even
-    * the validation scan. */
-  /** Test hook: number of actual staging builds this JVM ran (shared
-    * counter with every StagedTable kind — the reuse specs assert
-    * RELATIVE increments). */
-  private[llm] def stagingsComputed: Int = graft.core.StagedTable.stagingsComputed
-
-  /** Test hook: forget the per-JVM stage cache, simulating a fresh process
-    * (the disk state — table files, fingerprint sidecar, catalog entries —
-    * is deliberately left as-is). */
-  private[llm] def resetStageCache(): Unit = graft.core.StagedTable.resetCache()
-
-  /** Fingerprint of everything the staged cluster table is a function of:
-    * the clustering constants ([[DedupQueries.algoFingerprint]]) and the
-    * corpus content (row count + order-free XOR of a per-doc content
-    * hash). Validation is ONE projection-pruned scan of (doc_id, text) —
-    * at 100 TB that is orders cheaper than the multi-pass clustering it
-    * lets a new session skip. */
-  private[llm] def stageFingerprint(s: SparkSession, d: String): String = {
-    graft.functions.GraftFunctions.register(s)
-    val r = Tables.documents(s, d).agg(
-      count(lit(1)).as("n"),
-      expr("coalesce(bit_xor(md5_long60(concat(cast(doc_id as string), '|', text))), 0L)").as("x"))
-      .head
-    s"${DedupQueries.algoFingerprint};docs=${r.getLong(0)};xor=${r.getLong(1)}"
-  }
-
   /** Compute verified near-dup clusters once and persist them bucketed by
     * doc_id (16 buckets), pre-sorted — downstream joins on doc_id read the
     * bucket files without re-exchanging the (small) cluster side, and a
     * cluster deployment gets the same via a bucketed warehouse table.
     *
-    * Cross-SESSION reuse: the stage directory carries a `_graft_fingerprint`
-    * sidecar (algorithm constants + corpus content hash). A fresh process
-    * whose fingerprint matches re-registers the existing bucketed files as
-    * an external table and skips the clustering pass entirely — the
-    * "N consumers × 1 pass" claim across driver restarts, not just within
-    * one. Any mismatch (changed constants, changed corpus) recomputes. */
-  private def stageClusters(s: SparkSession, d: String): String =
-    graft.core.StagedTable.getOrStage(s,
-      "graft_clusters_" + math.abs(d.hashCode).toString, stageFingerprint(s, d)) {
-      // adopt: restate the bucket spec so joins still skip the exchange
-      (table, loc) =>
-        s.sql(s"""CREATE TABLE $table (doc_id BIGINT, cluster_id BIGINT) USING parquet
-                 |CLUSTERED BY (doc_id) SORTED BY (doc_id) INTO 16 BUCKETS
-                 |LOCATION '$loc'""".stripMargin)
-    } { (table, loc) =>
-      DedupQueries.clustersDF(s, d)
-        .write.mode("overwrite")
-        .option("path", loc.toString)
-        .bucketBy(16, "doc_id").sortBy("doc_id")
-        .saveAsTable(table)
+    * Cross-SESSION reuse ([[graft.core.StagedTable]]): the stage directory
+    * carries a `_graft_fingerprint` sidecar (clustering constants + corpus
+    * content hash). A fresh process whose fingerprint matches re-registers
+    * the existing bucketed files and skips the clustering pass entirely —
+    * the "N consumers × 1 pass" claim across driver restarts, not just
+    * within one. Any mismatch (changed constants, changed corpus) recomputes. */
+  private[llm] def stageClusters(s: SparkSession, d: String): String =
+    StagedTable.getOrStage(s, d, StagedTable.Stage("clusters", StagedTable.Docs,
+        DedupQueries.algoFingerprint, bucketBy = Some(16 -> "doc_id"))) { write =>
+      write(DedupQueries.clustersDF(s, d))
     }
 
   private val prepOracle =

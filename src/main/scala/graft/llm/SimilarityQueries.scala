@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.batch.Q
-import graft.core.Tables
+import graft.core.{StagedTable, Tables}
 import LlmHash._
 
 /** Similarity search over the `embeddings.parquet` vector column
@@ -92,13 +92,19 @@ object SimilarityQueries {
     * oracle CTE chain). */
   private val prIters = 5
 
+  /** DuckDB squared L2 distance between the first `n` elements of the
+    * integer lists `a` and `b` — the oracle twin of `vector_l2q`. `brk`
+    * is the text between the series and its lambda. */
+  private def duckL2q(a: String, b: String, n: Int, brk: String = " "): String =
+    s"CAST(list_sum(list_transform(generate_series(1, $n),${brk}i -> " +
+      s"($a[CAST(i AS INT)] - $b[CAST(i AS INT)]) * ($a[CAST(i AS INT)] - $b[CAST(i AS INT)]))) AS BIGINT)"
+
   /** Shared CTE chain ending in `knn(vec_id, neighbor_id, rank, dist)` —
     * the per-cell top-[[knnK]] neighbor graph over [[pqScale]]-quantized
     * vectors; consumed by sim_knn_graph (verbatim dump) and sim_pagerank
     * (edge input). Also exposes `xq` (the quantized vector table). */
   private lazy val knnCtes: String = {
-    val dN =
-      s"CAST(list_sum(list_transform(generate_series(1, ${LlmHash.dims}), i -> (a.xq[CAST(i AS INT)] - b.xq[CAST(i AS INT)]) * (a.xq[CAST(i AS INT)] - b.xq[CAST(i AS INT)]))) AS BIGINT)"
+    val dN = duckL2q("a.xq", "b.xq", LlmHash.dims)
     s"""xq AS (
        |  SELECT vec_id, label,
        |    list_transform(embedding, v -> CAST(round(CAST(v AS DOUBLE) * $pqScale, 0) AS BIGINT)) AS xq
@@ -128,13 +134,11 @@ object SimilarityQueries {
     * the k ∝ N re-fit), ending in `a2(vec_id, cid, dist)`; also exposes
     * `xq` (the kmScale-quantized vectors). */
   private def kmeansCtesK(kExpr: String): String = {
-    val dims = LlmHash.dims
     def assignCte(name: String, cents: String) =
       s"""$name AS (
          |  SELECT vec_id, cid, dist FROM (
          |    SELECT x.vec_id, c.cid,
-         |      CAST(list_sum(list_transform(generate_series(1, $dims),
-         |        i -> (x.xq[CAST(i AS INT)] - c.carr[CAST(i AS INT)]) * (x.xq[CAST(i AS INT)] - c.carr[CAST(i AS INT)]))) AS BIGINT) AS dist
+         |      ${duckL2q("x.xq", "c.carr", dims, brk = "\n        ")} AS dist
          |    FROM xq x, $cents c
          |  ) QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) = 1
          |)""".stripMargin
@@ -244,9 +248,7 @@ object SimilarityQueries {
     * assignment is an APPROXIMATION of the flat argmin (the IVF trade —
     * recall is audited by sim_knn_recall_multiprobe_scaled, not argued). */
   private lazy val kmeansThreeLevelCtes: String = {
-    val dims = LlmHash.dims
-    def l2(a: String, b: String) =
-      s"CAST(list_sum(list_transform(generate_series(1, $dims), i -> ($a[CAST(i AS INT)] - $b[CAST(i AS INT)]) * ($a[CAST(i AS INT)] - $b[CAST(i AS INT)]))) AS BIGINT)"
+    def l2(a: String, b: String) = duckL2q(a, b, dims)
     def assignCtes(r: String, cents: String, asg: String) =
       s"""pf$r AS (
          |  SELECT cid, gid FROM (
@@ -376,14 +378,15 @@ object SimilarityQueries {
       a2: DataFrame, k: Long, caches: Seq[DataFrame],
       ckRdds: Seq[org.apache.spark.rdd.RDD[_]] = Nil) {
     /** Release EVERYTHING the fit pinned in the block manager: the persisted
-      * frames AND the localCheckpoint block sets behind the cut() truncation
-      * points — catalog.clearCache() drops only the former, so a loop of
-      * fits (RecallProbe's grid) would otherwise accumulate checkpoint
-      * blocks until GC (ADVICE r9). Callers must not touch the fit's frames
-      * after release: a localCheckpoint RDD is non-recomputable by design
-      * (lineage truncated), so its unpersist is destructive — which is also
-      * the honest caveat on executor loss (a lost block means refit, the
-      * price of keeping plan walks O(1); the staged faces make refit rare). */
+      * frames AND the localCheckpoint block sets behind its two
+      * [[DedupQueries.truncated]] points — catalog.clearCache() drops only
+      * the former, so a loop of fits (RecallProbe's grid) would otherwise
+      * accumulate checkpoint blocks until GC (ADVICE r9). Callers must not
+      * touch the fit's frames after release: a localCheckpoint RDD is
+      * non-recomputable by design (lineage truncated), so its unpersist is
+      * destructive — which is also the honest caveat on executor loss (a
+      * lost block means refit, the price of keeping plan walks O(1); the
+      * staged faces make refit rare). */
     def release(): Unit = {
       caches.foreach(_.unpersist(blocking = false))
       ckRdds.foreach(_.unpersist(blocking = false))
@@ -454,8 +457,8 @@ object SimilarityQueries {
     // (vec_id, cid, dist) frames so each routed assign runs once; each
     // cents table feeds two parent maps, a routing pass, and the
     // within-cell argmin — persist the ~k-row tables too.
-    // TRUNCATE the round boundaries (localCheckpoint + LogicalRDD rebuild,
-    // the componentsOf pattern): a persisted frame's InMemoryRelation
+    // TRUNCATE the round boundaries (DedupQueries.truncated, the
+    // componentsOf pattern): a persisted frame's InMemoryRelation
     // keeps its child SparkPlan, and every plan-tree WALK
     // (SparkPlanInfo/treeString per executed query) expands those cached
     // subtrees as a TREE — with the split repair, c1 references a1 four
@@ -466,30 +469,18 @@ object SimilarityQueries {
     // chain. Cutting a1 and c1 to LogicalRDD leaves bounds every
     // downstream plan at depth ~2; the data was being materialized here
     // anyway (both were persisted), so the only cost is a row re-encode
-    // on k-row / thin-N-row frames.
-    // the checkpoint block sets are tracked so fit.release() can free them
-    // (ADVICE r9: clearCache() does not reach checkpoint blocks); captured
-    // as the getPersistentRDDs delta — the internal InternalRow RDD that
-    // localCheckpoint persisted is not otherwise reachable from the API
-    val ckRdds = scala.collection.mutable.ArrayBuffer[org.apache.spark.rdd.RDD[_]]()
-    def cut(df: DataFrame): DataFrame = {
-      val sc = df.sparkSession.sparkContext
-      val before = sc.getPersistentRDDs.keySet
-      val ck = df.localCheckpoint()
-      ckRdds ++= sc.getPersistentRDDs.view.filterKeys(!before(_)).values
-      val width = 2 * ck.sparkSession.sparkContext.defaultParallelism
-      val rdd = if (ck.rdd.getNumPartitions > width) ck.rdd.coalesce(width) else ck.rdd
-      ck.sparkSession.createDataFrame(rdd, ck.schema)
-    }
-    val a1 = cut(assignScaled(xq, pf0, pg0, sseeds))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val c1 = cut(lloydUpdate(a1, xq).unionByName(splitSeeds(a1, k)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // on k-row / thin-N-row frames. The checkpoint block sets go to the
+    // fit so release() can free them (ADVICE r9).
+    val (a1Cut, a1Ck) = DedupQueries.truncated(assignScaled(xq, pf0, pg0, sseeds))
+    val a1 = a1Cut.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (c1Cut, c1Ck) = DedupQueries.truncated(
+      lloydUpdate(a1, xq).unionByName(splitSeeds(a1, k)))
+    val c1 = c1Cut.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val pf1 = fineParents(c1, gseeds)
     val pg1 = superParents(pf1, gseeds, sseeds)
     ScaledFit(xq, sseeds, gseeds, c1, pf1, pg1,
       assignScaled(xq, pf1, pg1, sseeds), k,
-      Seq(xq, a1, c1, pf0, pg0, pf1, pg1), ckRdds.toSeq)
+      Seq(xq, a1, c1, pf0, pg0, pf1, pg1), a1Ck ++ c1Ck)
   }
 
   /** Fine→coarse parent map: every fine centroid's nearest coarse seed,
@@ -662,11 +653,8 @@ object SimilarityQueries {
   /** Oracle CTEs extending [[kmeansCtes]] with the multi-probe graph:
     * `mpknn(vec_id, neighbor_id, rank, dist)`. */
   private lazy val multiprobeCtes: String = {
-    val dims = LlmHash.dims
-    val dC =
-      s"CAST(list_sum(list_transform(generate_series(1, $dims), i -> (x.xq[CAST(i AS INT)] - c.carr[CAST(i AS INT)]) * (x.xq[CAST(i AS INT)] - c.carr[CAST(i AS INT)]))) AS BIGINT)"
-    val dN =
-      s"CAST(list_sum(list_transform(generate_series(1, $dims), i -> (m.xq[CAST(i AS INT)] - b.xq[CAST(i AS INT)]) * (m.xq[CAST(i AS INT)] - b.xq[CAST(i AS INT)]))) AS BIGINT)"
+    val dC = duckL2q("x.xq", "c.carr", dims)
+    val dN = duckL2q("m.xq", "b.xq", dims)
     s"""$kmeansCtes,
        |mp AS (
        |  SELECT vec_id, cid AS pcid, xq FROM (
@@ -802,9 +790,7 @@ object SimilarityQueries {
     * multi-probe graph: `mpknn(vec_id, neighbor_id, rank, dist)`. Probe
     * selection rides the super layer exactly as the Spark chain does. */
   private lazy val multiprobeScaledCtes: String = {
-    val dims = LlmHash.dims
-    def l2(a: String, b: String) =
-      s"CAST(list_sum(list_transform(generate_series(1, $dims), i -> ($a[CAST(i AS INT)] - $b[CAST(i AS INT)]) * ($a[CAST(i AS INT)] - $b[CAST(i AS INT)]))) AS BIGINT)"
+    def l2(a: String, b: String) = duckL2q(a, b, dims)
     s"""$kmeansThreeLevelCtes,
        |msup AS (
        |  SELECT vec_id, sid FROM (
@@ -850,8 +836,7 @@ object SimilarityQueries {
     * [[outScale]] grid); consumed by sim_outlier (z-test gate) and
     * sim_coverage (cluster-quality report). Also exposes `xq`/`cent`. */
   private lazy val cellDistCtes: String = {
-    val dN =
-      s"CAST(list_sum(list_transform(generate_series(1, ${LlmHash.dims}), i -> (x.xq[CAST(i AS INT)] - c.carr[CAST(i AS INT)]) * (x.xq[CAST(i AS INT)] - c.carr[CAST(i AS INT)]))) AS BIGINT)"
+    val dN = duckL2q("x.xq", "c.carr", LlmHash.dims)
     s"""xq AS (
        |  SELECT vec_id, label,
        |    list_transform(embedding, v -> CAST(round(CAST(v AS DOUBLE) * $outScale, 0) AS BIGINT)) AS xq
@@ -986,9 +971,7 @@ object SimilarityQueries {
     kmComponentsOracleOver(kmeansThreeLevelCtes)
 
   private def kmComponentsOracleOver(lloydCtes: String): String = {
-    val dims = LlmHash.dims
-    val dN =
-      s"CAST(list_sum(list_transform(generate_series(1, $dims), i -> (a.xq[CAST(i AS INT)] - b.xq[CAST(i AS INT)]) * (a.xq[CAST(i AS INT)] - b.xq[CAST(i AS INT)]))) AS BIGINT)"
+    val dN = duckL2q("a.xq", "b.xq", dims)
     s"""WITH RECURSIVE $lloydCtes,
        |cv AS (SELECT a.vec_id, a.cid, x.xq FROM a2 a JOIN xq x USING (vec_id)),
        |kpairs AS (
@@ -1047,51 +1030,27 @@ object SimilarityQueries {
     * fingerprint-validated cross-session staging (the stageIvfCentroids
     * pattern): reuse on matching corpus content + algorithm constants,
     * recompute on any mismatch. */
-  private[llm] def stageKmeansAssign(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    graft.functions.GraftFunctions.register(s)
-    def fp = {
-      val r = Tables.embeddings(s, d).agg(
-        count(lit(1)).as("n"),
-        expr("coalesce(bit_xor(md5_long60(concat(cast(vec_id as string), '|', " +
-          "cast(label as string), '|', cast(embedding as string)))), 0L)").as("x"))
-        .head
-      s"km-asg-v1;dims=${LlmHash.dims};k=$kmK;scale=$kmScale;vecs=${r.getLong(0)};xor=${r.getLong(1)}"
-    }
-    graft.core.StagedTable.getOrStage(s,
-      "graft_km_asg_" + math.abs(d.hashCode).toString, fp) { (table, loc) =>
-      s.sql(s"CREATE TABLE $table (vec_id BIGINT, cid BIGINT) USING parquet LOCATION '$loc'")
-    } { (table, loc) =>
+  private[llm] def stageKmeansAssign(s: org.apache.spark.sql.SparkSession, d: String): String =
+    StagedTable.getOrStage(s, d, StagedTable.Stage("km_asg", StagedTable.Vecs,
+        s"km-asg-v1;dims=${LlmHash.dims};k=$kmK;scale=$kmScale")) { write =>
       val (_, a2) = kmeansLayer(s, d)
-      a2.select(col("vec_id"), col("cid").cast("long").as("cid"))
-        .write.mode("overwrite").option("path", loc.toString).saveAsTable(table)
+      write(a2.select(col("vec_id"), col("cid").cast("long").as("cid")))
     }
-  }
 
   /** [[stageKmeansAssign]] for the k ∝ N THREE-LEVEL fit: the scaled
     * assignment table (vec_id, cid) staged behind the same
     * fingerprint-validated cross-session machinery. The fingerprint pins
     * the algorithm version AND the re-fit law (cellTarget) — a corpus that
     * grew re-fingerprints (different N → different xor AND different k), so
-    * a stale assignment can never serve a changed corpus. */
+    * a stale assignment can never serve a changed corpus.
+    * km3l-asg-v3 = three-level + the CAPPED hot-cell split repair (VERDICT
+    * r8 #2 + the r9 SplitCap guardrail): a checkout upgrading from the
+    * uncapped v2 fit re-fingerprints and rebuilds. */
   private[llm] def stageKmeansScaledAssign(s: org.apache.spark.sql.SparkSession,
-      d: String): String = {
-    graft.functions.GraftFunctions.register(s)
-    def fp = {
-      val r = Tables.embeddings(s, d).agg(
-        count(lit(1)).as("n"),
-        expr("coalesce(bit_xor(md5_long60(concat(cast(vec_id as string), '|', " +
-          "cast(label as string), '|', cast(embedding as string)))), 0L)").as("x"))
-        .head
-      // km3l-asg-v3 = three-level + the CAPPED hot-cell split repair
-      // (VERDICT r8 #2 + the r9 SplitCap guardrail): a checkout upgrading
-      // from the uncapped v2 fit re-fingerprints and rebuilds
-      s"km3l-asg-v3;sp=$assignSProbe;gp=$assignGProbe;cap=$splitCap;dims=${LlmHash.dims};cellTarget=$cellTarget;scale=$kmScale;" +
-        s"vecs=${r.getLong(0)};xor=${r.getLong(1)}"
-    }
-    graft.core.StagedTable.getOrStage(s,
-      "graft_km2l_asg_" + math.abs(d.hashCode).toString, fp) { (table, loc) =>
-      s.sql(s"CREATE TABLE $table (vec_id BIGINT, cid BIGINT) USING parquet LOCATION '$loc'")
-    } { (table, loc) =>
+      d: String): String =
+    StagedTable.getOrStage(s, d, StagedTable.Stage("km2l_asg", StagedTable.Vecs,
+        s"km3l-asg-v3;sp=$assignSProbe;gp=$assignGProbe;cap=$splitCap;dims=${LlmHash.dims};" +
+          s"cellTarget=$cellTarget;scale=$kmScale")) { write =>
       // Cross-artifact adoption (SCALING r10): a VALID scaled PQ index
       // already carries this fit's assignment as its kind='member' rows —
       // the fit is deterministic and the pqs fingerprint pins a strict
@@ -1099,23 +1058,16 @@ object SimilarityQueries {
       // so a host that built the serve index never pays the fit twice
       // (48 min at 20M vectors). The sidecar check is byte-exact; any
       // mismatch falls through to the real fit.
-      val pqFpFile = pqsStageDir(s, d).resolve("_graft_fingerprint")
-      val adoptable = java.nio.file.Files.exists(pqFpFile) &&
-        new String(java.nio.file.Files.readAllBytes(pqFpFile), "UTF-8") ==
-          pqsScaledFp(s, d)
-      if (adoptable) {
-        s.read.parquet(pqsStageDir(s, d).toString)
-          .filter(col("kind") === "member")
-          .select(col("vec_id"), col("cid").cast("long").as("cid"))
-          .write.mode("overwrite").option("path", loc.toString).saveAsTable(table)
-      } else {
-        val fit = kmeansScaledLayer(s, d)
-        fit.a2.select(col("vec_id"), col("cid").cast("long").as("cid"))
-          .write.mode("overwrite").option("path", loc.toString).saveAsTable(table)
-        fit.release() // staging materialized — frames AND checkpoint blocks (ADVICE r7/r9)
+      StagedTable.valid(s, d, pqsStage) match {
+        case Some(idx) =>
+          write(idx.filter(col("kind") === "member")
+            .select(col("vec_id"), col("cid").cast("long").as("cid")))
+        case None =>
+          val fit = kmeansScaledLayer(s, d)
+          write(fit.a2.select(col("vec_id"), col("cid").cast("long").as("cid")))
+          fit.release() // staging materialized — frames AND checkpoint blocks (ADVICE r7/r9)
       }
     }
-  }
 
   /** Mutual-edge components shared by sim_components (label cells) and
     * sim_components_kmeans (learned cells): mutual filter (a ∈ knn(b) AND
@@ -1252,29 +1204,16 @@ object SimilarityQueries {
   /** Stage the IVF centroid table (label, c DOUBLE[]) cross-session under
     * a fingerprint of the routing constants + embedding content; returns
     * the catalog table name. `private[llm]` for the reuse spec. */
-  private[llm] def stageIvfCentroids(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    graft.functions.GraftFunctions.register(s)
-    def fp = {
-      val r = Tables.embeddings(s, d).agg(
-        count(lit(1)).as("n"),
-        expr("coalesce(bit_xor(md5_long60(concat(cast(vec_id as string), '|', " +
-          "cast(label as string), '|', cast(embedding as string)))), 0L)").as("x"))
-        .head
-      s"ivf-v1;dims=${LlmHash.dims};round=4;vecs=${r.getLong(0)};xor=${r.getLong(1)}"
-    }
-    graft.core.StagedTable.getOrStage(s,
-      "graft_ivf_cent_" + math.abs(d.hashCode).toString, fp) { (table, loc) =>
-      s.sql(s"CREATE TABLE $table (label INT, c ARRAY<DOUBLE>) USING parquet LOCATION '$loc'")
-    } { (table, loc) =>
+  private[llm] def stageIvfCentroids(s: org.apache.spark.sql.SparkSession, d: String): String =
+    StagedTable.getOrStage(s, d, StagedTable.Stage("ivf_cent", StagedTable.Vecs,
+        s"ivf-v1;dims=${LlmHash.dims};round=4")) { write =>
       val e = Tables.embeddings(s, d)
         .select(col("label"), col("embedding").cast("array<double>").as("v"))
-      e.select(col("label"), posexplode(col("v")).as(Seq("i", "x")))
+      write(e.select(col("label"), posexplode(col("v")).as(Seq("i", "x")))
         .groupBy("label", "i").agg(round(avg("x"), 4).as("cm"))
         .groupBy("label")
-        .agg(expr("transform(array_sort(collect_list(struct(i, cm))), p -> p.cm)").as("c"))
-        .write.mode("overwrite").option("path", loc.toString).saveAsTable(table)
+        .agg(expr("transform(array_sort(collect_list(struct(i, cm))), p -> p.cm)").as("c")))
     }
-  }
 
   /** The sim_ivf centroid/routing CTEs, shared with sim_twostage_ann
     * (which widens `rn = 1` to its nprobe — see its oracle). */
@@ -1669,8 +1608,6 @@ object SimilarityQueries {
     // any of the ANN paths (sim_ann_lsh / sim_ivf / sim_ivfpq); the prefix
     // scan here keeps the oracle exact.
     Q("sim_twostage", {
-      def dN(n: Int)(a: String, b: String) =
-        s"CAST(list_sum(list_transform(generate_series(1, $n), i -> ($a[CAST(i AS INT)] - $b[CAST(i AS INT)]) * ($a[CAST(i AS INT)] - $b[CAST(i AS INT)]))) AS BIGINT)"
       s"""WITH xq AS (
          |  SELECT vec_id,
          |    list_transform(embedding, v -> CAST(round(CAST(v AS DOUBLE) * $pqScale, 0) AS BIGINT)) AS xq
@@ -1679,12 +1616,12 @@ object SimilarityQueries {
          |px AS (SELECT vec_id, xq, list_slice(xq, 1, $preDim) AS pre FROM xq),
          |q AS (SELECT vec_id AS query_id, xq AS qx, pre AS qpre FROM px WHERE $querySel),
          |s1 AS (
-         |  SELECT q.query_id, c.vec_id AS neighbor_id, ${dN(preDim)("c.pre", "q.qpre")} AS cdist
+         |  SELECT q.query_id, c.vec_id AS neighbor_id, ${duckL2q("c.pre", "q.qpre", preDim)} AS cdist
          |  FROM px c, q WHERE c.vec_id <> q.query_id
          |  QUALIFY row_number() OVER (PARTITION BY q.query_id ORDER BY cdist, neighbor_id) <= $twoStageC
          |),
          |s2 AS (
-         |  SELECT s1.query_id, s1.neighbor_id, s1.cdist, ${dN(LlmHash.dims)("c.xq", "q.qx")} AS fdist
+         |  SELECT s1.query_id, s1.neighbor_id, s1.cdist, ${duckL2q("c.xq", "q.qx", LlmHash.dims)} AS fdist
          |  FROM s1 JOIN px c ON c.vec_id = s1.neighbor_id JOIN q ON q.query_id = s1.query_id
          |)
          |SELECT query_id, neighbor_id, cdist, fdist FROM s2
@@ -1734,8 +1671,6 @@ object SimilarityQueries {
     // windows rank narrow rows, survivors join back for full vectors —
     // every piece already audited in sim_ivf / sim_twostage.
     Q("sim_twostage_ann", {
-      def dN(n: Int)(a: String, b: String) =
-        s"CAST(list_sum(list_transform(generate_series(1, $n), i -> ($a[CAST(i AS INT)] - $b[CAST(i AS INT)]) * ($a[CAST(i AS INT)] - $b[CAST(i AS INT)]))) AS BIGINT)"
       s"""WITH ${ivfRoutingCtes(annNprobe)},
          |xq0 AS (
          |  SELECT vec_id, label,
@@ -1748,13 +1683,13 @@ object SimilarityQueries {
          |  FROM asg a JOIN px p ON p.vec_id = a.query_id
          |),
          |s1 AS (
-         |  SELECT qb.query_id, c.vec_id AS neighbor_id, ${dN(preDim)("c.pre", "qb.qpre")} AS cdist
+         |  SELECT qb.query_id, c.vec_id AS neighbor_id, ${duckL2q("c.pre", "qb.qpre", preDim)} AS cdist
          |  FROM qb JOIN px c ON c.label = qb.probe_label AND c.vec_id <> qb.query_id
          |  QUALIFY row_number() OVER (PARTITION BY qb.query_id ORDER BY cdist, neighbor_id) <= $twoStageC
          |),
          |qd AS (SELECT DISTINCT query_id, qx FROM qb),
          |s2 AS (
-         |  SELECT s1.query_id, s1.neighbor_id, s1.cdist, ${dN(LlmHash.dims)("c.xq", "qd.qx")} AS fdist
+         |  SELECT s1.query_id, s1.neighbor_id, s1.cdist, ${duckL2q("c.xq", "qd.qx", LlmHash.dims)} AS fdist
          |  FROM s1 JOIN px c ON c.vec_id = s1.neighbor_id JOIN qd ON qd.query_id = s1.query_id
          |)
          |SELECT query_id, neighbor_id, cdist, fdist FROM s2
@@ -1801,8 +1736,7 @@ object SimilarityQueries {
     // Scale shape: two map-side-combined aggregates over the corpus and
     // then cell-cardinality-sized math; no joins touch raw vectors.
     Q("sim_drift", {
-      def dN(a: String, b: String) =
-        s"CAST(list_sum(list_transform(generate_series(1, ${LlmHash.dims}), i -> ($a[CAST(i AS INT)] - $b[CAST(i AS INT)]) * ($a[CAST(i AS INT)] - $b[CAST(i AS INT)]))) AS BIGINT)"
+      def dN(a: String, b: String) = duckL2q(a, b, LlmHash.dims)
       s"""WITH xq AS (
          |  SELECT vec_id, label, vec_id % 2 AS slice,
          |    list_transform(embedding, v -> CAST(round(CAST(v AS DOUBLE) * $pqScale, 0) AS BIGINT)) AS xq
@@ -1935,8 +1869,7 @@ object SimilarityQueries {
     // folded map-side to k rows — raw vectors never shuffle, and the
     // whole report costs one corpus pass at any size.
     Q("sim_silhouette", {
-      val dN =
-        s"CAST(list_sum(list_transform(generate_series(1, ${LlmHash.dims}), i -> (x.xq[CAST(i AS INT)] - c.carr[CAST(i AS INT)]) * (x.xq[CAST(i AS INT)] - c.carr[CAST(i AS INT)]))) AS BIGINT)"
+      val dN = duckL2q("x.xq", "c.carr", LlmHash.dims)
       s"""WITH $cellDistCtes,
          |ab AS (
          |  SELECT x.vec_id, x.label,
@@ -2051,8 +1984,7 @@ object SimilarityQueries {
     // declared bounded build), the graph side is the shared per-cell
     // chain; the intersection joins two sample×3-sized rank lists.
     Q("sim_knn_recall", {
-      val dNq =
-        s"CAST(list_sum(list_transform(generate_series(1, ${LlmHash.dims}), i -> (q.xq[CAST(i AS INT)] - c.xq[CAST(i AS INT)]) * (q.xq[CAST(i AS INT)] - c.xq[CAST(i AS INT)]))) AS BIGINT)"
+      val dNq = duckL2q("q.xq", "c.xq", LlmHash.dims)
       s"""WITH $knnCtes,
          |qs AS (SELECT vec_id, xq FROM xq WHERE $querySel),
          |bp AS (
@@ -2106,11 +2038,8 @@ object SimilarityQueries {
     // multi-probe close the rest). Scale shape: identical to
     // sim_knn_recall plus the one-pass Lloyd fit (k×d broadcasts).
     Q("sim_knn_recall_kmeans", {
-      val dims = LlmHash.dims
-      val dN =
-        s"CAST(list_sum(list_transform(generate_series(1, $dims), i -> (a.xq[CAST(i AS INT)] - b.xq[CAST(i AS INT)]) * (a.xq[CAST(i AS INT)] - b.xq[CAST(i AS INT)]))) AS BIGINT)"
-      val dNq =
-        s"CAST(list_sum(list_transform(generate_series(1, $dims), i -> (q.xq[CAST(i AS INT)] - c.xq[CAST(i AS INT)]) * (q.xq[CAST(i AS INT)] - c.xq[CAST(i AS INT)]))) AS BIGINT)"
+      val dN = duckL2q("a.xq", "b.xq", dims)
+      val dNq = duckL2q("q.xq", "c.xq", dims)
       s"""WITH $kmeansCtes,
          |cv AS (SELECT a.vec_id, a.cid, x.xq FROM a2 a JOIN xq x USING (vec_id)),
          |kpairs AS (
@@ -2190,9 +2119,7 @@ object SimilarityQueries {
     // directly comparable. Measured at sf0.1: 0.058 -> 0.325 -> >= 0.5
     // (floor asserted by MultiprobeRecallSpec).
     Q("sim_knn_recall_multiprobe", {
-      val dims = LlmHash.dims
-      val dNq =
-        s"CAST(list_sum(list_transform(generate_series(1, $dims), i -> (q.xq[CAST(i AS INT)] - c.xq[CAST(i AS INT)]) * (q.xq[CAST(i AS INT)] - c.xq[CAST(i AS INT)]))) AS BIGINT)"
+      val dNq = duckL2q("q.xq", "c.xq", dims)
       s"""WITH $multiprobeCtes,
          |qs AS (SELECT vec_id, xq FROM xq WHERE $querySel),
          |bp AS (
@@ -2544,9 +2471,7 @@ object SimilarityQueries {
     // floor is asserted by MultiprobeRecallSpec alongside the fixed-k
     // variant's.
     Q("sim_knn_recall_multiprobe_scaled", {
-      val dims = LlmHash.dims
-      val dNq =
-        s"CAST(list_sum(list_transform(generate_series(1, $dims), i -> (q.xq[CAST(i AS INT)] - c.xq[CAST(i AS INT)]) * (q.xq[CAST(i AS INT)] - c.xq[CAST(i AS INT)]))) AS BIGINT)"
+      val dNq = duckL2q("q.xq", "c.xq", dims)
       s"""WITH $multiprobeScaledCtes,
          |qs AS (SELECT vec_id, xq FROM xq WHERE $querySel),
          |bp AS (
@@ -2725,10 +2650,7 @@ object SimilarityQueries {
   /** Shared sim_ivfpq / sim_ivfpq_staged oracle (the FAISS IVF-PQ shape,
     * all quantized-integer so ADC sums are hash-exact). */
   private lazy val pqOracle: String = {
-      def d8(a: String, b: String) =
-        s"CAST(list_sum(list_transform(generate_series(1, 8), i -> ($a[CAST(i AS INT)] - $b[CAST(i AS INT)]) * ($a[CAST(i AS INT)] - $b[CAST(i AS INT)]))) AS BIGINT)"
-      def d64(a: String, b: String) =
-        s"CAST(list_sum(list_transform(generate_series(1, 64), i -> ($a[CAST(i AS INT)] - $b[CAST(i AS INT)]) * ($a[CAST(i AS INT)] - $b[CAST(i AS INT)]))) AS BIGINT)"
+      def d8(a: String, b: String) = duckL2q(a, b, 8)
       s"""WITH xq AS (
          |  SELECT vec_id, label,
          |    list_transform(embedding, v -> CAST(round(CAST(v AS DOUBLE) * $pqScale, 0) AS BIGINT)) AS xq
@@ -2769,7 +2691,7 @@ object SimilarityQueries {
          |ccent AS (SELECT label, list(cm ORDER BY i) AS carr FROM cc0 GROUP BY label),
          |route AS (
          |  SELECT query_id, probe_label FROM (
-         |    SELECT q.vec_id AS query_id, c.label AS probe_label, ${d64("q.xq", "c.carr")} AS dist
+         |    SELECT q.vec_id AS query_id, c.label AS probe_label, ${duckL2q("q.xq", "c.carr", 64)} AS dist
          |    FROM xq q, ccent c WHERE q.$querySel
          |  ) QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY dist, probe_label) = 1
          |),
@@ -2805,8 +2727,7 @@ object SimilarityQueries {
     * cb → codes) over an existing `xq` CTE — shared by the scaled serve
     * oracles. */
   private lazy val pqCodebookCtes: String = {
-    def d8(a: String, b: String) =
-      s"CAST(list_sum(list_transform(generate_series(1, 8), i -> ($a[CAST(i AS INT)] - $b[CAST(i AS INT)]) * ($a[CAST(i AS INT)] - $b[CAST(i AS INT)]))) AS BIGINT)"
+    def d8(a: String, b: String) = duckL2q(a, b, 8)
     s"""sub AS (
        |  SELECT vec_id, CAST(s AS INT) AS s,
        |    list_slice(xq, CAST(s*$pqSubDim+1 AS INT), CAST(s*$pqSubDim+$pqSubDim AS INT)) AS sv
@@ -2836,13 +2757,11 @@ object SimilarityQueries {
   }
 
   private lazy val pqScaledOracle: String = {
-    def d8(a: String, b: String) =
-      s"CAST(list_sum(list_transform(generate_series(1, 8), i -> ($a[CAST(i AS INT)] - $b[CAST(i AS INT)]) * ($a[CAST(i AS INT)] - $b[CAST(i AS INT)]))) AS BIGINT)"
     s"""WITH $kmeansThreeLevelCtes,
        |$pqCodebookCtes,
        |route AS (SELECT vec_id AS query_id, cid AS probe_cid FROM a2 WHERE $querySel),
        |lut AS (
-       |  SELECT sub.vec_id AS query_id, sub.s, cb.cid, ${d8("sub.sv", "cb.carr")} AS d
+       |  SELECT sub.vec_id AS query_id, sub.s, cb.cid, ${duckL2q("sub.sv", "cb.carr", 8)} AS d
        |  FROM sub JOIN cb ON cb.s = sub.s
        |  WHERE sub.$querySel
        |),
@@ -2866,16 +2785,11 @@ object SimilarityQueries {
     * pools the probed members, the top [[serveTopC]] survive to an exact
     * full-dimension re-rank. */
   private lazy val pqScaledRerankOracle: String = {
-    def d8(a: String, b: String) =
-      s"CAST(list_sum(list_transform(generate_series(1, 8), i -> ($a[CAST(i AS INT)] - $b[CAST(i AS INT)]) * ($a[CAST(i AS INT)] - $b[CAST(i AS INT)]))) AS BIGINT)"
-    val dims = LlmHash.dims
-    def l2(a: String, b: String) =
-      s"CAST(list_sum(list_transform(generate_series(1, $dims), i -> ($a[CAST(i AS INT)] - $b[CAST(i AS INT)]) * ($a[CAST(i AS INT)] - $b[CAST(i AS INT)]))) AS BIGINT)"
     s"""WITH $multiprobeScaledCtes,
        |$pqCodebookCtes,
        |qroute AS (SELECT vec_id AS query_id, pcid AS probe_cid FROM mp WHERE $querySel),
        |lut AS (
-       |  SELECT sub.vec_id AS query_id, sub.s, cb.cid, ${d8("sub.sv", "cb.carr")} AS d
+       |  SELECT sub.vec_id AS query_id, sub.s, cb.cid, ${duckL2q("sub.sv", "cb.carr", 8)} AS d
        |  FROM sub JOIN cb ON cb.s = sub.s
        |  WHERE sub.$querySel
        |),
@@ -2893,7 +2807,7 @@ object SimilarityQueries {
        |  QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY adist, neighbor_id) <= $serveTopC
        |),
        |rr AS (
-       |  SELECT sh.query_id, sh.neighbor_id, sh.adist, ${l2("q.xq", "n.xq")} AS fdist
+       |  SELECT sh.query_id, sh.neighbor_id, sh.adist, ${duckL2q("q.xq", "n.xq", LlmHash.dims)} AS fdist
        |  FROM shortl sh JOIN xq n ON n.vec_id = sh.neighbor_id
        |    JOIN xq q ON q.vec_id = sh.query_id
        |)
@@ -3023,29 +2937,16 @@ object SimilarityQueries {
     * single-artifact layout mirrors a serialized ANN index file; the
     * corpus-sized member (codes) is narrow (vec_id, s, code — 8 bytes of
     * code per vector). */
-  private[graft] def stagePqIndex(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    graft.functions.GraftFunctions.register(s)
-    def fp = {
-      val r = Tables.embeddings(s, d).agg(
-        count(lit(1)).as("n"),
-        expr("coalesce(bit_xor(md5_long60(concat(cast(vec_id as string), '|', " +
-          "cast(label as string), '|', cast(embedding as string)))), 0L)").as("x"))
-        .head
-      // pq-v3 = PACKED per-vector codes (one bigint), replacing the
-      // (vec_id, s, code) triples of v2
-      s"pq-v3;scale=$pqScale;M=$pqM;sub=$pqSubDim;k=$pqK;tcap=$pqTrainCap;dims=${LlmHash.dims};" +
-        s"vecs=${r.getLong(0)};xor=${r.getLong(1)}"
-    }
-    graft.core.StagedTable.getOrStage(s,
-      "graft_pq_index_" + math.abs(d.hashCode).toString, fp) { (table, loc) =>
-      s.sql(s"CREATE TABLE $table (kind STRING, s INT, cid BIGINT, " +
-        s"carr ARRAY<BIGINT>, vec_id BIGINT, code BIGINT, label INT) " +
-        s"USING parquet LOCATION '$loc'")
-    } { (table, loc) =>
+  private[graft] def stagePqIndex(s: org.apache.spark.sql.SparkSession, d: String): String =
+    // pq-v3 = PACKED per-vector codes (one bigint), replacing the
+    // (vec_id, s, code) triples of v2
+    StagedTable.getOrStage(s, d, StagedTable.Stage("pq_index", StagedTable.Vecs,
+        s"pq-v3;scale=$pqScale;M=$pqM;sub=$pqSubDim;k=$pqK;tcap=$pqTrainCap;" +
+          s"dims=${LlmHash.dims}")) { write =>
       val (cb, codes, ccent, caches) = pqBuildIndex(s, d)
       val nulls = Seq(lit(null).cast("bigint").as("vec_id"),
         lit(null).cast("bigint").as("code"), lit(null).cast("int").as("label"))
-      val rows = cb.select(Seq(lit("cb").as("kind"), col("s"), col("cid"),
+      write(cb.select(Seq(lit("cb").as("kind"), col("s"), col("cid"),
           col("carr")) ++ nulls: _*)
         .unionByName(codes.select(lit("code").as("kind"),
           lit(null).cast("int").as("s"),
@@ -3055,11 +2956,9 @@ object SimilarityQueries {
         .unionByName(ccent.select(lit("ccent").as("kind"),
           lit(null).cast("int").as("s"), lit(null).cast("bigint").as("cid"),
           col("carr"), lit(null).cast("bigint").as("vec_id"),
-          lit(null).cast("bigint").as("code"), col("label")))
-      rows.write.mode("overwrite").option("path", loc.toString).saveAsTable(table)
+          lit(null).cast("bigint").as("code"), col("label"))))
       caches.foreach(_.unpersist(blocking = false))
     }
-  }
 
   /** The IVF-PQ SERVE path: route each query to its best coarse cell,
     * build the per-query ADC lookup table against the codebooks, and rank
@@ -3346,6 +3245,16 @@ object SimilarityQueries {
       .orderBy("query_id", "neighbor_id")
   }
 
+  /** The scaled-PQ-index stage: the corpus content hash plus every
+    * constant of BOTH the three-level fit and the PQ coding — a strict
+    * superset of [[stageKmeansScaledAssign]]'s km3l fingerprint, which is
+    * what makes that builder's cross-artifact adoption sound.
+    * (pqs-v4 = capped split repair; v5 = sampled codebook training;
+    * v6 = packed per-vector codes, see pq-v3.) */
+  private def pqsStage: StagedTable.Stage = StagedTable.Stage("pqs_index", StagedTable.Vecs,
+    s"pqs-v6;sp=$assignSProbe;gp=$assignGProbe;cap=$splitCap;scale=$pqScale;M=$pqM;sub=$pqSubDim;k=$pqK;tcap=$pqTrainCap;dims=${LlmHash.dims};" +
+      s"cellTarget=$cellTarget;kmScale=$kmScale")
+
   /** Cross-session staged SCALED IVF-PQ index — [[stagePqIndex]]'s shape
     * over the k ∝ N three-level cells, self-contained for serving:
     * subspace codebooks (`cb`), per-vector codes (`code`), the corpus cell
@@ -3358,46 +3267,14 @@ object SimilarityQueries {
     * fingerprint pins the corpus content, the PQ constants AND the re-fit
     * law (a grown corpus changes N, k and the xor — a stale scaled index
     * can never serve). */
-  /** The scaled-PQ-index fingerprint: the corpus content hash plus every
-    * constant of BOTH the three-level fit and the PQ coding — a strict
-    * superset of [[stageKmeansScaledAssign]]'s km3l fingerprint, which is
-    * what makes cross-artifact adoption below sound.
-    * (pqs-v4 = capped split repair; v5 = sampled codebook training.) */
-  private def pqsScaledFp(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    graft.functions.GraftFunctions.register(s)
-    val r = Tables.embeddings(s, d).agg(
-      count(lit(1)).as("n"),
-      expr("coalesce(bit_xor(md5_long60(concat(cast(vec_id as string), '|', " +
-        "cast(label as string), '|', cast(embedding as string)))), 0L)").as("x"))
-      .head
-    // pqs-v6 = packed per-vector codes (see pq-v3)
-    s"pqs-v6;sp=$assignSProbe;gp=$assignGProbe;cap=$splitCap;scale=$pqScale;M=$pqM;sub=$pqSubDim;k=$pqK;tcap=$pqTrainCap;dims=${LlmHash.dims};" +
-      s"cellTarget=$cellTarget;kmScale=$kmScale;vecs=${r.getLong(0)};xor=${r.getLong(1)}"
-  }
-
-  /** The scaled-PQ stage directory under the session warehouse — shared by
-    * the builder and the cross-artifact adoption check. */
-  private def pqsStageDir(s: org.apache.spark.sql.SparkSession, d: String)
-      : java.nio.file.Path =
-    java.nio.file.Paths.get(java.net.URI.create(
-      s.conf.get("spark.sql.warehouse.dir")).getPath,
-      "graft_pqs_index_" + math.abs(d.hashCode).toString)
-
   private[graft] def stagePqIndexScaled(s: org.apache.spark.sql.SparkSession,
-      d: String): String = {
-    graft.functions.GraftFunctions.register(s)
-    def fp = pqsScaledFp(s, d)
-    graft.core.StagedTable.getOrStage(s,
-      "graft_pqs_index_" + math.abs(d.hashCode).toString, fp) { (table, loc) =>
-      s.sql(s"CREATE TABLE $table (kind STRING, s INT, cid BIGINT, " +
-        s"carr ARRAY<BIGINT>, vec_id BIGINT, code BIGINT) " +
-        s"USING parquet LOCATION '$loc'")
-    } { (table, loc) =>
+      d: String): String =
+    StagedTable.getOrStage(s, d, pqsStage) { write =>
       val fit = kmeansScaledLayer(s, d)
       val (_, cb, codes, pqCaches) = pqBuildCodebooks(s, d)
       val nullV = lit(null).cast("bigint").as("vec_id")
       val nullC = lit(null).cast("bigint").as("code")
-      val rows = cb.select(lit("cb").as("kind"), col("s"), col("cid"),
+      write(cb.select(lit("cb").as("kind"), col("s"), col("cid"),
           col("carr"), nullV, nullC)
         .unionByName(codes.select(lit("code").as("kind"), lit(null).cast("int").as("s"),
           lit(null).cast("bigint").as("cid"), lit(null).cast("array<bigint>").as("carr"),
@@ -3410,12 +3287,10 @@ object SimilarityQueries {
         .unionByName(fit.pg.select(lit("gparent").as("kind"), lit(null).cast("int").as("s"),
           col("gid").as("cid"), col("garr").as("carr"), col("sid").as("vec_id"), nullC))
         .unionByName(fit.pf.select(lit("parent").as("kind"), lit(null).cast("int").as("s"),
-          col("cid"), col("carr"), col("gid").as("vec_id"), nullC))
-      rows.write.mode("overwrite").option("path", loc.toString).saveAsTable(table)
+          col("cid"), col("carr"), col("gid").as("vec_id"), nullC)))
       fit.release() // frames AND checkpoint blocks (ADVICE r9)
       pqCaches.foreach(_.unpersist(blocking = false))
     }
-  }
 
   /** The (cb, codes, members, sseeds, pf, pg) frame bundle sliced out of
     * a staged scaled index table — the serve path's adopt-side read. */

@@ -1,46 +1,85 @@
 package graft.llm
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
-import graft.core.Tables
+import graft.core.{StagedTable, Tables}
 
-/** Cross-session reuse of the staged cluster table: a fresh process whose
+/** Cross-session reuse of every staged table family: a fresh process whose
   * stage fingerprint (algorithm constants + corpus content hash) matches
-  * the `_graft_fingerprint` sidecar adopts the existing bucketed files
-  * WITHOUT re-running the clustering pass; any corpus change invalidates.
-  * Simulated fresh process = stage cache cleared + catalog entry dropped
+  * the `_graft_fingerprint` sidecar adopts the existing files WITHOUT a
+  * build, with the built rows and schema; any corpus change invalidates.
+  * Simulated fresh process = stage memo cleared + catalog entry dropped
   * (the table is external, so the files survive the drop — exactly the
-  * state a new driver starts from). */
+  * state a new driver starts from). Every stage here lives over a private
+  * corpus copy and is dropped, files included, when its test ends. */
 class StageReuseSpec extends SparkSpec {
 
   override val timeLimit = org.scalatest.time.Span(300, org.scalatest.time.Seconds)
 
-  test("fingerprint match skips recompute across sessions; corpus change invalidates") {
-    val dir = Files.createTempDirectory("stage_corpus")
+  /** A private copy of sf0.001's `input` table (documents or embeddings),
+    * passed through `edit`; stage names hash the corpus path, so its stages
+    * belong to this spec. */
+  private def corpusCopy(input: String, tag: String,
+      edit: DataFrame => DataFrame = identity): String = {
+    val dir = Files.createTempDirectory(tag)
     dir.toFile.deleteOnExit()
-    val corpus = dir.toString
-    Tables.documents(spark, sf("sf0.001"))
-      .write.mode("overwrite").parquet(s"$corpus/documents.parquet")
-    val table = "graft_clusters_" + math.abs(corpus.hashCode).toString
-    def stageRows() = graft.SparkEntry.queries("llm_cluster_stage")(spark, corpus)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    edit(Tables.load(spark, sf("sf0.001"), input))
+      .write.mode("overwrite").parquet(s"$dir/$input.parquet")
+    dir.toString
+  }
 
-    // session 1: first consumer stages (one real clustering computation)
-    val base = PipelineQueries.stagingsComputed
-    val rows1 = stageRows()
-    assert(PipelineQueries.stagingsComputed == base + 1, "first call computes the stage")
-    assert(rows1.nonEmpty, "sf0.001 corpus has near-dup clusters")
-
-    // "new process": JVM cache gone, catalog entry gone, files + sidecar on disk
-    PipelineQueries.resetStageCache()
+  /** "New process": memo gone, catalog entry gone, files + sidecar on disk. */
+  private def freshProcess(table: String): Unit = {
+    StagedTable.resetCache()
     spark.sql(s"DROP TABLE IF EXISTS $table")
-    val rows2 = stageRows()
-    assert(PipelineQueries.stagingsComputed == base + 1,
-      "matching fingerprint reuses the staged files without recompute")
-    assert(rows2 == rows1, "adopted external table returns the identical stage")
+  }
 
-    // the adopted table keeps its bucket spec (doc_id joins skip the exchange)
+  private def rows(table: String): Seq[String] =
+    spark.table(table).collect().map(_.toString).sorted.toSeq
+
+  /** Build `table`, then adopt it in a fresh process: zero new builds, the
+    * built rows, the built schema. `empty`: the build has no rows. */
+  private def buildThenAdopt(stage: () => String, table: String,
+      empty: Boolean = false): Unit = {
+    val base = StagedTable.stagingsComputed
+    assert(stage() == table, "the stage name is graft_<family>_<|hash(corpus)|>")
+    assert(StagedTable.stagingsComputed == base + 1, s"first call builds $table")
+    val (built, schema) = (rows(table), spark.table(table).schema)
+    assert(built.isEmpty == empty, s"$table has ${if (empty) "no " else ""}rows")
+    freshProcess(table)
+    assert(stage() == table)
+    assert(StagedTable.stagingsComputed == base + 1,
+      "matching fingerprint adopts the staged files without a build")
+    assert(rows(table) == built, "adopted table returns the identical rows")
+    assert(spark.table(table).schema == schema, "adopted schema equals the built schema")
+  }
+
+  /** After `change`, a fresh process must rebuild `table` (one build). */
+  private def rebuildsAfter(stage: () => String, table: String)(change: => Unit): Unit = {
+    change
+    freshProcess(table)
+    val before = StagedTable.stagingsComputed
+    stage()
+    assert(StagedTable.stagingsComputed == before + 1, s"$table is rebuilt")
+  }
+
+  /** Move vector 0 in place: same count, different content hash. */
+  private def perturbVector(corpus: String): Unit = {
+    spark.read.parquet(s"$corpus/embeddings.parquet")
+      .withColumn("embedding", when(col("vec_id") === 0,
+        expr("transform(embedding, x -> x + 1.0F)")).otherwise(col("embedding")))
+      .write.mode("overwrite").parquet(s"$corpus/perturbed.parquet")
+    // rewrite in place (overwrite of the read source needs a staging copy)
+    spark.read.parquet(s"$corpus/perturbed.parquet").write.mode("overwrite")
+      .parquet(s"$corpus/embeddings.parquet")
+  }
+
+  /** Bucket spec kept on adoption (doc_id joins skip the exchange); an
+    * edited document and a stale sidecar (the state a constants edit
+    * leaves) each rebuild, and the rebuild heals the sidecar. */
+  private def clustersInvalidate(stage: () => String, table: String, corpus: String): Unit = {
     val bucketSpec = spark.sql(s"DESCRIBE TABLE EXTENDED $table")
       .filter(col("col_name").isin("Num Buckets", "Bucket Columns")).collect()
       .map(r => (r.getString(0), r.getString(1))).toMap
@@ -48,233 +87,140 @@ class StageReuseSpec extends SparkSpec {
       bucketSpec.get("Bucket Columns").exists(_.contains("doc_id")),
       s"bucket metadata restored on adoption: $bucketSpec")
 
-    // corpus change: one doc's text edited -> fingerprint mismatch -> recompute
-    val docs = spark.read.parquet(s"$corpus/documents.parquet").collect()
-    val schema = spark.read.parquet(s"$corpus/documents.parquet").schema
-    val textIdx = schema.fieldIndex("text")
-    val edited = docs.zipWithIndex.map { case (r, i) =>
-      if (i == 0) org.apache.spark.sql.Row.fromSeq(
-        r.toSeq.updated(textIdx, r.getString(textIdx) + " EDITED"))
-      else r
+    rebuildsAfter(stage, table) {
+      val docs = spark.read.parquet(s"$corpus/documents.parquet").collect()
+      val schema = spark.read.parquet(s"$corpus/documents.parquet").schema
+      val textIdx = schema.fieldIndex("text")
+      val edited = docs.zipWithIndex.map { case (r, i) =>
+        if (i == 0) org.apache.spark.sql.Row.fromSeq(
+          r.toSeq.updated(textIdx, r.getString(textIdx) + " EDITED"))
+        else r
+      }
+      spark.createDataFrame(
+        new java.util.ArrayList[org.apache.spark.sql.Row](java.util.Arrays.asList(edited: _*)),
+        schema).write.mode("overwrite").parquet(s"$corpus/documents.parquet")
     }
-    spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](java.util.Arrays.asList(edited: _*)),
-      schema).write.mode("overwrite").parquet(s"$corpus/documents.parquet")
-    PipelineQueries.resetStageCache()
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    stageRows()
-    assert(PipelineQueries.stagingsComputed == base + 2,
-      "changed corpus invalidates the stage and recomputes")
 
-    // constants-change path: a stage written under different algorithm
-    // constants carries a different fingerprint — simulated by corrupting
-    // the sidecar (same observable state as a constants edit: files
-    // present, fingerprint mismatched) -> recompute, and the sidecar heals
-    val loc = java.nio.file.Paths.get(java.net.URI.create(
-      spark.conf.get("spark.sql.warehouse.dir")).getPath, table)
-    val fpFile = loc.resolve("_graft_fingerprint")
+    val fpFile = Paths.get(java.net.URI.create(
+      spark.conf.get("spark.sql.warehouse.dir")).getPath, table, "_graft_fingerprint")
     val goodFp = new String(Files.readAllBytes(fpFile), "UTF-8")
-    Files.write(fpFile, "v0;stale-constants".getBytes("UTF-8"))
-    PipelineQueries.resetStageCache()
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    stageRows()
-    assert(PipelineQueries.stagingsComputed == base + 3,
-      "fingerprint mismatch (changed constants) recomputes")
+    rebuildsAfter(stage, table)(Files.write(fpFile, "v0;stale-constants".getBytes("UTF-8")))
     assert(new String(Files.readAllBytes(fpFile), "UTF-8") == goodFp,
       "recompute rewrites the current fingerprint")
-    spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 
-  test("IVF centroid index: fingerprint match adopts across sessions; vector change invalidates") {
-    import org.apache.spark.sql.functions.col
-    val dir = Files.createTempDirectory("stage_ivf")
-    dir.toFile.deleteOnExit()
-    val corpus = dir.toString
-    Tables.embeddings(spark, sf("sf0.001"))
-      .write.mode("overwrite").parquet(s"$corpus/embeddings.parquet")
-    val table = "graft_ivf_cent_" + math.abs(corpus.hashCode).toString
-    def cents() = spark.table(SimilarityQueries.stageIvfCentroids(spark, corpus))
-      .collect().map(r => r.getInt(0) -> r.getSeq[Double](1)).toMap
-
-    val base = PipelineQueries.stagingsComputed
-    val c1 = cents()
-    assert(PipelineQueries.stagingsComputed == base + 1, "first call builds the index")
-    assert(c1.nonEmpty && c1.values.forall(_.nonEmpty))
-
-    // "new process": memo gone, catalog entry gone, files + sidecar on disk
-    PipelineQueries.resetStageCache()
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    val c2 = cents()
-    assert(PipelineQueries.stagingsComputed == base + 1,
-      "matching fingerprint adopts the index without a corpus pass")
-    assert(c2 == c1, "adopted index is identical")
-
-    // vector change: one embedding perturbed -> fingerprint mismatch -> rebuild
-    val emb = spark.read.parquet(s"$corpus/embeddings.parquet")
-    emb.withColumn("embedding",
-        org.apache.spark.sql.functions.when(col("vec_id") === 0,
-          org.apache.spark.sql.functions.expr("transform(embedding, x -> x + 1.0F)"))
-          .otherwise(col("embedding")))
-      .write.mode("overwrite").parquet(s"${dir}2.parquet")
-    // rewrite in place (overwrite of the read source needs a staging copy)
-    spark.read.parquet(s"${dir}2.parquet").write.mode("overwrite")
-      .parquet(s"$corpus/embeddings.parquet")
-    PipelineQueries.resetStageCache()
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    cents()
-    assert(PipelineQueries.stagingsComputed == base + 2,
-      "changed vectors invalidate the staged index and rebuild")
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-  }
-
-  test("IVF-PQ index: one kind-tagged artifact adopts across sessions without an index pass") {
-    import org.apache.spark.sql.functions.col
-    val dir = Files.createTempDirectory("stage_pq")
-    dir.toFile.deleteOnExit()
-    val corpus = dir.toString
-    Tables.embeddings(spark, sf("sf0.001"))
-      .write.mode("overwrite").parquet(s"$corpus/embeddings.parquet")
-    val table = "graft_pq_index_" + math.abs(corpus.hashCode).toString
-    def index() = spark.table(SimilarityQueries.stagePqIndex(spark, corpus))
-      .collect()
-
-    val base = PipelineQueries.stagingsComputed
-    val i1 = index()
-    assert(PipelineQueries.stagingsComputed == base + 1, "first call builds the index")
-    val kinds = i1.map(_.getString(0)).toSet
+  /** The PQ artifact's layout, then a moved vector rebuilds it. */
+  private def pqInvalidate(stage: () => String, table: String, corpus: String): Unit = {
+    val idx = spark.table(table).collect()
+    val kinds = idx.map(_.getString(0)).toSet
     assert(kinds == Set("cb", "code", "ccent"),
       s"the artifact carries codebooks, codes, and coarse centroids: $kinds")
-    val nVecs = Tables.embeddings(spark, corpus).count()
     // r10 packed layout: ONE bigint code row per vector (4-bit sub-codes
     // shifted into disjoint ranges), not a row per (vector, subspace)
-    assert(i1.count(_.getString(0) == "code") == nVecs,
+    assert(idx.count(_.getString(0) == "code") == Tables.embeddings(spark, corpus).count(),
       "one PACKED code row per vector")
-    assert(i1.filter(_.getString(0) == "code")
+    assert(idx.filter(_.getString(0) == "code")
       .forall(r => { val c = r.getLong(5); c >= 0L && c < (1L << 32) }),
       "a packed code is 8 sub-codes x 4 bits — 32 bits")
-
-    // "new process": memo gone, catalog entry gone, files + sidecar on disk
-    PipelineQueries.resetStageCache()
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    val i2 = index()
-    assert(PipelineQueries.stagingsComputed == base + 1,
-      "matching fingerprint adopts the index without an index pass")
-    assert(i2.map(_.toString).sorted.sameElements(i1.map(_.toString).sorted))
-
-    // a perturbed vector invalidates and rebuilds
-    spark.read.parquet(s"$corpus/embeddings.parquet")
-      .withColumn("embedding",
-        org.apache.spark.sql.functions.when(col("vec_id") === 0,
-          org.apache.spark.sql.functions.expr("transform(embedding, x -> x + 1.0F)"))
-          .otherwise(col("embedding")))
-      .write.mode("overwrite").parquet(s"${dir}2.parquet")
-    spark.read.parquet(s"${dir}2.parquet").write.mode("overwrite")
-      .parquet(s"$corpus/embeddings.parquet")
-    PipelineQueries.resetStageCache()
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    index()
-    assert(PipelineQueries.stagingsComputed == base + 2,
-      "changed vectors invalidate the staged PQ index and rebuild")
-    spark.sql(s"DROP TABLE IF EXISTS $table")
+    rebuildsAfter(stage, table)(perturbVector(corpus))
   }
 
-  test("kmeans assignment table: fingerprint match adopts across sessions without a Lloyd pass") {
-    val dir = Files.createTempDirectory("stage_kmasg")
-    dir.toFile.deleteOnExit()
-    val corpus = dir.toString
-    Tables.embeddings(spark, sf("sf0.001"))
-      .write.mode("overwrite").parquet(s"$corpus/embeddings.parquet")
-    val table = "graft_km_asg_" + math.abs(corpus.hashCode).toString
-    def asg() = spark.table(SimilarityQueries.stageKmeansAssign(spark, corpus))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-
-    val base = PipelineQueries.stagingsComputed
-    val a1 = asg()
-    assert(PipelineQueries.stagingsComputed == base + 1, "first call runs the Lloyd chain")
-    assert(a1.nonEmpty, "assignments staged")
-
-    // "new process": memo gone, catalog entry gone, files + sidecar on disk
-    PipelineQueries.resetStageCache()
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    val a2 = asg()
-    assert(PipelineQueries.stagingsComputed == base + 1,
-      "matching fingerprint adopts the assignment table without a Lloyd pass")
-    assert(a2 == a1, "adopted assignments are identical")
-    spark.sql(s"DROP TABLE IF EXISTS $table")
+  /** k follows N, and the re-fit law is part of the fingerprint: a GROWN
+    * corpus re-fingerprints and re-fits (wrong k, wrong content xor), never
+    * serves the stale fit. */
+  private def km2lInvalidate(stage: () => String, table: String, corpus: String): Unit = {
+    val cells = spark.table(table).select("cid").distinct().count()
+    val vecs = spark.table(table).select("vec_id").distinct().count()
+    assert(vecs == 500 && cells > 8, s"k follows N (500/32 -> 15 cells seeded): $vecs, $cells")
+    rebuildsAfter(stage, table) {
+      Tables.embeddings(spark, sf("sf0.001"))
+        .unionByName(Tables.embeddings(spark, sf("sf0.001"))
+          .select((col("vec_id") + 500L).as("vec_id"), col("embedding"), col("label")))
+        .write.mode("overwrite").parquet(s"$corpus/embeddings.parquet")
+    }
+    assert(spark.table(table).select("vec_id").distinct().count() == 1000,
+      "re-fit covers the grown corpus")
   }
 
-  test("SCALED (three-level) assignment table: adopts on match, re-fits when the corpus grows") {
-    val dir = Files.createTempDirectory("stage_km2l")
-    dir.toFile.deleteOnExit()
-    val corpus = dir.toString
-    Tables.embeddings(spark, sf("sf0.001"))
-      .write.mode("overwrite").parquet(s"$corpus/embeddings.parquet")
-    val table = "graft_km2l_asg_" + math.abs(corpus.hashCode).toString
-    def asg() = spark.table(SimilarityQueries.stageKmeansScaledAssign(spark, corpus))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-
-    val base = PipelineQueries.stagingsComputed
-    val a1 = asg()
-    assert(PipelineQueries.stagingsComputed == base + 1, "first call runs the three-level chain")
-    assert(a1.size == 500 && a1.values.toSet.size > 8,
-      s"k follows N (500/32 -> 15 cells seeded): ${a1.values.toSet.size}")
-
-    PipelineQueries.resetStageCache()
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    val a2 = asg()
-    assert(PipelineQueries.stagingsComputed == base + 1,
-      "matching fingerprint adopts without a three-level pass")
-    assert(a2 == a1, "adopted assignments are identical")
-
-    // the re-fit law is part of the fingerprint: GROW the corpus — a fresh
-    // process (memo cleared; within-process consumers are memo-free by
-    // contract) must re-fingerprint and recompute the stale fit (wrong k,
-    // wrong content xor), never serve it
-    PipelineQueries.resetStageCache()
-    Tables.embeddings(spark, sf("sf0.001"))
-      .unionByName(Tables.embeddings(spark, sf("sf0.001"))
-        .select((col("vec_id") + 500L).as("vec_id"), col("embedding"), col("label")))
-      .write.mode("overwrite").parquet(s"$corpus/embeddings.parquet")
-    val a3 = asg()
-    assert(PipelineQueries.stagingsComputed == base + 2,
-      "grown corpus re-fingerprints and recomputes")
-    assert(a3.size == 1000, s"re-fit covers the grown corpus: ${a3.size}")
-    spark.sql(s"DROP TABLE IF EXISTS $table")
+  /** No rows: a doc_id self-join over the adopted stage (broadcast off)
+    * is a bucketed scan of the empty bucket file, with no exchange. */
+  private def emptyBucketedJoin(stage: () => String, table: String, corpus: String): Unit = {
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val join = spark.table(table).as("a").join(spark.table(table).as("b"), "doc_id")
+      assert(!join.queryExecution.executedPlan.toString.contains("Exchange") && join.count() == 0,
+        "a doc_id self-join over the adopted empty stage is a bucketed scan with no exchange")
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
+
+  /** One table row: the test, its stage family and input table, the
+    * builder, the family-specific checks after the adopt, and the edit
+    * that makes the row's corpus from sf0.001's. */
+  private final case class StageCase(name: String, family: String, input: String,
+      build: (SparkSession, String) => String,
+      checks: (() => String, String, String) => Unit = (_, _, _) => (),
+      edit: DataFrame => DataFrame = identity, empty: Boolean = false)
+
+  /** `pqs_index` is covered by the cross-artifact test below, which
+    * already pays for its build. */
+  private val families = Seq(
+    StageCase("fingerprint match skips recompute across sessions; corpus change invalidates",
+      "clusters", "documents", PipelineQueries.stageClusters, clustersInvalidate),
+    // random hex texts share no shingles: no edges, so the bucketed write
+    // of the empty frame opens no file
+    StageCase("clusters over a corpus with no near-dups: the empty stage adopts across sessions",
+      "clusters", "documents", PipelineQueries.stageClusters, emptyBucketedJoin,
+      _.orderBy("doc_id").limit(8)
+        .withColumn("text", expr("repeat(sha2(cast(doc_id as string), 512), 4)")),
+      empty = true),
+    StageCase("multimodal pair edges: fingerprint match adopts across sessions without a decode pass",
+      "mm_pairs", "documents", MultimodalQueries.stageMmPairs),
+    StageCase("IVF centroid index: fingerprint match adopts across sessions; vector change invalidates",
+      "ivf_cent", "embeddings", SimilarityQueries.stageIvfCentroids,
+      (stage, table, corpus) => {
+        assert(spark.table(table).collect().forall(_.getSeq[Double](1).nonEmpty),
+          "every staged centroid is non-empty")
+        rebuildsAfter(stage, table)(perturbVector(corpus))
+      }),
+    StageCase("kmeans assignment table: fingerprint match adopts across sessions without a Lloyd pass",
+      "km_asg", "embeddings", SimilarityQueries.stageKmeansAssign),
+    StageCase("SCALED (three-level) assignment table: adopts on match, re-fits when the corpus grows",
+      "km2l_asg", "embeddings", SimilarityQueries.stageKmeansScaledAssign, km2lInvalidate),
+    StageCase("IVF-PQ index: one kind-tagged artifact adopts across sessions without an index pass",
+      "pq_index", "embeddings", SimilarityQueries.stagePqIndex, pqInvalidate))
+
+  for (r <- families)
+    test(r.name) {
+      val corpus = corpusCopy(r.input, s"stage_${r.family}", r.edit)
+      val table = s"graft_${r.family}_" + math.abs(corpus.hashCode).toString
+      val stage = () => r.build(spark, corpus)
+      try {
+        buildThenAdopt(stage, table, r.empty)
+        r.checks(stage, table, corpus)
+      } finally StagedTable.drop(spark, table)
+    }
 
   test("cross-artifact adoption: a valid scaled PQ index supplies the fit assignment with ZERO new fits (SCALING r10)") {
-    val dir = Files.createTempDirectory("stage_xadopt")
-    dir.toFile.deleteOnExit()
-    val corpus = dir.toString
-    Tables.embeddings(spark, sf("sf0.001"))
-      .write.mode("overwrite").parquet(s"$corpus/embeddings.parquet")
+    val corpus = corpusCopy("embeddings", "stage_xadopt")
     val kmTable = "graft_km2l_asg_" + math.abs(corpus.hashCode).toString
     val pqTable = "graft_pqs_index_" + math.abs(corpus.hashCode).toString
+    try {
+      // the PQ-scaled serve index (one fit inside its builder), adopted
+      buildThenAdopt(() => SimilarityQueries.stagePqIndexScaled(spark, corpus), pqTable)
+      val members = spark.table(pqTable).filter(col("kind") === "member")
+        .collect().map(r => r.getLong(4) -> r.getLong(2)).toMap
+      assert(members.size == 500, "pq index carries the full membership")
 
-    // build the PQ-scaled serve index first (one fit inside its builder)
-    spark.table(SimilarityQueries.stagePqIndexScaled(spark, corpus))
-    val members = spark.table(pqTable).filter(col("kind") === "member")
-      .collect().map(r => r.getLong(4) -> r.getLong(2)).toMap
-    assert(members.size == 500, "pq index carries the full membership")
-
-    // fresh-process simulation, km2l stage absent: its builder must ADOPT
-    // the pq index's member rows, not run a second three-level fit
-    PipelineQueries.resetStageCache()
-    spark.sql(s"DROP TABLE IF EXISTS $kmTable")
-    val loc = java.nio.file.Paths.get(java.net.URI.create(
-      spark.conf.get("spark.sql.warehouse.dir")).getPath, kmTable)
-    if (java.nio.file.Files.exists(loc)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(loc).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
-    val fitsBefore = SimilarityQueries.scaledFitsComputed
-    val asg = spark.table(SimilarityQueries.stageKmeansScaledAssign(spark, corpus))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(SimilarityQueries.scaledFitsComputed == fitsBefore,
-      "a valid PQ stage means the km2l build runs zero fits")
-    assert(asg == members, "adopted assignment is byte-identical to the index membership")
-    spark.sql(s"DROP TABLE IF EXISTS $kmTable")
-    spark.sql(s"DROP TABLE IF EXISTS $pqTable")
+      // fresh process, km2l stage absent: its builder must ADOPT the pq
+      // index's member rows, not run a second three-level fit
+      StagedTable.resetCache()
+      StagedTable.drop(spark, kmTable)
+      val fitsBefore = SimilarityQueries.scaledFitsComputed
+      val asg = spark.table(SimilarityQueries.stageKmeansScaledAssign(spark, corpus))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(SimilarityQueries.scaledFitsComputed == fitsBefore,
+        "a valid PQ stage means the km2l build runs zero fits")
+      assert(asg == members, "adopted assignment is byte-identical to the index membership")
+    } finally Seq(kmTable, pqTable).foreach(StagedTable.drop(spark, _))
   }
 }

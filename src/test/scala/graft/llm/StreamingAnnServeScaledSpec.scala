@@ -23,7 +23,7 @@ class StreamingAnnServeScaledSpec extends SparkSpec {
   }
 
   private def dropScaledIndex(corpus: String): Unit =
-    spark.sql(s"DROP TABLE IF EXISTS graft_pqs_index_${math.abs(corpus.hashCode)}")
+    graft.core.StagedTable.drop(spark, s"graft_pqs_index_${math.abs(corpus.hashCode)}")
 
   test("annIndexStreamScaled: a streamed corpus member lands in exactly its a2 cell (three-way routing parity)") {
     import spark.implicits._

@@ -58,7 +58,7 @@ class StreamingAnnServeSpec extends SparkSpec {
     assert(got.map(_._1) == events.map(_.query_id).toSet,
       "every streamed query got its top-k")
     val table = "graft_pq_index_" + math.abs(corpus.hashCode).toString
-    spark.sql(s"DROP TABLE IF EXISTS $table")
+    graft.core.StagedTable.drop(spark, table)
   }
 
   test("an external query id colliding with a corpus vec_id does not drop that vector") {
@@ -107,7 +107,7 @@ class StreamingAnnServeSpec extends SparkSpec {
     assert(got.exists { case (qid, nid, _) => qid == victim._1 && nid == victim._1 },
       s"colliding-id query lost its own corpus vector: $got")
     val table = "graft_pq_index_" + math.abs(corpus.hashCode).toString
-    spark.sql(s"DROP TABLE IF EXISTS $table")
+    graft.core.StagedTable.drop(spark, table)
   }
 
   test("annIndexStream: exactly-once cell-partitioned delta across an injected failure, batch-identical routing") {
@@ -196,7 +196,7 @@ class StreamingAnnServeSpec extends SparkSpec {
     // ...and it actually discriminates (the corpus has 10 label cells)
     assert(got.map(_._2).toSet.size > 1, s"cells used: ${got.map(_._2).toSet}")
     val ptable = "graft_pq_index_" + math.abs(corpus.hashCode).toString
-    spark.sql(s"DROP TABLE IF EXISTS $ptable")
+    graft.core.StagedTable.drop(spark, ptable)
   }
 
   test("dirHasDataFiles: the empty-delta steady state is decided by FS metadata, not a Spark job (VERDICT r7 #6)") {
@@ -286,7 +286,7 @@ class StreamingAnnServeSpec extends SparkSpec {
       results2.asScala.map(t => (t._1, t._2, t._3)).toSet,
       "missing delta dir must serve base-identically")
     Seq("graft_pq_index_", "graft_ivf_cent_").foreach { p =>
-      spark.sql(s"DROP TABLE IF EXISTS $p${math.abs(corpus.hashCode)}")
+      graft.core.StagedTable.drop(spark, s"$p${math.abs(corpus.hashCode)}")
     }
   }
 }
