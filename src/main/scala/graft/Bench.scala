@@ -226,7 +226,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", DefaultSfDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val cpus = graft.core.GraftSession.cores
     // optional positional args: run only the named queries (local iteration
     // aid — the driver passes none and gets the full suite)
     val only: Set[String] = args.toSet

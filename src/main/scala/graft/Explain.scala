@@ -123,7 +123,7 @@ object Explain {
     "tx_vocab" -> 1)
 
   def main(args: Array[String]): Unit = {
-    val spark = graft.core.GraftSession.builder(8, "graft-explain").getOrCreate()
+    val spark = graft.core.GraftSession.builder(graft.core.GraftSession.cores, "graft-explain").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")

@@ -13,12 +13,12 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir, only) = (args(0), args(1), args.drop(2).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.core.GraftSession.builder(cpus.toInt, "graft-verify").getOrCreate()
+    val cpus = graft.core.GraftSession.cores
+    val spark = graft.core.GraftSession.builder(cpus, "graft-verify").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // input-derived shuffle partitions (no-op at the driver SFs; the point
     // is that a big-slice verify never needs a hand lever — VERDICT r7 #3)
-    graft.core.GraftSession.autoTuneShuffle(spark, sfDir, cpus.toInt)
+    graft.core.GraftSession.autoTuneShuffle(spark, sfDir, cpus)
     new java.io.File(outDir).mkdirs()
     val selected =
       if (only.isEmpty) SparkEntry.queries

@@ -2,14 +2,24 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
+import graft.functions.GraftExtensions
+
 /** Session factory — the engine's `StreamExecutionEnvironment` analog
   * (SURVEY.md §3). Local mode for tests/bench; on a cluster only
   * master/memory change, the SQL confs hold.
   */
 object GraftSession {
 
-  def builder(cores: Int = 32, appName: String = "graft"): SparkSession.Builder =
+  /** Cores of a local session: the `SPARK_GRAFT_CPUS` deployment setting,
+    * else every processor the JVM sees. */
+  def cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** Every session it builds, and every streaming clone of one, resolves
+    * the engine's SQL functions from birth ([[GraftExtensions]]). */
+  def builder(cores: Int, appName: String = "graft"): SparkSession.Builder =
     SparkSession.builder()
+      .withExtensions(new GraftExtensions)
       // spark-submit on a real cluster injects spark.master; only default
       // to local[n] when nothing did (hardcoding .master() would silently
       // turn a cluster deploy into a single-JVM run)
@@ -37,8 +47,6 @@ object GraftSession {
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       // checkpoint cadence parity with the reference's 10s checkpoints is a
       // trigger setting per query, not a session conf
-
-  def get(cores: Int = 32): SparkSession = builder(cores).getOrCreate()
 
   /** Parquet-compressed input bytes per shuffle partition. 32 MiB of
     * parquet decompresses to ≈128 MiB of row data at the ~4× ratio these

@@ -64,7 +64,6 @@ object StagedTable {
 
   /** `<docs|vecs>=<row count>;xor=<content xor>` of `input` over corpus `d`. */
   private def contentTerm(s: SparkSession, input: Input, d: String): String = {
-    graft.functions.GraftFunctions.register(s)
     val r = Tables.load(s, d, input.table).agg(count(lit(1)),
       expr(s"coalesce(bit_xor(md5_long60(concat(${input.row}))), 0L)")).head()
     s"${input.key}=${r.getLong(0)};xor=${r.getLong(1)}"

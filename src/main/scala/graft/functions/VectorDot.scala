@@ -1,8 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import scala.reflect.ClassTag
+
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
@@ -111,16 +114,13 @@ case class VectorL2Q(left: Expression, right: Expression)
 }
 
 object GraftFunctions {
-  private val vectorDotInfo = new ExpressionInfo(
-    classOf[VectorDot].getName, null, "vector_dot",
-    "vector_dot(a, b) - dot product of two DOUBLE arrays (codegen'd)", "")
 
   /** Resolution-time extraction of a foldable, non-null integer literal
     * argument. The registry builders run during analysis, so a column or
     * NULL argument must surface as an AnalysisException naming the
     * function — not as the bare NullPointerException/ClassCastException
     * that `exprs(1).eval().asInstanceOf[Number]` produced. */
-  private[functions] def literalIntArg(fn: String, param: String,
+  private def literalIntArg(fn: String, param: String,
       e: Expression): Long = {
     if (!e.foldable)
       throw new org.apache.spark.sql.AnalysisException("NON_FOLDABLE_ARGUMENT",
@@ -139,111 +139,50 @@ object GraftFunctions {
     }
   }
 
-  /** Idempotently register the engine's SQL functions on a session. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vector_dot", exprs => VectorDot(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vector_l2q", exprs => VectorL2Q(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "md5_long60", exprs => Md5Long(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_hash", exprs =>
-        RollingHash(exprs(0), literalIntArg("rolling_hash", "window", exprs(1)).toInt), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sigs", exprs => MinHashSigs(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash_sig", exprs => SimHashSig(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hash_hist", exprs => HashHist(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "md5_grams", exprs =>
-        Md5Grams(exprs(0), literalIntArg("md5_grams", "n", exprs(1)).toInt), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "winnow", exprs =>
-        Winnow(exprs(0), literalIntArg("winnow", "window", exprs(1)).toInt), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vector_quantize", exprs =>
-        VectorQuantize(exprs(0), literalIntArg("vector_quantize", "scale", exprs(1))), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect_count",
-      exprs => SortedIntersectCount(exprs(0), exprs(1)), "built-in")
+  private def fn[E <: Expression: ClassTag](name: String)(build: FunctionBuilder)
+      : (FunctionIdentifier, ExpressionInfo, FunctionBuilder) =
+    (FunctionIdentifier(name),
+      new ExpressionInfo(implicitly[ClassTag[E]].runtimeClass.getName, null, name), build)
+
+  /** The engine's SQL functions, one entry each: what [[GraftExtensions]]
+    * injects into a session at birth and what [[register]] installs on a
+    * foreign one. */
+  val table: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
+    fn[VectorDot]("vector_dot")(e => VectorDot(e(0), e(1))),
+    fn[VectorL2Q]("vector_l2q")(e => VectorL2Q(e(0), e(1))),
+    fn[Md5Long]("md5_long60")(e => Md5Long(e.head)),
+    fn[RollingHash]("rolling_hash")(e =>
+      RollingHash(e(0), literalIntArg("rolling_hash", "window", e(1)).toInt)),
+    fn[MinHashSigs]("minhash_sigs")(e => MinHashSigs(e.head)),
+    fn[SimHashSig]("simhash_sig")(e => SimHashSig(e.head)),
+    fn[HashHist]("hash_hist")(e => HashHist(e.head)),
+    fn[Md5Grams]("md5_grams")(e => Md5Grams(e(0), literalIntArg("md5_grams", "n", e(1)).toInt)),
+    fn[Winnow]("winnow")(e => Winnow(e(0), literalIntArg("winnow", "window", e(1)).toInt)),
+    fn[VectorQuantize]("vector_quantize")(e =>
+      VectorQuantize(e(0), literalIntArg("vector_quantize", "scale", e(1)))),
+    fn[SortedIntersectCount]("sorted_intersect_count")(e => SortedIntersectCount(e(0), e(1))),
     // Spark ships BloomFilterMightContain for its own runtime filters but
     // does not expose it in SQL; the builder makes the bloom PREFILTER
     // pattern (tx_decontam_bloom) expressible without a UDF. Arg 0 must be
     // a foldable BINARY (a serialized util.sketch.BloomFilter), arg 1 the
     // LONG probe value — putLong/mightContainLong symmetry with
     // DataFrameStatFunctions.bloomFilter.
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_might_contain",
-      exprs => org.apache.spark.sql.catalyst.expressions
-        .BloomFilterMightContain(exprs(0), exprs(1)), "built-in")
+    fn[BloomFilterMightContain]("bloom_might_contain")(e => BloomFilterMightContain(e(0), e(1))))
+
+  /** Install on a session built outside [[graft.core.GraftSession]] the
+    * functions it lacks; a name the session already resolves is left as it
+    * is, so this replaces nothing. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    for ((name, info, build) <- table if !registry.functionExists(name))
+      registry.registerFunction(name, info, build)
   }
 }
 
-/** `--conf spark.sql.extensions=graft.functions.GraftExtensions` for
-  * cluster deployments: injects the function into every session without a
-  * register() call. */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("vector_dot"),
-      new ExpressionInfo(classOf[VectorDot].getName, null, "vector_dot"),
-      (exprs: Seq[Expression]) => VectorDot(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("vector_l2q"),
-      new ExpressionInfo(classOf[VectorL2Q].getName, null, "vector_l2q"),
-      (exprs: Seq[Expression]) => VectorL2Q(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("md5_long60"),
-      new ExpressionInfo(classOf[Md5Long].getName, null, "md5_long60"),
-      (exprs: Seq[Expression]) => Md5Long(exprs.head)))
-    // same literal-window-arg builder as GraftFunctions.register — the two
-    // registration paths must stay equivalent or a cluster deploy relying on
-    // spark.sql.extensions loses the dedup/fingerprint queries
-    ext.injectFunction((
-      FunctionIdentifier("rolling_hash"),
-      new ExpressionInfo(classOf[RollingHash].getName, null, "rolling_hash"),
-      (exprs: Seq[Expression]) =>
-        RollingHash(exprs(0), GraftFunctions.literalIntArg("rolling_hash", "window", exprs(1)).toInt)))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_sigs"),
-      new ExpressionInfo(classOf[MinHashSigs].getName, null, "minhash_sigs"),
-      (exprs: Seq[Expression]) => MinHashSigs(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("simhash_sig"),
-      new ExpressionInfo(classOf[SimHashSig].getName, null, "simhash_sig"),
-      (exprs: Seq[Expression]) => SimHashSig(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("hash_hist"),
-      new ExpressionInfo(classOf[HashHist].getName, null, "hash_hist"),
-      (exprs: Seq[Expression]) => HashHist(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("md5_grams"),
-      new ExpressionInfo(classOf[Md5Grams].getName, null, "md5_grams"),
-      (exprs: Seq[Expression]) =>
-        Md5Grams(exprs(0), GraftFunctions.literalIntArg("md5_grams", "n", exprs(1)).toInt)))
-    ext.injectFunction((
-      FunctionIdentifier("winnow"),
-      new ExpressionInfo(classOf[Winnow].getName, null, "winnow"),
-      (exprs: Seq[Expression]) =>
-        Winnow(exprs(0), GraftFunctions.literalIntArg("winnow", "window", exprs(1)).toInt)))
-    ext.injectFunction((
-      FunctionIdentifier("vector_quantize"),
-      new ExpressionInfo(classOf[VectorQuantize].getName, null, "vector_quantize"),
-      (exprs: Seq[Expression]) =>
-        VectorQuantize(exprs(0), GraftFunctions.literalIntArg("vector_quantize", "scale", exprs(1)))))
-    ext.injectFunction((
-      FunctionIdentifier("sorted_intersect_count"),
-      new ExpressionInfo(classOf[SortedIntersectCount].getName, null,
-        "sorted_intersect_count"),
-      (exprs: Seq[Expression]) => SortedIntersectCount(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("bloom_might_contain"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        null, "bloom_might_contain"),
-      (exprs: Seq[Expression]) => org.apache.spark.sql.catalyst.expressions
-        .BloomFilterMightContain(exprs(0), exprs(1))))
-  }
+/** Injects [[GraftFunctions.table]] into every session built with it:
+  * [[graft.core.GraftSession]] adds it, and a foreign deployment passes
+  * `--conf spark.sql.extensions=graft.functions.GraftExtensions`. */
+class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.table.foreach(ext.injectFunction)
 }

@@ -127,7 +127,6 @@ object DedupQueries {
     * `private[llm]` so the planted-pair recall spec can drive the real
     * signature + LSH chain with synthetic near-dups. */
   private[llm] def minhashSigs(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
       .filter(length(col("text")) >= shingleLen)
       .withColumn("sigs", expr(s"minhash_sigs(rolling_hash(text, $shingleLen))"))
@@ -337,7 +336,6 @@ object DedupQueries {
     // already... not needed")
     val candIds = cand.select(col("d1").as("doc_id"))
       .union(cand.select(col("d2").as("doc_id")))
-    graft.functions.GraftFunctions.register(s)
     // DISTINCT gram-set array per candidate doc, SORTED once per doc so
     // the per-pair intersection below is an allocation-free merge walk
     // (sorted_intersect_count) instead of a per-row hash set — the
@@ -797,7 +795,6 @@ object DedupQueries {
       // row-local simhash_sig projection: all 32 bit-weight sums + sign
       // packing fold over the rolling-hash array in one codegen'd loop —
       // no gram explode, no 32-aggregate groupBy, zero shuffle to here
-      graft.functions.GraftFunctions.register(s)
       simhashPairs(Tables.documents(s, d)).orderBy("d1", "d2")
     },
 
@@ -833,7 +830,6 @@ object DedupQueries {
     // small side — AQE broadcasts); the hash gate is a row-local codegen
     // projection. No new shuffle beyond the cluster chain itself.
     Q("dd_split", splitOracle) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       splitDF(s, d).orderBy("doc_id")
     },
 
@@ -852,7 +848,6 @@ object DedupQueries {
          |SELECT CAST(t.thr AS BIGINT) AS thr_pct, CAST(count(j.d1) AS BIGINT) AS n_pairs
          |FROM t LEFT JOIN jac j ON j.jaccard >= t.thr / 100.0
          |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       import s.implicits._
       // literal frame (LocalTableScan) — provably constant to the plan
       // audit, so the 5×pairs theta join needs no BNLJ declaration
@@ -1037,7 +1032,6 @@ object DedupQueries {
     * flags against the existing corpus and the combined keep bit —
     * UNORDERED (callers sort or join as needed). */
   private[llm] def incrementalKeepDF(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val docs = Tables.documents(s, d)
     val bandt = simhashBands(docs)
     val nearIds = bandt.filter(col("doc_id") % 3 =!= 0).as("y")

@@ -18,8 +18,7 @@ object LlmHash {
   val P = 1000000007L
 
   /** Spark SQL fragment: fold md5(e) to a positive 60-bit BIGINT via the
-    * codegen'd [[graft.functions.Md5Long]] (no hex-string round-trip; call
-    * sites must have run `GraftFunctions.register` on the session). The
+    * codegen'd [[graft.functions.Md5Long]] (no hex-string round-trip). The
     * composed built-in form `cast(conv(substring(md5(e),1,15),16,10) as
     * bigint)` is bit-identical, just ~2x slower in the gram hot loop. */
   def sparkH(e: String): String = s"md5_long60($e)"

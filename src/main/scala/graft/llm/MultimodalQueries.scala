@@ -53,7 +53,6 @@ object MultimodalQueries {
          |  md5(concat(checksum, ':', CAST(fi AS VARCHAR))) AS frame_sig
          |FROM m, unnest(generate_series(0, n_frames - 1, $frameStep)) AS t(fi)
          |ORDER BY doc_id, frame_idx""".stripMargin) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val b = Tables.documents(s, d)
         // payload: the real binary column an ingest pipeline would carry
         .withColumn("payload", expr("encode(text, 'UTF-8')"))
@@ -137,7 +136,6 @@ object MultimodalQueries {
          |GROUP BY doc_id, w, ht
          |ORDER BY doc_id""".stripMargin) { (s, d) =>
       import s.implicits._
-      graft.functions.GraftFunctions.register(s)
       val spec = Tables.documents(s, d)
         .select(col("doc_id"), md5(col("text")).as("checksum"))
         .withColumn("h", expr(sparkH("checksum")))
@@ -186,7 +184,6 @@ object MultimodalQueries {
          |GROUP BY doc_id, ff.f, w, ht
          |ORDER BY doc_id, frame_idx""".stripMargin) { (s, d) =>
       import s.implicits._
-      graft.functions.GraftFunctions.register(s)
       val spec = Tables.documents(s, d)
         .select(col("doc_id"), md5(col("text")).as("checksum"))
         .withColumn("h", expr(sparkH("checksum")))
@@ -415,7 +412,6 @@ object MultimodalQueries {
          |ORDER BY doc_id""".stripMargin
     }) { (s, d) =>
       import s.implicits._
-      graft.functions.GraftFunctions.register(s)
       val spec = Tables.documents(s, d)
         .select(col("doc_id"), md5(col("text")).as("checksum"))
         .withColumn("h", expr(sparkH("checksum")))
@@ -596,7 +592,6 @@ object MultimodalQueries {
     }) { (s, d) =>
       import s.implicits._
       import org.apache.spark.sql.expressions.Window
-      graft.functions.GraftFunctions.register(s)
       val thr = Multimodal.SceneCutHamming
       val spec = Tables.documents(s, d)
         .select(col("doc_id"), md5(col("text")).as("checksum"))
@@ -687,7 +682,6 @@ object MultimodalQueries {
          |ORDER BY t.doc_id""".stripMargin
     }) { (s, d) =>
       import s.implicits._
-      graft.functions.GraftFunctions.register(s)
       val spec = Tables.documents(s, d)
         .select(col("doc_id"), md5(col("text")).as("checksum"))
         .withColumn("h", expr(sparkH("checksum")))
@@ -954,7 +948,6 @@ object MultimodalQueries {
   private def audioFpDF(s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val spec = Tables.documents(s, d)
       .select(col("doc_id"), md5(col("text")).as("checksum"))
       .withColumn("h", expr(sparkH("checksum")))
@@ -1094,7 +1087,6 @@ object MultimodalQueries {
   private def gifHashesDF(s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val spec = Tables.documents(s, d)
       .select(col("doc_id"), md5(col("text")).as("checksum"))
       .withColumn("h", expr(sparkH("checksum")))
@@ -1114,7 +1106,6 @@ object MultimodalQueries {
   private def phashDF(s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val spec = Tables.documents(s, d)
       .select(col("doc_id"), md5(col("text")).as("checksum"))
       .withColumn("h", expr(sparkH("checksum")))

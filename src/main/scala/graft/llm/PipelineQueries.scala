@@ -188,7 +188,6 @@ object PipelineQueries {
     // prep / audit all read the stage. Bucketed on doc_id, so the root
     // join needs no exchange on the cluster side.
     Q("dd_split_staged", DedupQueries.splitOracle) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       DedupQueries.splitFromClusters(
           graft.core.Tables.documents(s, d), s.table(stageClusters(s, d)))
         .orderBy("doc_id")

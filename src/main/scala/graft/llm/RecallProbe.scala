@@ -20,10 +20,8 @@ object RecallProbe {
         val p = a.split(":"); (p(0).toInt, p(1).toInt, p(2).toInt)
       }
       else Seq((4, 4, 10), (4, 4, 14), (4, 6, 14), (4, 6, 18), (6, 8, 18), (4, 8, 22))
-    val s = graft.core.GraftSession.builder(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt, "recall").getOrCreate()
+    val s = graft.core.GraftSession.builder(graft.core.GraftSession.cores, "recall").getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(s)
     import SimilarityQueries.{querySel, knnK, kmScale}
 
     // exact top-3 for the sampled queries, computed ONCE and collected —

@@ -400,7 +400,6 @@ object SimilarityQueries {
   private[llm] def kmeansScaledLayer(s: org.apache.spark.sql.SparkSession, d: String)
       : ScaledFit = {
     scaledFitsComputed += 1
-    graft.functions.GraftFunctions.register(s)
     val n = Tables.embeddings(s, d).count()
     val k = math.max(8L, n / cellTarget)
     val kcc = kccOf(k)
@@ -582,7 +581,6 @@ object SimilarityQueries {
   private def kmeansLayerFull(s: org.apache.spark.sql.SparkSession, d: String,
       k: Long = kmK.toLong)
       : (DataFrame, DataFrame, DataFrame) = {
-    graft.functions.GraftFunctions.register(s)
     val xq = Tables.embeddings(s, d)
       .select(col("vec_id"),
         expr(s"vector_quantize(embedding, $kmScale)").as("xq")) // codegen: no per-element lambda on the corpus scan
@@ -865,8 +863,7 @@ object SimilarityQueries {
     * [[outScale]] grid ([[cellDistDF]]'s contract), then every vector's
     * a (own centroid) / b (nearest other centroid) quantized-integer
     * distances in ONE row-local projection against the broadcast k×d
-    * centroid table, folded map-side to k report rows. Requires
-    * `GraftFunctions.register`. */
+    * centroid table, folded map-side to k report rows. */
   private[llm] def silhouetteDF(emb: DataFrame): DataFrame = {
     val xq = emb.select(col("vec_id"), col("label"),
       expr(s"vector_quantize(embedding, $outScale)").as("xq"))
@@ -894,7 +891,6 @@ object SimilarityQueries {
   }
 
   private def cellDistDF(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val xq = Tables.embeddings(s, d)
       .select(col("vec_id"), col("label"),
         expr(s"vector_quantize(embedding, $outScale)").as("xq"))
@@ -914,7 +910,6 @@ object SimilarityQueries {
     * UNORDERED — callers sort. The pair join is hash-partitioned on the
     * cell label, never all-pairs. */
   private def knnGraphDF(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val xq = Tables.embeddings(s, d)
       .select(col("vec_id"), col("label"),
         expr(s"vector_quantize(embedding, $pqScale)").as("xq"))
@@ -1111,7 +1106,6 @@ object SimilarityQueries {
 
   /** (vec_id, v DOUBLE[], nrm) */
   private def vectors(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .withColumn("nrm", expr(s"sqrt(${sparkDot("v", "v")})"))
@@ -1153,7 +1147,6 @@ object SimilarityQueries {
   private def ivfLayer(s: org.apache.spark.sql.SparkSession,
       d: String, nprobe: Int = 1,
       centOpt: Option[DataFrame] = None): (DataFrame, DataFrame) = {
-    graft.functions.GraftFunctions.register(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>").as("v"))
@@ -1253,8 +1246,7 @@ object SimilarityQueries {
   }
 
   /** SemDeDup body over any (vec_id, embedding, label) frame — factored so
-    * specs can drive it with synthetic cells. Requires GraftFunctions
-    * registered on the session. */
+    * specs can drive it with synthetic cells. */
   private[llm] def semDedupDF(emb: DataFrame): DataFrame = {
     val n = emb
       .select(col("vec_id"), col("label").cast("long").as("cell"),
@@ -1499,7 +1491,6 @@ object SimilarityQueries {
          |  coalesce(k.keeper_id, -1) AS keeper_id
          |FROM n LEFT JOIN k ON k.vec_id = n.vec_id
          |ORDER BY n.vec_id""".stripMargin) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       semDedupDF(Tables.embeddings(s, d))
     },
 
@@ -1563,7 +1554,6 @@ object SimilarityQueries {
     // layered routing, the LUT, and the probed cell's ADC run. Same
     // oracle — the staged index IS the computed one by fingerprint.
     Q("sim_ivfpq_scaled_staged", pqScaledOracle) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val idx = s.table(stagePqIndexScaled(s, d))
       val (cb, codes, members, sseeds, pf, pg) = scaledIndexFrames(idx)
       val queries = Tables.embeddings(s, d).filter(expr(querySel))
@@ -1581,7 +1571,6 @@ object SimilarityQueries {
     // audit's number) instead of ONE cell's; the exact pass costs |Q|·C
     // distances — the sim_twostage prune-first shape on an IVF-PQ route.
     Q("sim_ivfpq_scaled_rerank", pqScaledRerankOracle) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val idx = s.table(stagePqIndexScaled(s, d))
       val (cb, codes, members, sseeds, pf, pg) = scaledIndexFrames(idx)
       val xqC = Tables.embeddings(s, d)
@@ -1628,7 +1617,6 @@ object SimilarityQueries {
          |QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY fdist, neighbor_id) <= $topK
          |ORDER BY query_id, neighbor_id""".stripMargin
     }) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val xq = Tables.embeddings(s, d)
         .select(col("vec_id"),
           expr(s"vector_quantize(embedding, $pqScale)").as("xq"))
@@ -1759,7 +1747,6 @@ object SimilarityQueries {
          |FROM cent a JOIN cent b ON b.label = a.label AND a.slice = 0 AND b.slice = 1
          |ORDER BY cell""".stripMargin
     }) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val xq = Tables.embeddings(s, d)
         .select(col("vec_id"), col("label"), (col("vec_id") % 2).as("slice"),
           expr(s"vector_quantize(embedding, $pqScale)").as("xq"))
@@ -1891,7 +1878,6 @@ object SimilarityQueries {
          |FROM sil GROUP BY label
          |ORDER BY cell""".stripMargin
     }) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       silhouetteDF(Tables.embeddings(s, d)).orderBy("cell")
     },
 
@@ -2006,7 +1992,6 @@ object SimilarityQueries {
          |FROM qs q LEFT JOIN hit h ON h.vec_id = q.vec_id
          |ORDER BY query_id""".stripMargin
     }) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val xq = Tables.embeddings(s, d)
         .select(col("vec_id"), col("label"),
           expr(s"vector_quantize(embedding, $pqScale)").as("xq"))
@@ -2385,7 +2370,6 @@ object SimilarityQueries {
     // honest full price — the llm_corpus_prep/staged precedent.)
     Q("sim_components_kmeans_staged", kmComponentsOracle) { (s, d) =>
       val table = stageKmeansAssign(s, d)
-      graft.functions.GraftFunctions.register(s)
       val xq = Tables.embeddings(s, d)
         .select(col("vec_id"), expr(s"vector_quantize(embedding, $kmScale)").as("xq"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -2439,7 +2423,6 @@ object SimilarityQueries {
     // chain is deterministic, so the staged assignment IS the computed one.
     Q("sim_components_kmeans_scaled_staged", kmComponentsScaledOracle) { (s, d) =>
       val table = stageKmeansScaledAssign(s, d)
-      graft.functions.GraftFunctions.register(s)
       val xq = Tables.embeddings(s, d)
         .select(col("vec_id"), expr(s"vector_quantize(embedding, $kmScale)").as("xq"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -2492,7 +2475,6 @@ object SimilarityQueries {
          |FROM qs q LEFT JOIN hit h ON h.vec_id = q.vec_id
          |ORDER BY query_id""".stripMargin
     }) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val gt = multiprobeKnnScaledDF(s, d).filter(expr(querySel))
         .select("vec_id", "neighbor_id")
       val xq = Tables.embeddings(s, d)
@@ -2537,7 +2519,6 @@ object SimilarityQueries {
          |FROM s
          |QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) <= $topK
          |ORDER BY query_id, neighbor_id""".stripMargin) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       hardNegativesDF(Tables.embeddings(s, d)).orderBy("query_id", "neighbor_id")
     },
 
@@ -2568,7 +2549,6 @@ object SimilarityQueries {
          |FROM capped
          |QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) <= $topK
          |ORDER BY query_id, neighbor_id""".stripMargin) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       diverseTopkDF(Tables.embeddings(s, d)).orderBy("query_id", "neighbor_id")
     },
     // Recall@k CURVE for the sign-LSH ANN route (the dd_threshold_curve
@@ -2615,7 +2595,6 @@ object SimilarityQueries {
          |FROM p JOIN ks ON p.rn_e <= ks.k
          |GROUP BY k ORDER BY k""".stripMargin
     }) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val n = vectors(s, d).withColumn("bucket", expr(bucketSparkExpr))
       val q = n.filter(expr(querySel))
         .select(col("vec_id").as("query_id"), col("v").as("qv"),
@@ -2829,7 +2808,6 @@ object SimilarityQueries {
     * scan. */
   private def pqFrames(s: org.apache.spark.sql.SparkSession, d: String,
       persist: Boolean = true): (DataFrame, DataFrame) = {
-    graft.functions.GraftFunctions.register(s)
     def pin(df: DataFrame): DataFrame =
       if (persist) df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else df
@@ -3039,7 +3017,6 @@ object SimilarityQueries {
       queries: DataFrame, selfExclude: Boolean,
       delta: Option[DataFrame] = None,
       hintQueryBroadcast: Boolean = true): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // |Q|-proportional hint gating — same rule as the wide tier (ADVICE r9)
     def bcq(df: DataFrame): DataFrame = if (hintQueryBroadcast) broadcast(df) else df
     // Serving needs only the corpus's (vec_id, cell-label) membership — a
@@ -3119,7 +3096,6 @@ object SimilarityQueries {
       queries: DataFrame, selfExclude: Boolean,
       delta: Option[DataFrame] = None,
       hintQueryBroadcast: Boolean = true): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // |Q|-proportional hint gating — same rule as the wide tier (ADVICE r9)
     def bcq(df: DataFrame): DataFrame = if (hintQueryBroadcast) broadcast(df) else df
     // the two quantization constants must agree for the scaled index: the
@@ -3181,7 +3157,6 @@ object SimilarityQueries {
       nprobe: Int = mpScaledNprobe,
       delta: Option[DataFrame] = None,
       hintQueryBroadcast: Boolean = true): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     require(pqScale == kmScale, "scaled IVF-PQ requires pqScale == kmScale")
     // ADVICE r9: route (|Q|*nprobe rows), lut (|Q|*M*K rows) and the
     // queries frame scale with |Q| — the streaming serve's micro-batch |Q|
@@ -3307,8 +3282,7 @@ object SimilarityQueries {
       .select(col("cid").as("gid"), col("vec_id").as("sid"), col("carr").as("garr")))
 
   /** sim_hard_negatives body over any (vec_id, embedding, label) frame —
-    * factored so the planted-negative spec drives the real chain. Requires
-    * GraftFunctions registered. */
+    * factored so the planted-negative spec drives the real chain. */
   private[llm] def hardNegativesDF(emb: DataFrame): DataFrame = {
     val n = emb
       .select(col("vec_id"), col("label"),
@@ -3329,8 +3303,7 @@ object SimilarityQueries {
   }
 
   /** sim_diverse_topk body over any (vec_id, embedding, label) frame —
-    * factored so the cap spec drives the real two-rank chain. Requires
-    * GraftFunctions registered. */
+    * factored so the cap spec drives the real two-rank chain. */
   private[llm] def diverseTopkDF(emb: DataFrame): DataFrame = {
     val n = emb
       .select(col("vec_id"), col("label"),

@@ -37,7 +37,6 @@ object StreamingAnnServe {
       checkpoint: Option[String] = None)
       (sink: DataFrame => Unit): StreamingQuery = {
     val s = queries.sparkSession
-    graft.functions.GraftFunctions.register(s)
     val w0 = queries.toDF().writeStream.outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val idx = s.table(SimilarityQueries.stagePqIndex(s, corpusDir))
@@ -69,7 +68,6 @@ object StreamingAnnServe {
       checkpoint: Option[String] = None)
       (sink: DataFrame => Unit): StreamingQuery = {
     val s = queries.sparkSession
-    graft.functions.GraftFunctions.register(s)
     // The empty-delta steady state must not pay a Spark job per micro-batch
     // just to learn the delta is still empty: probe with a driver-side FS
     // listing (a metadata op, no job), and MEMOIZE once non-empty — a delta
@@ -148,7 +146,6 @@ object StreamingAnnServe {
   def annIndexStream(vecs: Dataset[VecEvent], corpusDir: String, outDir: String,
       checkpoint: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     val s = vecs.sparkSession
-    graft.functions.GraftFunctions.register(s)
     val ccent = s.table(SimilarityQueries.stagePqIndex(s, corpusDir))
       .filter(col("kind") === "ccent").select("label", "carr")
     routeToCells(vecs.toDF(), ccent)
@@ -193,7 +190,6 @@ object StreamingAnnServe {
       outDir: String, checkpoint: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     val s = vecs.sparkSession
-    graft.functions.GraftFunctions.register(s)
     val (_, _, _, sseeds, pf, pg) = SimilarityQueries.scaledIndexFrames(
       s.table(SimilarityQueries.stagePqIndexScaled(s, corpusDir)))
     routeToCellsScaled(vecs.toDF(), sseeds, pf, pg)
@@ -280,7 +276,6 @@ object StreamingAnnServe {
       checkpoint: Option[String] = None)
       (sink: DataFrame => Unit): StreamingQuery = {
     val s = queries.sparkSession
-    graft.functions.GraftFunctions.register(s)
     var deltaSeen = false
     val w0 = queries.toDF().writeStream.outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -319,7 +314,6 @@ object StreamingAnnServe {
       checkpoint: Option[String] = None)
       (sink: DataFrame => Unit): StreamingQuery = {
     val s = queries.sparkSession
-    graft.functions.GraftFunctions.register(s)
     var deltaSeen = false
     val w0 = queries.toDF().writeStream.outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>

@@ -174,7 +174,6 @@ object StreamingCorpusPrep {
   def decontamStream(docs: Dataset[DocEvent], bloomBytes: Array[Byte],
       gram: Int = 4): DataFrame = {
     val spark = docs.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     // function name derives from the bloom's content: two concurrent
     // streams gating on different eval suites in one session must not
     // fight over a shared registry slot
@@ -215,7 +214,6 @@ object StreamingCorpusPrep {
     * scores exactly 0. Docs under 3 tokens score 0 over 0 grams. */
   def noveltyStream(docs: Dataset[DocEvent], bloomBytes: Array[Byte]): DataFrame = {
     val spark = docs.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     val probeFn = "graft_stream_novelty_probe_" +
       (java.util.Arrays.hashCode(bloomBytes) & Int.MaxValue)
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
@@ -255,7 +253,6 @@ object StreamingCorpusPrep {
     * explode_outer/coalesce path like the batch left join. */
   def dsirScoreStream(docs: Dataset[LangDocEvent], lr: DataFrame,
       delay: String = "10 seconds", window: String = "1 second"): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs.toDF()
       .withColumn("ts", timestamp_millis(col("timestamp")))
       .withWatermark("ts", delay)

@@ -47,7 +47,6 @@ object StreamingDedup {
     * the standard ingest-side guard in front of it. */
   def dedupNearStream(docs: Dataset[DocEvent], delay: String = "10 seconds",
       shingleLen: Int = 5): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs.toDF()
       .filter(length(col("text")) >= shingleLen)
       .withColumn("ts", timestamp_millis(col("timestamp")))
@@ -129,7 +128,6 @@ object StreamingDedup {
       shingleLen: Int = 5): Dataset[BandVerdict] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     // docs too short to shingle BYPASS the guard as automatic survivors
     // (band -1, no state touched) — an ingest guard must not silently DROP
     // data it cannot judge. (dedupNearStream's filter-out is that older

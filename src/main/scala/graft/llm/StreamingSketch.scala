@@ -113,7 +113,6 @@ object StreamingSketch {
   def kmvStream(docs: Dataset[DocEvent], k: Int = 16, shards: Int = 4): Dataset[KmvRow] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val hashes = docs.toDF()
       .select(explode(expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)")).as("token"))
       .select(expr("md5_long60(concat('kmv:', token))").as("h"))

@@ -374,7 +374,7 @@ object TextQueries {
 
   /** tx_source_cap body over any (doc_id, source) frame — factored so the
     * skew spec can prove two-level == direct-window on a synthetic
-    * mega-source. Requires GraftFunctions registered. */
+    * mega-source. */
   private[llm] def sourceCapDF(docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     val h = sparkH("concat('cap:', cast(doc_id as string))")
@@ -718,7 +718,6 @@ object TextQueries {
       // at |docs × distinct-bigrams-per-doc| rows, the model aggregates
       // FROM those counts, and the scoring join runs at the aggregated
       // level with the alphabet²-sized model AQE-broadcast
-      graft.functions.GraftFunctions.register(s)
       val dc = Tables.documents(s, d)
         .filter(length(col("text")) >= 2)
         .select(col("doc_id"),
@@ -788,7 +787,6 @@ object TextQueries {
       // row (monotonic deque, O(grams)); the query is a pure projection —
       // the former explode + per-doc window + distinct shape moved every
       // (doc, pos, hash) row through a sort to compute this
-      graft.functions.GraftFunctions.register(s)
       Tables.documents(s, d)
         .filter(length(col("text")) >= 8)
         .select(col("doc_id"),
@@ -816,7 +814,6 @@ object TextQueries {
          |FROM fps f JOIN sh ON sh.fp = f.fp
          |GROUP BY f.doc_id
          |ORDER BY f.doc_id""".stripMargin) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val fps = Tables.documents(s, d)
         .filter(length(col("text")) >= 8)
         .select(col("doc_id"),
@@ -868,7 +865,6 @@ object TextQueries {
          |FROM pr JOIN sz ON sz.doc_id = pr.contained_doc
          |WHERE pr.n_shared >= 2 AND 5 * pr.n_shared >= 4 * sz.n_fp
          |ORDER BY contained_doc, container_doc""".stripMargin) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val fps = Tables.documents(s, d)
         .filter(length(col("text")) >= 8)
         .select(col("doc_id"),
@@ -928,7 +924,6 @@ object TextQueries {
          |WHERE d.doc_id % $evalMod <> 0
          |ORDER BY d.doc_id""".stripMargin
     }) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val tk = Tables.documents(s, d)
         .select(col("doc_id"), expr(s"regexp_extract_all(lower(text), '$tokRegex', 0)").as("toks"))
       // explode positions then hash in a codegen'd projection (array-lambda
@@ -1003,7 +998,6 @@ object TextQueries {
          |WHERE d.doc_id % $evalMod = 0
          |ORDER BY d.doc_id""".stripMargin
     }) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val tk = Tables.documents(s, d)
         .select(col("doc_id"), expr(s"regexp_extract_all(lower(text), '$tokRegex', 0)").as("toks"))
       def grams(df: org.apache.spark.sql.DataFrame) = df
@@ -1064,7 +1058,6 @@ object TextQueries {
          |FROM cg JOIN eg USING (gh)
          |GROUP BY cg.doc_id ORDER BY cg.doc_id""".stripMargin
     }) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val tk = Tables.documents(s, d)
         .select(col("doc_id"), expr(s"regexp_extract_all(lower(text), '$tokRegex', 0)").as("toks"))
       def grams(df: org.apache.spark.sql.DataFrame) = df
@@ -1078,18 +1071,12 @@ object TextQueries {
       // benchmark-sized build: fixed 1% fpp bloom over the eval grams
       val bloom = eg.stat.bloomFilter("gh", bloomExpected, 0.01)
       val bytes = { val b = new java.io.ByteArrayOutputStream(); bloom.writeTo(b); b.toByteArray }
-      // probe function closing over the serialized bloom as a BINARY
-      // literal — foldable, so BloomFilterMightContain accepts it and the
-      // probe rides the corpus scan's projection (no join, no shuffle)
-      s.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_bloom_probe",
-        exprs => org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-          org.apache.spark.sql.catalyst.expressions.Literal(
-            bytes, org.apache.spark.sql.types.BinaryType),
-          exprs.head),
-        "built-in")
+      // the serialized bloom rides as a BINARY literal — foldable, so
+      // BloomFilterMightContain accepts it and the probe rides the corpus
+      // scan's projection (no join, no shuffle)
       grams(tk.filter(col("doc_id") % evalMod =!= 0))
-        .filter(expr("graft_bloom_probe(gh)")) // cheap prefilter, ~99% of grams exit here
+        // cheap prefilter, ~99% of grams exit here
+        .filter(call_function("bloom_might_contain", lit(bytes), col("gh")))
         .join(eg, Seq("gh"), "left_semi") // exact verify: false positives die
         .distinct() // per-doc DISTINCT gram count, on the tiny survivor set
         .groupBy("doc_id").agg(count(lit(1)).as("n_contam"))
@@ -1132,7 +1119,6 @@ object TextQueries {
          |LEFT JOIN r3 ON r3.doc_id = d.doc_id
          |ORDER BY d.doc_id""".stripMargin
     }) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val tk = Tables.documents(s, d)
         .select(col("doc_id"), expr(s"regexp_extract_all(lower(text), '$tokRegex', 0)").as("toks"))
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -1172,7 +1158,6 @@ object TextQueries {
          |WHERE $u < CASE lang WHEN 'en' THEN 200 WHEN 'zh' THEN 600 ELSE 400 END
          |ORDER BY doc_id""".stripMargin
     }) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val u = s"${sparkH("concat('smpl:', cast(doc_id as string))")} % 1000"
       Tables.documents(s, d)
         .withColumn("sample_key", expr(u))
@@ -1331,7 +1316,6 @@ object TextQueries {
          |SELECT doc_id, n AS n_chars, n_distinct,
          |  round(list_sum(list_transform(hist, c -> -(c * 1.0 / n) * log2(c * 1.0 / n))), 4) AS entropy
          |FROM h ORDER BY doc_id""".stripMargin) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       Tables.documents(s, d)
         .filter(length(col("text")) >= 1)
         .select(col("doc_id"),
@@ -1361,7 +1345,6 @@ object TextQueries {
          |QUALIFY cap_rank <= $srcCap
          |ORDER BY doc_id""".stripMargin
     }) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       sourceCapDF(Tables.documents(s, d)).orderBy("doc_id")
     },
 
@@ -1427,7 +1410,6 @@ object TextQueries {
     }) { (s, d) =>
       val langs = Seq("de", "en", "es", "fr", "zh")
       val docs = Tables.documents(s, d)
-      graft.functions.GraftFunctions.register(s)
       val g = docs
         .filter(length(col("text")) >= 3)
         .select(col("doc_id"),
@@ -1470,7 +1452,6 @@ object TextQueries {
          |  CAST(row_number() OVER (PARTITION BY k % $shufShards ORDER BY k, doc_id) AS BIGINT) AS pos
          |FROM keyed ORDER BY doc_id""".stripMargin
     }) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val keyed = Tables.documents(s, d)
         .select(col("doc_id"),
           expr(sparkH("concat('shuf:', cast(doc_id as string))")).as("k"))
@@ -1513,7 +1494,6 @@ object TextQueries {
          |FROM rk JOIN sz ON sz.source = rk.source CROSS JOIN tot
          |ORDER BY doc_id""".stripMargin
     }) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val keyed = Tables.documents(s, d)
         .select(col("doc_id"), col("source"),
           expr(sparkH("concat('il:', cast(doc_id as string))")).as("k"))
@@ -1758,7 +1738,6 @@ object TextQueries {
          |WHERE $u < nm.band
          |ORDER BY d.doc_id""".stripMargin
     }) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val tgt = "CASE lang WHEN 'de' THEN 250 WHEN 'en' THEN 350 WHEN 'es' THEN 200 WHEN 'fr' THEN 150 ELSE 50 END"
       val tl = Tables.documents(s, d)
         .groupBy("lang")
@@ -1888,7 +1867,6 @@ object TextQueries {
          |SELECT d.doc_id, d.lang, coalesce(sc.score_micro, CAST(0 AS BIGINT)) AS score_micro
          |FROM documents d LEFT JOIN sc ON sc.doc_id = d.doc_id
          |ORDER BY d.doc_id""".stripMargin) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       dsirScoreDF(Tables.documents(s, d)).orderBy("doc_id")
     },
 
@@ -2018,7 +1996,6 @@ object TextQueries {
       // folds the window minima + distinct in an O(grams) deque pass —
       // pure projection, zero shuffles before the output sort (the former
       // shape exploded a row per char position through a per-doc window)
-      graft.functions.GraftFunctions.register(s)
       Tables.documents(s, d)
         .select(col("doc_id"),
           explode(expr(s"winnow(md5_grams(text, $gramLen), $winLen)")).as("fp"))
@@ -2193,7 +2170,6 @@ object TextQueries {
          |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY rrf_scaled DESC, doc_id) AS INT) AS rank
          |FROM fused ORDER BY query_id, doc_id""".stripMargin
     }) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       hybridRrfDF(Tables.documents(s, d), Tables.embeddings(s, d))
         .orderBy("query_id", "doc_id")
     },
@@ -2217,7 +2193,6 @@ object TextQueries {
          |FROM documents d LEFT JOIN agg a ON a.doc_id = d.doc_id
          |ORDER BY d.doc_id""".stripMargin
     }) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       Tables.documents(s, d).select("doc_id")
         .join(qualityAggDF(s, Tables.documents(s, d)), Seq("doc_id"), "left")
         .select(col("doc_id"),
@@ -2251,7 +2226,6 @@ object TextQueries {
          |  CAST(sum(CASE WHEN raw >= t * n THEN n ELSE 0 END) AS BIGINT) AS kept_tokens,
          |  sum(CASE WHEN raw >= t * n THEN 1 ELSE 0 END) * 1.0 / count(*) AS keep_rate
          |FROM base, ts GROUP BY t ORDER BY t_mill""".stripMargin) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val base = Tables.documents(s, d).select("doc_id")
         .join(qualityAggDF(s, Tables.documents(s, d)), Seq("doc_id"), "left")
         .select(col("doc_id"), coalesce(col("raw"), lit(0L)).as("raw"),
@@ -2309,7 +2283,6 @@ object TextQueries {
          |       THEN 1 ELSE 0 END AS INT) AS keep
          |FROM lv CROSS JOIN thr ORDER BY lv.doc_id""".stripMargin
     }) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val base = Tables.documents(s, d).select("doc_id")
         .join(qualityAggDF(s, Tables.documents(s, d)), Seq("doc_id"), "left")
         .select(col("doc_id"), coalesce(col("raw"), lit(0L)).as("raw"),
@@ -2686,7 +2659,6 @@ object TextQueries {
          |  CAST(floor(coalesce(nv.n_novel, 0) * 1000.0 / t.n_grams) AS BIGINT) AS novelty_permille
          |FROM tot t LEFT JOIN novel nv ON nv.doc_id = t.doc_id
          |ORDER BY t.doc_id""".stripMargin) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val g = wordGramHashes(Tables.documents(s, d))
         .persist(StorageLevel.MEMORY_AND_DISK) // owner min + per-doc count both read it
       val novel = g.groupBy("gh").agg(min("doc_id").as("owner"))
@@ -2737,7 +2709,6 @@ object TextQueries {
          |  CAST(floor(abs(est_distinct - n_exact) * 1000.0 / n_exact) AS BIGINT) AS err_permille
          |FROM est ORDER BY lang""".stripMargin
     }) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       kmvDistinctDF(Tables.documents(s, d)).orderBy("lang")
     },
 
@@ -2764,14 +2735,12 @@ object TextQueries {
          |FROM r WHERE rk <= (n_cell + 9) // 10
          |ORDER BY doc_id""".stripMargin
     }) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       stratifiedSampleDF(Tables.documents(s, d)).orderBy("doc_id")
     },
   )
 
   /** Hashed-linear quality model numerator shared by tx_quality_score and
-    * tx_quality_curve: `(doc_id, raw, n_tokens)` with raw an exact BIGINT.
-    * Requires GraftFunctions registered. */
+    * tx_quality_curve: `(doc_id, raw, n_tokens)` with raw an exact BIGINT. */
   /** Body of `tx_budget_select` over any (doc_id, raw, n) frame — factored
     * so the planted-levels spec drives the real threshold selection. See
     * the Q comment for the level-granular contract. */
@@ -2812,8 +2781,7 @@ object TextQueries {
   }
 
   /** tx_kmv_distinct body over any (lang, text) frame — factored so the
-    * estimator-envelope spec drives the real salted bottom-k chain.
-    * Requires GraftFunctions registered. */
+    * estimator-envelope spec drives the real salted bottom-k chain. */
   private[llm] def kmvDistinctDF(docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     val dom = "1152921504606846976.0D" // 2^60, the hash domain size
@@ -2840,8 +2808,7 @@ object TextQueries {
   }
 
   /** tx_stratified_sample body over any (doc_id, lang, source) frame —
-    * factored so the allocation spec drives the real per-cell chain.
-    * Requires GraftFunctions registered. */
+    * factored so the allocation spec drives the real per-cell chain. */
   private[llm] def stratifiedSampleDF(docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     val h = sparkH("concat('strat:', cast(doc_id as string))")
@@ -3040,8 +3007,7 @@ object TextQueries {
     * UNORDERED, the query sorts. Lexical leg = the [[bm25DF]] chain
     * re-ranked into 1..topK; vector leg = cosine top-k with the query
     * batch broadcast over one corpus scan (codegen vector_dot, the
-    * sim_topk_cosine shape); fusion = exact-integer RRF on [[rrfL]].
-    * Requires `GraftFunctions.register`. */
+    * sim_topk_cosine shape); fusion = exact-integer RRF on [[rrfL]]. */
   private[llm] def hybridRrfDF(docs: org.apache.spark.sql.DataFrame,
       emb: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val lex = bm25DF(docs)

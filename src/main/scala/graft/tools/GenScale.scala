@@ -71,7 +71,7 @@ object GenScale {
     val reps = args.lift(2).map(_.toInt).getOrElse(10)
     require(reps >= 1 && reps <= 10, "keep slices one decade per application")
     val spark = graft.core.GraftSession.builder(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt, "graft-genscale").getOrCreate()
+      graft.core.GraftSession.cores, "graft-genscale").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // Per-table replica id shift DERIVED from the source's max id, rounded

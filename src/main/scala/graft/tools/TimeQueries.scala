@@ -13,7 +13,7 @@ object TimeQueries {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
+    val cpus = graft.core.GraftSession.cores
     val spark = graft.core.GraftSession.builder(cpus, "graft-time").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val parts = graft.core.GraftSession.autoTuneShuffle(spark, sfDir, cpus)

@@ -1,40 +1,75 @@
 package graft.functions
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.llm.LlmHash
 
 class FunctionsSpec extends SparkSpec {
 
-  test("GraftExtensions resolves every engine function without register() (cluster parity)") {
-    // the spark.sql.extensions deploy path must expose the same surface as
-    // GraftFunctions.register — a fresh session over the SAME SparkContext
-    // with only the extensions applied proves it end-to-end
-    import org.apache.spark.sql.SparkSession
+  /** One self-checking call per [[GraftFunctions.table]] entry. */
+  private val probes = Map(
+    "vector_dot" -> "vector_dot(array(1.0D,2.0D), array(3.0D,4.0D)) = 11.0D",
+    "vector_l2q" -> "vector_l2q(array(1L,5L), array(3L,2L)) = 13L",
+    "md5_long60" -> "md5_long60('abc') > 0L",
+    "rolling_hash" -> "size(rolling_hash('abcdefghij', 8)) = 3",
+    "minhash_sigs" -> "size(minhash_sigs(rolling_hash('abcdefghij', 5))) = 16",
+    "simhash_sig" -> "simhash_sig(rolling_hash('abcdefghij', 5)) IS NOT NULL",
+    "hash_hist" -> "hash_hist(array(5L, 7L, 5L))[5L] = 2L",
+    "md5_grams" -> "md5_grams('abcdefghi', 8) = array(md5_long60('abcdefgh'), md5_long60('bcdefghi'))",
+    "winnow" -> "array_sort(winnow(array(5L, 3L, 9L, 1L), 2)) = array(1L, 3L)",
+    "vector_quantize" -> "vector_quantize(array(CAST(0.5 AS FLOAT)), 10) = array(5L)",
+    "sorted_intersect_count" -> "sorted_intersect_count(array(1L,3L,7L), array(3L,5L,7L)) = 2",
+    "bloom_might_contain" -> "bloom_might_contain(CAST(NULL AS BINARY), 42L) IS NULL")
+
+  private def assertResolvesTable(s: SparkSession): Unit = {
+    assert(probes.keySet == GraftFunctions.table.map(_._1.funcName).toSet)
+    for ((id, _, _) <- GraftFunctions.table)
+      assert(s.sql(s"SELECT ${probes(id.funcName)}").head.getBoolean(0), id.funcName)
+  }
+
+  /** Runs `body` on a fresh session over the suite's SparkContext, then
+    * makes the suite's session active again. */
+  private def withForeign(b: SparkSession.Builder)(body: SparkSession => Unit): Unit = {
     val orig = spark
     SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-    val s2 = SparkSession.builder().master(orig.sparkContext.master)
-      .withExtensions(new GraftExtensions).getOrCreate()
-    try {
-      assert(s2.sql("SELECT vector_dot(array(1.0D,2.0D), array(3.0D,4.0D))").head.getDouble(0) == 11.0)
-      assert(s2.sql("SELECT vector_l2q(array(1L,5L), array(3L,2L))").head.getLong(0) == 13L)
-      assert(s2.sql("SELECT md5_long60('abc')").head.getLong(0) > 0L)
-      assert(s2.sql("SELECT size(rolling_hash('abcdefghij', 8))").head.getInt(0) == 3)
-      assert(s2.sql("SELECT size(minhash_sigs(rolling_hash('abcdefghij', 5)))").head.getInt(0) == 16)
-      assert(!s2.sql("SELECT simhash_sig(rolling_hash('abcdefghij', 5))").head.isNullAt(0))
-      assert(s2.sql("SELECT bloom_might_contain(CAST(NULL AS BINARY), 42L)").head.isNullAt(0))
-      assert(s2.sql("SELECT vector_quantize(array(CAST(0.5 AS FLOAT)), 10)").head
-        .getSeq[Long](0) == Seq(5L))
-      assert(s2.sql("SELECT sorted_intersect_count(array(1L,3L,7L), array(3L,5L,7L))").head
-        .getInt(0) == 2)
-    } finally {
-      SparkSession.setActiveSession(orig); SparkSession.setDefaultSession(orig)
+    try body(b.master(orig.sparkContext.master).getOrCreate())
+    finally { SparkSession.setActiveSession(orig); SparkSession.setDefaultSession(orig) }
+  }
+
+  test("GraftExtensions resolves every engine function without register() (cluster parity)") {
+    // the spark.sql.extensions deploy path must expose the whole table
+    withForeign(SparkSession.builder().withExtensions(new GraftExtensions))(assertResolvesTable)
+  }
+
+  test("register installs every engine function on a session built elsewhere") {
+    withForeign(SparkSession.builder()) { bare =>
+      assert(!bare.sessionState.functionRegistry.functionExists(GraftFunctions.table.head._1))
+      GraftFunctions.register(bare)
+      assertResolvesTable(bare)
     }
+  }
+
+  test("a GraftSession-built session resolves every function with no register call") {
+    assertResolvesTable(spark)
+    // a sibling session gets its registry from the extensions, not a copy
+    // of this one's, so nothing registered earlier can stand in for them
+    assertResolvesTable(spark.newSession())
+  }
+
+  test("register on a GraftSession-built session replaces no function") {
+    val registry = spark.sessionState.functionRegistry
+    def installed = GraftFunctions.table.map { case (id, _, _) =>
+      (id.funcName, registry.lookupFunction(id).get, registry.lookupFunctionBuilder(id).get)
+    }
+    val before = installed
+    GraftFunctions.register(spark)
+    for (((name, info, build), (_, info0, build0)) <- installed.zip(before))
+      assert((info eq info0) && (build eq build0), s"$name was replaced")
   }
 
   test("vector_quantize matches the transform-lambda form, incl. negative halves") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(11)
     // random floats plus planted .5-tie values in BOTH signs — the exact
     // points where Math.round (floor(x+0.5)) would diverge from Spark's
@@ -55,7 +90,6 @@ class FunctionsSpec extends SparkSpec {
 
   test("vector_quantize JDK-8010430 tie region: floor(x+0.5) would round the wrong way") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     // 0.49999999999999994 is the largest double BELOW 0.5: adding 0.5 to it
     // rounds (in binary) to exactly 1.0, so the floor(x+0.5) shortcut says 1
     // while HALF_UP on the true value says 0. Planted in both signs, next to
@@ -73,7 +107,6 @@ class FunctionsSpec extends SparkSpec {
 
   test("literal-window-arg functions reject column / NULL arguments at analysis time") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val df = Seq(("abcdef", 3)).toDF("s", "n")
     // a column second arg is not foldable — must be a named analysis error,
     // not a NullPointerException from eval() in the registry builder
@@ -92,7 +125,6 @@ class FunctionsSpec extends SparkSpec {
 
   test("vector_dot (codegen Expression) matches the interpreted HOF form bit-for-bit") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(7)
     val rows = Seq.fill(100)((Seq.fill(64)(rnd.nextDouble() * 2 - 1),
       Seq.fill(64)(rnd.nextDouble() * 2 - 1)))
@@ -105,7 +137,6 @@ class FunctionsSpec extends SparkSpec {
 
   test("vector_l2q (codegen Expression) matches the interpreted HOF form exactly") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(13)
     // quantized-embedding regime: components in the ±10^4·|x| envelope the
     // pqScale quantization produces
@@ -127,7 +158,6 @@ class FunctionsSpec extends SparkSpec {
 
   test("vector_dot handles nulls and ragged lengths") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val df = Seq(
       (Some(Seq(1.0, 2.0)), Some(Seq(3.0, 4.0, 99.0))), // common prefix: 1*3+2*4
       (None, Some(Seq(1.0)))).toDF("a", "b")
@@ -138,7 +168,6 @@ class FunctionsSpec extends SparkSpec {
 
   test("md5_long60 equals the composed conv(substring(md5)) form on arbitrary strings") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(3)
     val strs = Seq("", "a", "spark", "こんにちは") ++
       Seq.fill(200)(rnd.alphanumeric.take(rnd.nextInt(30)).mkString)
@@ -175,7 +204,6 @@ class FunctionsSpec extends SparkSpec {
 
   test("minhash_sigs/simhash_sig row-local expressions match the explode+aggregate forms") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val P = LlmHash.P
     val rnd = new scala.util.Random(5)
     // small alphabet forces heavy gram collisions — the regime where a
@@ -209,7 +237,6 @@ class FunctionsSpec extends SparkSpec {
 
   test("hash_hist row-local histogram matches the explode+groupBy form") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(17)
     // heavy-repetition regime: small alphabet → many duplicate grams per doc
     val docs = Seq.tabulate(50)(i =>
@@ -228,7 +255,6 @@ class FunctionsSpec extends SparkSpec {
 
   test("md5_grams matches md5_long60(substring) per position, incl. short docs") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(23)
     val strs = Seq("", "abc", "exactly8", "ünïcode mixed ascii tail") ++
       Seq.fill(100)(rnd.alphanumeric.take(rnd.nextInt(60)).mkString)
@@ -241,7 +267,6 @@ class FunctionsSpec extends SparkSpec {
 
   test("winnow matches the explode + window-min + distinct form") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(29)
     // duplicate-heavy values force real dedup; lengths straddle the window
     val rows = Seq.tabulate(80)(i =>

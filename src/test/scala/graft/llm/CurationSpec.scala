@@ -9,7 +9,6 @@ class CurationSpec extends SparkSpec {
 
   test("dd_semantic: identical vectors in a cell collapse to the min id; cells isolate") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val v = Array.tabulate(64)(i => (i % 7 + 1).toFloat)
     val w = Array.tabulate(64)(i => (if (i % 2 == 0) 1f else -1f) * (i + 1))
     // cell 0: three copies of v (10, 11, 12) + one orthogonal-ish w (13);
@@ -28,7 +27,6 @@ class CurationSpec extends SparkSpec {
 
   test("dd_contain: a quoted doc pairs one-way into its container; unrelated docs do not") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val dir = java.nio.file.Files.createTempDirectory("contain_sf")
     dir.toFile.deleteOnExit()
     def sent(seed: Int, n: Int) =
@@ -55,7 +53,6 @@ class CurationSpec extends SparkSpec {
 
   test("tx_interleave: every stride-order prefix holds each source near its proportional share") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val dir = java.nio.file.Files.createTempDirectory("interleave_sf")
     dir.toFile.deleteOnExit()
     // 30 docs from s_big, 10 from s_small — proportional interleave should
@@ -142,7 +139,6 @@ class CurationSpec extends SparkSpec {
 
   test("tx_source_cap: two-level top-k equals the direct window on a mega-source") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     // one 1000-doc mega-source (the skew case the two-level form exists
     // for) + one small source; both forms must select the same docs
     val docs = ((0L until 1000L).map(i => (i, "mega")) ++
@@ -527,7 +523,6 @@ class CurationSpec extends SparkSpec {
 
   test("tx_hybrid_rrf: exact-integer fusion decides a 5th-decimal rank boundary") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     // query doc 0 (0 % 41 == 0). Lexical leg: doc1 matches both query
     // tokens (r1), doc3 one (r2), doc2 none. Vector leg: vec2 identical
     // to the query (r1), vec3 close (r2), vec1 orthogonal (r3).

@@ -73,7 +73,6 @@ class DedupSpec extends SparkSpec {
 
   test("planted near-dup pairs survive the capped LSH chain (recall harness)") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     // 20 planted near-dup pairs (one-word edit on a 25-word doc ⇒ shingle
     // Jaccard ≈ 0.9) among 60 independent decoys. Texts come from per-doc
     // PRNGs (fixed seeds), so the whole chain is DETERMINISTIC: the
@@ -110,7 +109,6 @@ class DedupSpec extends SparkSpec {
 
   test("planted near-dup pairs survive the 60-bit simhash band chain (recall harness)") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     // One-word edit on a 200-word doc (~0.5% of gram instances): the
     // simhash angle theta ~ 0.1 rad gives an expected Hamming of
     // 60*theta/pi ~ 2 — inside the <=3 emit threshold, and any pair at

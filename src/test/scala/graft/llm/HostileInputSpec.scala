@@ -25,7 +25,6 @@ class HostileInputSpec extends SparkSpec {
   }
 
   test("custom Expressions: null propagates, degenerate inputs yield empty arrays") {
-    graft.functions.GraftFunctions.register(spark)
     val out = hostileDocs.select(col("doc_id"),
         expr("rolling_hash(text, 8)").as("rh"),
         expr("md5_grams(text, 8)").as("mg"),
@@ -215,7 +214,6 @@ class HostileInputSpec extends SparkSpec {
 
   test("round-5 mining operators survive degenerate corpora") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
 
     // KMV over a corpus with zero tokens: no language row, no crash
     val empty = Seq((0L, "", "aa"), (1L, null.asInstanceOf[String], "aa"))
@@ -255,7 +253,6 @@ class HostileInputSpec extends SparkSpec {
 
   test("soft weights, DSIR, fertility, and mutual-kNN components survive degenerate corpora") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
 
     // component machinery on an EMPTY edge set: empty labels, no crash
     assert(DedupQueries.componentsOf(
@@ -314,7 +311,6 @@ class HostileInputSpec extends SparkSpec {
   test("round-7 surfaces: zero-vector routing is deterministic; unicode doc rides the banded guard") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     // routeToCells with a ZERO vector: the r7 cosine router needed a
     // zero-norm guard (vn = 0 divided by zero and ANSI mode KILLED the
     // maintenance stream — reproduced before the guard landed); the

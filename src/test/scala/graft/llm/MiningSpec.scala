@@ -10,7 +10,6 @@ import org.apache.spark.sql.functions._
 class MiningSpec extends SparkSpec {
 
   import spark.implicits._
-  graft.functions.GraftFunctions.register(spark)
 
   private def vec(base: Float, jitter: Float = 0f): Array[Float] =
     Array.tabulate(8)(i => base + i * 0.5f + (if (i == 0) jitter else 0f))

@@ -27,7 +27,6 @@ class StreamingAnnServeScaledSpec extends SparkSpec {
 
   test("annIndexStreamScaled: a streamed corpus member lands in exactly its a2 cell (three-way routing parity)") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val corpus = freshCorpus("pqs_route")
     val idx = spark.table(SimilarityQueries.stagePqIndexScaled(spark, corpus))
     val (_, _, members, sseeds, pf, pg) = SimilarityQueries.scaledIndexFrames(idx)
@@ -63,7 +62,6 @@ class StreamingAnnServeScaledSpec extends SparkSpec {
     import spark.implicits._
     implicit val sq = spark.sqlContext
     import org.apache.spark.sql.streaming.Trigger
-    graft.functions.GraftFunctions.register(spark)
     val corpus = freshCorpus("pqs_fresh")
     val seed = Tables.embeddings(spark, corpus)
       .filter(col("vec_id") === 42L)
@@ -104,7 +102,6 @@ class StreamingAnnServeScaledSpec extends SparkSpec {
 
   test("base ∪ delta overlap: a vector present in BOTH scores ONE top-k slot, the exact side (ADVICE r7)") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val corpus = freshCorpus("pqs_overlap")
     val idx = spark.table(SimilarityQueries.stagePqIndexScaled(spark, corpus))
     val (cb, codes, members, sseeds, pf, pg) = SimilarityQueries.scaledIndexFrames(idx)
@@ -130,7 +127,6 @@ class StreamingAnnServeScaledSpec extends SparkSpec {
     import spark.implicits._
     implicit val sq = spark.sqlContext
     import org.apache.spark.sql.streaming.Trigger
-    graft.functions.GraftFunctions.register(spark)
     val corpusA = freshCorpus("pqs_lc_a")
     val seed = Tables.embeddings(spark, corpusA)
       .filter(col("vec_id") === 7L)
@@ -192,7 +188,6 @@ class StreamingAnnServeScaledSpec extends SparkSpec {
   test("WIDE RE-RANK serve: recall doubles over the single-cell tier; streaming face equals batch face (VERDICT r8 #4)") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     val corpus = freshCorpus("pqs_wide")
     val idx = spark.table(SimilarityQueries.stagePqIndexScaled(spark, corpus))
     val (cb, codes, members, sseeds, pf, pg) = SimilarityQueries.scaledIndexFrames(idx)

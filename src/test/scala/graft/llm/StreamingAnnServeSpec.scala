@@ -11,7 +11,6 @@ class StreamingAnnServeSpec extends SparkSpec {
   test("streamed query batches equal the batch serve against the same staged index") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     // a private corpus dir so the staged index belongs to this spec
     val dir = Files.createTempDirectory("ann_serve")
     dir.toFile.deleteOnExit()
@@ -64,7 +63,6 @@ class StreamingAnnServeSpec extends SparkSpec {
   test("an external query id colliding with a corpus vec_id does not drop that vector") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     val dir = Files.createTempDirectory("ann_serve_collide")
     dir.toFile.deleteOnExit()
     val corpus = dir.toString
@@ -113,7 +111,6 @@ class StreamingAnnServeSpec extends SparkSpec {
   test("annIndexStream: exactly-once cell-partitioned delta across an injected failure, batch-identical routing") {
     import spark.implicits._
     import org.apache.spark.sql.streaming.Trigger
-    graft.functions.GraftFunctions.register(spark)
     // private corpus: the staged centroid table belongs to this spec
     val dir = Files.createTempDirectory("ann_maint")
     dir.toFile.deleteOnExit()
@@ -220,7 +217,6 @@ class StreamingAnnServeSpec extends SparkSpec {
     import spark.implicits._
     implicit val sq = spark.sqlContext
     import org.apache.spark.sql.streaming.Trigger
-    graft.functions.GraftFunctions.register(spark)
     val dir = Files.createTempDirectory("ann_fresh")
     dir.toFile.deleteOnExit()
     val corpus = dir.toString

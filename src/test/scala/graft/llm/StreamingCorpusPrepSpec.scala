@@ -171,7 +171,6 @@ class StreamingCorpusPrepSpec extends SparkSpec {
   test("streaming decontamination quarantines docs sharing eval 4-grams, in-row") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     // batch-side bloom over the eval suite's token-4-gram hashes (the
     // tx_decontam_bloom build, tiny fpp so the clean doc can't collide)
     val evalDocs = Seq("the secret eval answer is forty two").toDF("text")
@@ -202,7 +201,6 @@ class StreamingCorpusPrepSpec extends SparkSpec {
   test("streaming novelty gate: corpus docs score 0, new content scores high, quotes in between") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     val corpusText = (0 until 30).map(i => s"known$i corpus$i fact$i").mkString(" ")
     val corpus = Seq((100L, corpusText)).toDF("doc_id", "text")
     // batch-side bloom over the corpus's distinct word-3-gram universe
@@ -237,7 +235,6 @@ class StreamingCorpusPrepSpec extends SparkSpec {
   test("streaming card counters equal the batch card's columns on the same rows") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     // a passing doc (>= 10 diverse tokens) and a failing one per source
     def good(i: Int) = (0 until 15).map(j => s"alpha$i$j beta$i$j").mkString(" ")
     val docs = Seq(
@@ -306,7 +303,6 @@ class StreamingCorpusPrepSpec extends SparkSpec {
   test("streaming DSIR gate scores exactly like the batch scorer on the pinned table") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     // reference corpus: en docs share a token universe, de docs another,
     // doc 5 straddles, doc 6 is empty (must score exactly 0 both sides)
     val corpus = Seq(
@@ -346,7 +342,6 @@ class StreamingCorpusPrepSpec extends SparkSpec {
   test("DSIR ratio table is dense: a streamed token in an untouched bucket gets the smoothed prior") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     // tiny training corpus: touches FEW of the 64 buckets, leaving most
     // untouched; traw=3 (en) tokens, ttgt=3 → prior lr for an absent
     // bucket is round(ln((0+1)*(3+64)/((0+1)*(3+64)))*1e6) = 0 when

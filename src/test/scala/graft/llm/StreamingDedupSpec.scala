@@ -33,7 +33,6 @@ class StreamingDedupSpec extends SparkSpec {
   test("streaming near-dup dedup suppresses same-signature docs via row-local simhash") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     val base = "the quick brown fox jumps over the lazy dog while seventeen " +
       "sleepy cats watch from a warm windowsill in the late afternoon sun"
     // find a one-char edit that provably keeps the simhash (a single edit
@@ -70,7 +69,6 @@ class StreamingDedupSpec extends SparkSpec {
   test("BANDED near-dup guard suppresses a one-char variant the exact-signature guard misses (VERDICT r6 #6)") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     val base = "the quick brown fox jumps over the lazy dog while seventeen " +
       "sleepy cats watch from a warm windowsill in the late afternoon sun"
     // find a one-char edit whose simhash DIFFERS (the exact-sig guard
@@ -139,7 +137,6 @@ class StreamingDedupSpec extends SparkSpec {
   test("BANDED guard hot bucket: a >GuardBucketCap flood stays suppressed and the guard still discriminates (VERDICT r7 #7)") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     val base = "the quick brown fox jumps over the lazy dog while seventeen " +
       "sleepy cats watch from a warm windowsill in the late afternoon sun"
     val far = "completely different content about spark engines and streaming " +

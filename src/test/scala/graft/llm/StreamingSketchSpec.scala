@@ -139,7 +139,6 @@ class StreamingSketchSpec extends SparkSpec {
   test("streaming KMV estimate equals the batch sketch on the same token set, any arrival order") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     val in = MemoryStream[DocEvent]
     val k = 16
     val out = StreamingSketch.kmvStream(in.toDS(), k = k, shards = 4)

@@ -324,7 +324,6 @@ class ThroughputSpec extends SparkSpec {
     import spark.implicits._
     val numPartitions = 4
     val perPartitionRate = 1000 // 10x the 100 rec/s/partition target
-    graft.functions.GraftFunctions.register(spark)
     // batch-side training pass: two language slices over a shared vocab
     val vocab = (0 until 50).map(i => f"w$i%02d")
     val ref = (1L to 200L).map { i =>
