@@ -22,12 +22,12 @@ object RecallProbe {
       else Seq((4, 4, 10), (4, 4, 14), (4, 6, 14), (4, 6, 18), (6, 8, 18), (4, 8, 22))
     val s = graft.core.GraftSession.builder(graft.core.GraftSession.cores, "recall").getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
-    import SimilarityQueries.{querySel, knnK, kmScale}
+    import SimilarityQueries.{querySel, knnK, pqScale}
 
     // exact top-3 for the sampled queries, computed ONCE and collected —
     // nq×3 pairs, driver-tiny (the audit harness's bt leg)
     val xq = graft.core.Tables.embeddings(s, d)
-      .select(col("vec_id"), expr(s"vector_quantize(embedding, $kmScale)").as("xq"))
+      .select(col("vec_id"), expr(s"vector_quantize(embedding, $pqScale)").as("xq"))
     val qs = xq.filter(expr(querySel)).select(col("vec_id").as("qid"), col("xq").as("qx"))
     val exact: Set[(Long, Long)] = xq.join(broadcast(qs), col("vec_id") =!= col("qid"))
       .select(col("qid").as("vec_id"), col("vec_id").as("neighbor_id"),

@@ -83,6 +83,9 @@ object SimilarityQueries {
     * rows per codeword at pqK=16 — two orders past the ~39·k rule of
     * thumb for k-means training-set sufficiency. */
   private[llm] val pqTrainCap = 262144L
+  /** THE quantization grid of every integer-L2 path: the k-means fits,
+    * PQ codebooks and ADC, and every router. One constant, so a scaled
+    * index's routing and its codes can never sit on two grids. */
   private[llm] val pqScale = 10000
 
   /** sim_knn_graph: neighbors kept per vector. */
@@ -127,12 +130,11 @@ object SimilarityQueries {
     * exactly why the downstream consumers treat the k-row centroid table
     * as the only broadcastable side. */
   private val kmK = 8
-  private[llm] val kmScale = 10000
 
   /** DuckDB CTE chain for the Lloyd chain at seed count `kExpr` (a SQL
     * expression — a literal for the fixed-k queries, a scalar subquery for
     * the k ∝ N re-fit), ending in `a2(vec_id, cid, dist)`; also exposes
-    * `xq` (the kmScale-quantized vectors). */
+    * `xq` (the pqScale-quantized vectors). */
   private def kmeansCtesK(kExpr: String): String = {
     def assignCte(name: String, cents: String) =
       s"""$name AS (
@@ -144,7 +146,7 @@ object SimilarityQueries {
          |)""".stripMargin
     s"""xq AS (
        |  SELECT vec_id,
-       |    list_transform(embedding, v -> CAST(round(CAST(v AS DOUBLE) * $kmScale, 0) AS BIGINT)) AS xq
+       |    list_transform(embedding, v -> CAST(round(CAST(v AS DOUBLE) * $pqScale, 0) AS BIGINT)) AS xq
        |  FROM embeddings
        |),
        |c0 AS (SELECT vec_id AS cid, xq AS carr FROM xq WHERE vec_id < ($kExpr)),
@@ -288,7 +290,7 @@ object SimilarityQueries {
          |)""".stripMargin
     s"""xq AS (
        |  SELECT vec_id,
-       |    list_transform(embedding, v -> CAST(round(CAST(v AS DOUBLE) * $kmScale, 0) AS BIGINT)) AS xq
+       |    list_transform(embedding, v -> CAST(round(CAST(v AS DOUBLE) * $pqScale, 0) AS BIGINT)) AS xq
        |  FROM embeddings
        |),
        |kk AS (SELECT greatest(8, count(*) // $cellTarget) AS k FROM embeddings),
@@ -405,7 +407,7 @@ object SimilarityQueries {
     val kcc = kccOf(k)
     val xq = Tables.embeddings(s, d)
       .select(col("vec_id"),
-        expr(s"vector_quantize(embedding, $kmScale)").as("xq"))
+        expr(s"vector_quantize(embedding, $pqScale)").as("xq"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val sseeds = xq.filter(col("vec_id") < kcc)
       .select(col("vec_id").as("sid"), col("xq").as("sarr"))
@@ -583,7 +585,7 @@ object SimilarityQueries {
       : (DataFrame, DataFrame, DataFrame) = {
     val xq = Tables.embeddings(s, d)
       .select(col("vec_id"),
-        expr(s"vector_quantize(embedding, $kmScale)").as("xq")) // codegen: no per-element lambda on the corpus scan
+        expr(s"vector_quantize(embedding, $pqScale)").as("xq")) // codegen: no per-element lambda on the corpus scan
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val c0 = xq.filter(col("vec_id") < k)
       .select(col("vec_id").as("cid"), col("xq").as("carr"))
@@ -1002,7 +1004,7 @@ object SimilarityQueries {
   }
 
   /** Within-assigned-cell kNN → mutual components, over any (vec_id, cid)
-    * assignment frame + kmScale-quantized vector table — the shared body
+    * assignment frame + pqScale-quantized vector table — the shared body
     * of the self-contained and staged kmeans-components queries. */
   private def kmComponentsFrom(s: org.apache.spark.sql.SparkSession, d: String,
       asg: DataFrame, xq: DataFrame, tag: String): DataFrame = {
@@ -1027,7 +1029,7 @@ object SimilarityQueries {
     * recompute on any mismatch. */
   private[llm] def stageKmeansAssign(s: org.apache.spark.sql.SparkSession, d: String): String =
     StagedTable.getOrStage(s, d, StagedTable.Stage("km_asg", StagedTable.Vecs,
-        s"km-asg-v1;dims=${LlmHash.dims};k=$kmK;scale=$kmScale")) { write =>
+        s"km-asg-v1;dims=${LlmHash.dims};k=$kmK;scale=$pqScale")) { write =>
       val (_, a2) = kmeansLayer(s, d)
       write(a2.select(col("vec_id"), col("cid").cast("long").as("cid")))
     }
@@ -1045,7 +1047,7 @@ object SimilarityQueries {
       d: String): String =
     StagedTable.getOrStage(s, d, StagedTable.Stage("km2l_asg", StagedTable.Vecs,
         s"km3l-asg-v3;sp=$assignSProbe;gp=$assignGProbe;cap=$splitCap;dims=${LlmHash.dims};" +
-          s"cellTarget=$cellTarget;scale=$kmScale")) { write =>
+          s"cellTarget=$cellTarget;scale=$pqScale")) { write =>
       // Cross-artifact adoption (SCALING r10): a VALID scaled PQ index
       // already carries this fit's assignment as its kind='member' rows —
       // the fit is deterministic and the pqs fingerprint pins a strict
@@ -1510,7 +1512,8 @@ object SimilarityQueries {
     // probed cell and shuffles |cell|×M LUT-joined rows to a per-pair sum.
     Q("sim_ivfpq", pqOracle) { (s, d) =>
       val (cb, codes, ccent, _) = pqBuildIndex(s, d)
-      pqServe(s, d, cb, codes, ccent)
+      pqServeFixed(s, d, cb, codes, ccent, pqQueries(s, d), selfExclude = true,
+        hintQueryBroadcast = false)
     },
 
     // IVF-PQ serving with a PERSISTED index (sim_ivf_staged's argument
@@ -1519,11 +1522,9 @@ object SimilarityQueries {
     // per-query LUT, and the probed cell's ADC run per query batch. Same
     // oracle as sim_ivfpq — identical results by construction.
     Q("sim_ivfpq_staged", pqOracle) { (s, d) =>
-      val idx = s.table(stagePqIndex(s, d))
-      pqServe(s, d,
-        idx.filter(col("kind") === "cb").select("s", "cid", "carr"),
-        idx.filter(col("kind") === "code").select("vec_id", "code"),
-        idx.filter(col("kind") === "ccent").select("label", "carr"))
+      val (cb, codes, ccent) = indexFrames(s.table(stagePqIndex(s, d)))
+      pqServeFixed(s, d, cb, codes, ccent, pqQueries(s, d), selfExclude = true,
+        hintQueryBroadcast = false)
     },
 
     // IVF-PQ over the SCALED (k ∝ N, three-level) cells — the production
@@ -1543,7 +1544,7 @@ object SimilarityQueries {
       val (_, cb, codes, _) = pqBuildCodebooks(s, d)
       val queries = fit.xq.filter(expr(querySel))
         .select(col("vec_id").as("query_id"), col("xq"))
-      pqServeQueriesScaled(s, cb, codes, fit.a2.select("vec_id", "cid"),
+      pqServeScaled(cb, codes, fit.a2.select("vec_id", "cid"),
         fit.sseeds, fit.pf, fit.pg, queries, selfExclude = true,
         hintQueryBroadcast = false)
     },
@@ -1556,11 +1557,8 @@ object SimilarityQueries {
     Q("sim_ivfpq_scaled_staged", pqScaledOracle) { (s, d) =>
       val idx = s.table(stagePqIndexScaled(s, d))
       val (cb, codes, members, sseeds, pf, pg) = scaledIndexFrames(idx)
-      val queries = Tables.embeddings(s, d).filter(expr(querySel))
-        .select(col("vec_id").as("query_id"),
-          expr(s"vector_quantize(embedding, $kmScale)").as("xq"))
-      pqServeQueriesScaled(s, cb, codes, members, sseeds, pf, pg,
-        queries, selfExclude = true, hintQueryBroadcast = false)
+      pqServeScaled(cb, codes, members, sseeds, pf, pg,
+        pqQueries(s, d), selfExclude = true, hintQueryBroadcast = false)
     },
 
     // The WIDE re-rank serve tier over the staged scaled index (VERDICT r8
@@ -1574,10 +1572,10 @@ object SimilarityQueries {
       val idx = s.table(stagePqIndexScaled(s, d))
       val (cb, codes, members, sseeds, pf, pg) = scaledIndexFrames(idx)
       val xqC = Tables.embeddings(s, d)
-        .select(col("vec_id"), expr(s"vector_quantize(embedding, $kmScale)").as("xq"))
+        .select(col("vec_id"), expr(s"vector_quantize(embedding, $pqScale)").as("xq"))
       val queries = xqC.filter(expr(querySel))
         .select(col("vec_id").as("query_id"), col("xq"))
-      pqServeQueriesScaledWide(s, cb, codes, members, sseeds, pf, pg,
+      pqServeWide(cb, codes, members, sseeds, pf, pg,
         queries, xqC, selfExclude = true, hintQueryBroadcast = false)
     },
 
@@ -2371,7 +2369,7 @@ object SimilarityQueries {
     Q("sim_components_kmeans_staged", kmComponentsOracle) { (s, d) =>
       val table = stageKmeansAssign(s, d)
       val xq = Tables.embeddings(s, d)
-        .select(col("vec_id"), expr(s"vector_quantize(embedding, $kmScale)").as("xq"))
+        .select(col("vec_id"), expr(s"vector_quantize(embedding, $pqScale)").as("xq"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       kmComponentsFrom(s, d, s.table(table), xq, "sim_components_kmeans_staged")
     },
@@ -2424,7 +2422,7 @@ object SimilarityQueries {
     Q("sim_components_kmeans_scaled_staged", kmComponentsScaledOracle) { (s, d) =>
       val table = stageKmeansScaledAssign(s, d)
       val xq = Tables.embeddings(s, d)
-        .select(col("vec_id"), expr(s"vector_quantize(embedding, $kmScale)").as("xq"))
+        .select(col("vec_id"), expr(s"vector_quantize(embedding, $pqScale)").as("xq"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       kmComponentsFrom(s, d, s.table(table), xq,
         "sim_components_kmeans_scaled_staged")
@@ -2478,7 +2476,7 @@ object SimilarityQueries {
       val gt = multiprobeKnnScaledDF(s, d).filter(expr(querySel))
         .select("vec_id", "neighbor_id")
       val xq = Tables.embeddings(s, d)
-        .select(col("vec_id"), expr(s"vector_quantize(embedding, $kmScale)").as("xq"))
+        .select(col("vec_id"), expr(s"vector_quantize(embedding, $pqScale)").as("xq"))
       val qs = xq.filter(expr(querySel)).select(col("vec_id").as("qid"), col("xq").as("qx"))
       val bt = xq.join(broadcast(qs), col("vec_id") =!= col("qid")) // 2% query batch
         .select(col("qid").as("vec_id"), col("vec_id").as("neighbor_id"),
@@ -2694,8 +2692,8 @@ object SimilarityQueries {
   }
 
   /** Oracle for the SCALED IVF-PQ pair: the [[kmeansThreeLevelCtes]] fit
-    * (xq, sseeds, gseeds, c1, pf1, pg1, a2 — kmScale-quantized; kmScale ==
-    * pqScale is require()d on the Spark side) + the [[pqOracle]]
+    * (xq, sseeds, gseeds, c1, pf1, pg1, a2 — on the one [[pqScale]] grid)
+    * + the [[pqOracle]]
     * codebook/code CTEs rebased on that xq, + layered query routing. A
     * corpus-member query's layered route IS its own a2 row (identical
     * rule, identical (sd, sid)/(gd, gid)/(dist, cid) tie orders), so
@@ -2758,7 +2756,7 @@ object SimilarityQueries {
        |ORDER BY query_id, neighbor_id""".stripMargin
   }
 
-  /** Oracle for the WIDE re-rank serve ([[pqServeQueriesScaledWide]]):
+  /** Oracle for the WIDE re-rank serve ([[pqServeWide]]):
     * the multiprobe route (`mp`, [[multiprobeScaledCtes]]) supplies the
     * probed cells, the PQ fragment ([[pqCodebookCtes]]) the codes, ADC
     * pools the probed members, the top [[serveTopC]] survive to an exact
@@ -2795,31 +2793,21 @@ object SimilarityQueries {
        |ORDER BY query_id, neighbor_id""".stripMargin
   }
 
-  /** Quantized corpus (vec_id, label, xq) and its per-subspace slices —
-    * the row-local projections BOTH the index build and the serve path
-    * start from. Persisted; callers unpersist via the returned handles.
-    */
-  /** `persist = false` (the sampled-training build at decade scale) keeps
-    * the corpus-sized xq and the M×-exploded sub frames UNPINNED: with a
-    * sampled train set each has a single consumer, and persisting them is
-    * pure block-manager disk — the 20M-vector stage build died on scratch
-    * exhaustion with ~25 GB of pinned sub blocks before this flag existed
-    * (SCALING r10). Re-deriving either is one projection over the parquet
-    * scan. */
-  private def pqFrames(s: org.apache.spark.sql.SparkSession, d: String,
-      persist: Boolean = true): (DataFrame, DataFrame) = {
-    def pin(df: DataFrame): DataFrame =
-      if (persist) df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else df
-    val xq = pin(Tables.embeddings(s, d)
-      .select(col("vec_id"), col("label"),
-        expr(s"vector_quantize(embedding, $pqScale)").as("xq")))
-    val sub = pin(xq
-      .select(col("vec_id"), col("label"), explode(expr(s"sequence(0, ${pqM - 1})")).as("s"), col("xq"))
-      .select(col("vec_id"), col("label"), col("s").cast("int").as("s"),
-        expr(s"slice(xq, s * $pqSubDim + 1, $pqSubDim)").as("sv")))
-    (xq, sub)
-  }
+  /** Per-`keys` argmin of `vector_l2q(av, bv)` over the candidate `cid`s,
+    * (dist, cid) tie order — the codebook, code and query-route argmin. */
+  private def argmin(df: DataFrame, keys: Seq[String], outCid: String): DataFrame = df
+    .withColumn("dist", expr("vector_l2q(av, bv)"))
+    .groupBy(keys.map(col): _*)
+    .agg(min(struct(col("dist"), col("cid"))).as("m"))
+    .select(keys.map(col) :+ col("m.cid").as(outCid) :+ col("m.dist").as("dist"): _*)
+
+  /** Per-`keys` rounded-mean integer centroid of the positional (i, v)
+    * rows — exact bigint sum / exact count, one double division + round. */
+  private def centroids(df: DataFrame, keys: Seq[String]): DataFrame = df
+    .groupBy((keys :+ "i").map(col): _*)
+    .agg(expr("cast(round(cast(sum(v) as double) / count(*), 0) as bigint)").as("cm"))
+    .groupBy(keys.map(col): _*)
+    .agg(expr("transform(array_sort(collect_list(struct(i, cm))), p -> p.cm)").as("carr"))
 
   /** The IVF-PQ INDEX build — the once-per-corpus-version pass: subspace
     * codebooks (2 Lloyd-style rounds from deterministic seeds), per-vector
@@ -2829,11 +2817,6 @@ object SimilarityQueries {
   private[llm] def pqBuildIndex(s: org.apache.spark.sql.SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame, Seq[DataFrame]) = {
     val (xq, cb, codes, caches) = pqBuildCodebooks(s, d)
-    def centroids(df: DataFrame, keys: Seq[String]) = df
-      .groupBy((keys :+ "i").map(col): _*)
-      .agg(expr("cast(round(cast(sum(v) as double) / count(*), 0) as bigint)").as("cm"))
-      .groupBy(keys.map(col): _*)
-      .agg(expr("transform(array_sort(collect_list(struct(i, cm))), p -> p.cm)").as("carr"))
     val ccent = centroids(
       xq.select(col("label"), posexplode(col("xq")).as(Seq("i", "v"))),
       Seq("label"))
@@ -2851,19 +2834,20 @@ object SimilarityQueries {
     val step = math.max(1L, n / pqTrainCap)
     // at step = 1 (every oracle-checked corpus) sub feeds three consumers
     // (seed, train, codes) and earns its persist; at decade scale the
-    // sampled train is the only repeat consumer, so xq/sub stay unpinned
-    val (xq, sub) = pqFrames(s, d, persist = step == 1L)
-    val dist = "vector_l2q(av, bv)"
-    def argmin(df: DataFrame, keys: Seq[String], outCid: String) = df
-      .withColumn("dist", expr(dist))
-      .groupBy(keys.map(col): _*)
-      .agg(min(struct(col("dist"), col("cid"))).as("m"))
-      .select(keys.map(col) :+ col("m.cid").as(outCid) :+ col("m.dist").as("dist"): _*)
-    def centroids(df: DataFrame, keys: Seq[String]) = df
-      .groupBy((keys :+ "i").map(col): _*)
-      .agg(expr("cast(round(cast(sum(v) as double) / count(*), 0) as bigint)").as("cm"))
-      .groupBy(keys.map(col): _*)
-      .agg(expr("transform(array_sort(collect_list(struct(i, cm))), p -> p.cm)").as("carr"))
+    // sampled train is the only repeat consumer, so the corpus-sized xq and
+    // the M×-exploded sub stay UNPINNED — persisting them there is pure
+    // block-manager disk (the 20M-vector stage build died on scratch
+    // exhaustion with ~25 GB of pinned sub blocks, SCALING r10)
+    def pin(df: DataFrame): DataFrame =
+      if (step == 1L) df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      else df
+    val xq = pin(Tables.embeddings(s, d)
+      .select(col("vec_id"), col("label"),
+        expr(s"vector_quantize(embedding, $pqScale)").as("xq")))
+    val sub = pin(xq
+      .select(col("vec_id"), col("label"), explode(expr(s"sequence(0, ${pqM - 1})")).as("s"), col("xq"))
+      .select(col("vec_id"), col("label"), col("s").cast("int").as("s"),
+        expr(s"slice(xq, s * $pqSubDim + 1, $pqSubDim)").as("sv")))
     // Codebooks train on a deterministic hash-SAMPLE of at most ~pqTrainCap
     // vectors (the FAISS stance: codebooks are distribution statistics —
     // k-means on a bounded sample, codes assigned over the full corpus).
@@ -2906,6 +2890,21 @@ object SimilarityQueries {
       if (step == 1L) Seq(xq, sub) else Seq(train))
   }
 
+  /** Column layout (name, SQL type) of the scaled index stage; the fixed
+    * index adds `label`. */
+  private def pqsLayout: Seq[(String, String)] = Seq("s" -> "int", "cid" -> "bigint",
+    "carr" -> "array<bigint>", "vec_id" -> "bigint", "code" -> "bigint")
+
+  /** ONE kind-tagged table out of `parts` (kind → frame): each part fills
+    * the `layout` columns it has, the rest pad as typed nulls, so every
+    * index member lands in one artifact with one `kind` column first. */
+  private def kindTagged(layout: Seq[(String, String)],
+      parts: (String, DataFrame)*): DataFrame =
+    parts.map { case (kind, df) =>
+      df.select(lit(kind).as("kind") +: layout.map { case (c, t) =>
+        if (df.columns.contains(c)) col(c) else lit(null).cast(t).as(c) }: _*)
+    }.reduce(_ unionByName _)
+
   /** Cross-session staged IVF-PQ index (the FAISS write-index-to-disk
     * shape, via the shared StagedTable machinery): codebooks, per-vector
     * codes, and coarse centroids persist as ONE kind-tagged external
@@ -2913,7 +2912,7 @@ object SimilarityQueries {
     * constant — a fresh process whose corpus matches adopts the files and
     * pays zero index passes before serving; any drift rebuilds. The
     * single-artifact layout mirrors a serialized ANN index file; the
-    * corpus-sized member (codes) is narrow (vec_id, s, code — 8 bytes of
+    * corpus-sized member (codes) is narrow (vec_id, code — 8 bytes of
     * code per vector). */
   private[graft] def stagePqIndex(s: org.apache.spark.sql.SparkSession, d: String): String =
     // pq-v3 = PACKED per-vector codes (one bigint), replacing the
@@ -2922,71 +2921,73 @@ object SimilarityQueries {
         s"pq-v3;scale=$pqScale;M=$pqM;sub=$pqSubDim;k=$pqK;tcap=$pqTrainCap;" +
           s"dims=${LlmHash.dims}")) { write =>
       val (cb, codes, ccent, caches) = pqBuildIndex(s, d)
-      val nulls = Seq(lit(null).cast("bigint").as("vec_id"),
-        lit(null).cast("bigint").as("code"), lit(null).cast("int").as("label"))
-      write(cb.select(Seq(lit("cb").as("kind"), col("s"), col("cid"),
-          col("carr")) ++ nulls: _*)
-        .unionByName(codes.select(lit("code").as("kind"),
-          lit(null).cast("int").as("s"),
-          lit(null).cast("bigint").as("cid"),
-          lit(null).cast("array<bigint>").as("carr"),
-          col("vec_id"), col("code"), lit(null).cast("int").as("label")))
-        .unionByName(ccent.select(lit("ccent").as("kind"),
-          lit(null).cast("int").as("s"), lit(null).cast("bigint").as("cid"),
-          col("carr"), lit(null).cast("bigint").as("vec_id"),
-          lit(null).cast("bigint").as("code"), col("label"))))
+      write(kindTagged(pqsLayout :+ ("label" -> "int"),
+        "cb" -> cb, "code" -> codes, "ccent" -> ccent))
       caches.foreach(_.unpersist(blocking = false))
     }
 
-  /** The IVF-PQ SERVE path: route each query to its best coarse cell,
-    * build the per-query ADC lookup table against the codebooks, and rank
-    * the probed cell's codes — only query-batch- and cell-sized work; the
-    * corpus appears as its 8-byte codes, never as vectors. */
-  private[llm] def pqServe(s: org.apache.spark.sql.SparkSession, d: String,
-      cb: DataFrame, codes: DataFrame, ccent: DataFrame): DataFrame = {
-    val (xq, _) = pqFrames(s, d)
-    pqServeQueries(s, d, cb, codes, ccent,
-      xq.filter(expr(querySel)).select(col("vec_id").as("query_id"), col("xq")),
-      selfExclude = true, hintQueryBroadcast = false)
-  }
+  /** The (cb, codes, ccent) frame bundle sliced out of a staged fixed-cell
+    * index table — [[scaledIndexFrames]]' twin. */
+  private[llm] def indexFrames(idx: DataFrame): (DataFrame, DataFrame, DataFrame) = (
+    idx.filter(col("kind") === "cb").select("s", "cid", "carr"),
+    idx.filter(col("kind") === "code").select("vec_id", "code"),
+    idx.filter(col("kind") === "ccent").select("label", "carr"))
 
-  /** IVF-PQ serving for an ARBITRARY query batch (query_id, xq quantized
-    * vector) — the entry the streaming query feed uses per micro-batch.
-    * `selfExclude` controls the `vec_id <> query_id` guard: the batch twin
-    * passes corpus members as queries and MUST exclude each query's own
-    * row (`pqServe` sets true); an external/streaming query is not a
-    * corpus member, so its id colliding with a corpus vec_id must NOT
-    * silently drop that corpus vector from the candidate set
-    * (`StreamingAnnServe` sets false). */
-  /** @param delta optional FRESH vectors not yet folded into the PQ index
-    *   — (vec_id, cell, xq) from the streaming maintenance path
-    *   (`StreamingAnnServe.annIndexStream`'s sink, quantized on read).
-    *   A probed cell's fresh members score by their EXACT quantized L2
-    *   (`vector_l2q(q, v)`) — the very quantity the base side's ADC sum
-    *   approximates with codewords, so the two sides rank in the same
-    *   units and one top-k window merges them (the classic IVF
-    *   fresh-buffer design: exact over the small delta, ADC over the
-    *   compacted base). */
-  /** Shared packed-ADC scorer (the FAISS ADC shape, Spark-first): per
-    * query ONE positional lookup array of all M·K codeword distances; per
-    * corpus candidate ONE packed bigint code; the asymmetric distance is
-    * an M-step `aggregate` of shift/mask array reads — no join against
-    * per-subspace code rows (160M at 20M vectors) and no
-    * (query, s, code)-keyed LUT join (|Q|·M·K rows): SCALING r10 measured
-    * that join pair at 51.6×/decade (800 s at 400k queries × 20M vectors,
-    * ~70 GB spill); this shape shuffles only the candidate pairs and |Q|
-    * 128-slot arrays. Values are bit-identical: the same vector_l2q
-    * codeword distances, summed in the same integer domain.
+  /** The batch serve faces' query set: every [[querySel]] corpus vector,
+    * quantized from a plain corpus scan (no cached corpus frame). */
+  private def pqQueries(s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
+    Tables.embeddings(s, d).filter(expr(querySel))
+      .select(col("vec_id").as("query_id"),
+        expr(s"vector_quantize(embedding, $pqScale)").as("xq"))
+
+  /** `df` with an explicit broadcast hint iff `hint`. The hinted frames are
+    * the |Q|-sized ones: a streaming micro-batch's |Q| is tiny and KEEPS the
+    * hint (stats on a fresh batch frame can't prove broadcastability in
+    * time); the batch faces' |Q| = N/50 grows a decade per slice and a
+    * hinted broadcast is one AQE cannot demote, so there the hint is
+    * dropped and AQE upgrades to broadcast at runtime whenever the
+    * measured size allows (ADVICE r9). */
+  private def hinted(df: DataFrame, hint: Boolean): DataFrame =
+    if (hint) broadcast(df) else df
+
+  /** THE IVF-PQ scorer every serve tier shares — the tiers differ only in
+    * the router that builds `route`. Scores (query_id, neighbor_id, adist),
+    * unranked, for every member of every probed cell.
     *
-    * @param candidates (query_id, vec_id) probed pairs — unique by
-    *                   construction (cells are disjoint)
-    * @param codes      (vec_id, code) PACKED per-vector codes
-    * @param queries    (query_id, xq) at pqScale quantization
-    * @param cb         (s, cid, carr) subspace codebooks
-    * @param bcq        the |Q|-gated broadcast-hint wrapper of the caller */
-  private def adcScores(candidates: DataFrame, codes: DataFrame,
-      queries: DataFrame, cb: DataFrame,
-      bcq: DataFrame => DataFrame): DataFrame = {
+    * Base side, packed ADC (the FAISS shape, Spark-first): per query ONE
+    * positional lookup array of all M·K codeword distances, per candidate
+    * ONE packed bigint code; the asymmetric distance is an M-step
+    * `aggregate` of shift/mask array reads — no join against per-subspace
+    * code rows and no (query, s, code)-keyed LUT join (SCALING r10
+    * measured that join pair at 51.6×/decade: 800 s at 400k queries × 20M
+    * vectors, ~70 GB spill); this shape shuffles only the candidate pairs
+    * and |Q| 128-slot arrays.
+    *
+    * Fresh side: `delta` (vec_id, cell, xq) holds vectors not yet folded
+    * into the codes (the maintenance stream's sink, quantized on read);
+    * a probed cell's fresh members score by EXACT quantized L2 — the very
+    * quantity ADC approximates with codewords, so both sides rank in one
+    * unit (the classic IVF fresh-buffer design). A vector in BOTH the codes
+    * and a not-yet-retired delta (the post-rebuild, pre-compaction window)
+    * keeps ONE row per (query_id, neighbor_id), the min — the exact score
+    * whenever both exist; the aggregate is survivor-sized (ADVICE r7).
+    *
+    * @param cb          (s, cid, carr) subspace codebooks
+    * @param codes       (vec_id, code) PACKED per-vector codes
+    * @param members     (vec_id, cid) corpus cell membership
+    * @param route       (query_id, probe_cid) each query's probed cells
+    * @param queries     (query_id, xq) at [[pqScale]] quantization
+    * @param selfExclude drop `vec_id = query_id` pairs: a batch face's
+    *                    queries are corpus members and must not find
+    *                    themselves; a streamed query is not a corpus
+    *                    member, and its id colliding with a vec_id must
+    *                    not drop that vector
+    * @param hint        see [[hinted]] */
+  private def adcServe(cb: DataFrame, codes: DataFrame, members: DataFrame,
+      route: DataFrame, queries: DataFrame, selfExclude: Boolean,
+      delta: Option[DataFrame], hint: Boolean): DataFrame = {
+    val cellMembers = hinted(route, hint)
+      .join(members.select(col("vec_id"), col("cid")), col("cid") === col("probe_cid"))
     // per-(query, s, cid) codeword distance, SCATTERED into a positional
     // array (slot = s·K + cid) through a 128-entry map — a dead codeword
     // (one no code references) leaves a null slot no lookup ever touches
@@ -3003,61 +3004,20 @@ object SimilarityQueries {
         .as("lmap"))
       .select(col("query_id"),
         expr(s"transform(sequence(0, ${pqM * pqK - 1}), i -> lmap[i])").as("larr"))
-    candidates
+    val adc = (if (selfExclude) cellMembers.filter(col("vec_id") =!= col("query_id"))
+        else cellMembers).select("query_id", "vec_id")
       .join(codes, "vec_id")
-      .join(bcq(lutArr), "query_id")
+      .join(hinted(lutArr, hint), "query_id")
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         expr(s"aggregate(sequence(0, ${pqM - 1}), 0L, (acc, s) -> " +
           s"acc + larr[cast(s * $pqK + ((code >> (s * $pqCodeBits)) & ${pqK - 1}) as int)])")
           .as("adist"))
-  }
-
-  private[llm] def pqServeQueries(s: org.apache.spark.sql.SparkSession, d: String,
-      cb: DataFrame, codes: DataFrame, ccent: DataFrame,
-      queries: DataFrame, selfExclude: Boolean,
-      delta: Option[DataFrame] = None,
-      hintQueryBroadcast: Boolean = true): DataFrame = {
-    // |Q|-proportional hint gating — same rule as the wide tier (ADVICE r9)
-    def bcq(df: DataFrame): DataFrame = if (hintQueryBroadcast) broadcast(df) else df
-    // Serving needs only the corpus's (vec_id, cell-label) membership — a
-    // two-column scan, NOT the quantized vectors: routing uses the
-    // broadcast centroids, ranking uses the 8-byte codes. Do not call
-    // pqFrames here — it persists the corpus-sized xq frame AND the
-    // M×-exploded sub frame, which a long-running serving job would pin
-    // forever without ever reading (the index-build path is the only
-    // consumer of those caches).
-    val xq = Tables.embeddings(s, d).select(col("vec_id"), col("label"))
-    val dist = "vector_l2q(av, bv)"
-    def argmin(df: DataFrame, keys: Seq[String], outCid: String) = df
-      .withColumn("dist", expr(dist))
-      .groupBy(keys.map(col): _*)
-      .agg(min(struct(col("dist"), col("cid"))).as("m"))
-      .select(keys.map(col) :+ col("m.cid").as(outCid) :+ col("m.dist").as("dist"): _*)
-    val route = queries
-      .select(col("query_id"), col("xq").as("av"))
-      .crossJoin(broadcast(ccent.select(col("label").as("cid"), col("carr").as("bv"))))
-      .transform(df => argmin(df, Seq("query_id"), "probe_label"))
-      .select("query_id", "probe_label")
-    val cellMembers = bcq(route)
-      .join(xq.select(col("vec_id"), col("label")), col("label") === col("probe_label"))
-    val adc = adcScores(
-      (if (selfExclude) cellMembers.filter(col("vec_id") =!= col("query_id"))
-       else cellMembers).select("query_id", "vec_id"),
-      codes, queries, cb, bcq)
-    // fresh-buffer side: the probed cell's not-yet-indexed vectors, exact
-    // quantized L2 (delta is compaction-bounded — small by contract).
-    // A vector present in BOTH the PQ codes and a not-yet-retired delta
-    // (the post-rebuild, pre-compaction window) would otherwise score
-    // twice and occupy two top-k slots — keep ONE row per (query_id,
-    // neighbor_id), the min(adist) side (the exact delta score is a lower
-    // bound of what ADC approximates, so min picks the exact one whenever
-    // both exist); the aggregate is survivor-sized (ADVICE r7).
-    val scoredAll = delta.fold(adc) { dl =>
-      val fresh = bcq(route)
-        .join(bcq(queries.select(col("query_id").as("fq"), col("xq").as("qxq"))),
+    delta.fold(adc) { dl =>
+      val fresh = hinted(route, hint)
+        .join(hinted(queries.select(col("query_id").as("fq"), col("xq").as("qxq")), hint),
           col("fq") === col("query_id"))
         .join(dl.select(col("vec_id").as("neighbor_id"), col("cell"), col("xq").as("dxq")),
-          col("cell") === col("probe_label"))
+          col("cell") === col("probe_cid"))
         .filter(!(lit(selfExclude) && col("neighbor_id") === col("query_id")))
         .select(col("query_id"), col("neighbor_id"),
           expr("vector_l2q(qxq, dxq)").as("adist"))
@@ -3065,10 +3025,43 @@ object SimilarityQueries {
         .groupBy("query_id", "neighbor_id")
         .agg(min("adist").as("adist"))
     }
-    val w = Window.partitionBy("query_id").orderBy(col("adist"), col("neighbor_id"))
-    scoredAll.withColumn("rn", row_number().over(w)).filter(col("rn") <= topK)
+  }
+
+  /** Per-query top-`k` rows of `scored` by (`dist`, neighbor_id), with
+    * their rank in `rn` — the one rank window of every serve tier. */
+  private def topkBy(scored: DataFrame, dist: String, k: Int): DataFrame =
+    scored.withColumn("rn", row_number().over(
+        Window.partitionBy("query_id").orderBy(col(dist), col("neighbor_id"))))
+      .filter(col("rn") <= k)
+
+  /** The final (query_id, neighbor_id, adist) top-[[topK]] of a scored
+    * single-cell serve, sorted. */
+  private def servedTopk(scored: DataFrame): DataFrame =
+    topkBy(scored, "adist", topK)
       .select("query_id", "neighbor_id", "adist")
       .orderBy("query_id", "neighbor_id")
+
+  /** IVF-PQ serving over the FIXED label cells (sim_ivfpq): each query
+    * routes to its argmin coarse centroid — (dist, label) tie order, the
+    * rule [[StreamingAnnServe.routeToCells]] applies to ingested vectors —
+    * and ranks that cell's codes. The corpus appears only as its
+    * (vec_id, label) membership and its 8-byte codes, never as vectors.
+    *
+    * @param ccent (label, carr) coarse centroids
+    * @see [[adcServe]] for the other parameters */
+  private[llm] def pqServeFixed(s: org.apache.spark.sql.SparkSession, d: String,
+      cb: DataFrame, codes: DataFrame, ccent: DataFrame,
+      queries: DataFrame, selfExclude: Boolean,
+      delta: Option[DataFrame] = None,
+      hintQueryBroadcast: Boolean = true): DataFrame = {
+    val route = queries
+      .select(col("query_id"), col("xq").as("av"))
+      .crossJoin(broadcast(ccent.select(col("label").as("cid"), col("carr").as("bv"))))
+      .transform(df => argmin(df, Seq("query_id"), "probe_cid"))
+      .select("query_id", "probe_cid")
+    servedTopk(adcServe(cb, codes,
+      Tables.embeddings(s, d).select(col("vec_id"), col("label").as("cid")),
+      route, queries, selfExclude, delta, hintQueryBroadcast))
   }
 
   /** IVF-PQ serving against the SCALED (k ∝ N three-level) cells — the
@@ -3077,125 +3070,57 @@ object SimilarityQueries {
     * argmin over that seed's fine children — [[assignScaled]], the
     * identical rule/tie-order the corpus assignment and the streaming
     * maintenance router use, so a query and the vector it is looking for
-    * can never land one cell apart), then the probed cell's members rank
-    * through the same ADC-LUT machinery as the fixed-label serve. Nothing
-    * touches all k centroids per query: routing is ~3·kcc distances —
-    * O(k^(1/3)) — against broadcast-sized tables.
+    * can never land one cell apart). Nothing touches all k centroids per
+    * query: routing is ~3·kcc distances — O(k^(1/3)) — against
+    * broadcast-sized tables.
     *
     * @param members corpus (vec_id, cid) — the scaled assignment
     * @param sseeds  super seeds (sid, sarr)
     * @param pf      fine→coarse parent map (cid, gid, carr)
     * @param pg      coarse→super parent map (gid, sid, garr)
-    * @param delta   optional fresh vectors (vec_id, cell = scaled cid, xq)
-    *                from the scaled maintenance stream; exact quantized L2,
-    *                min-dedup'd against the base (the pqServeQueries delta
-    *                contract) */
-  private[llm] def pqServeQueriesScaled(s: org.apache.spark.sql.SparkSession,
-      cb: DataFrame, codes: DataFrame, members: DataFrame,
+    * @see [[adcServe]] for the other parameters */
+  private[llm] def pqServeScaled(cb: DataFrame, codes: DataFrame, members: DataFrame,
       sseeds: DataFrame, pf: DataFrame, pg: DataFrame,
       queries: DataFrame, selfExclude: Boolean,
       delta: Option[DataFrame] = None,
       hintQueryBroadcast: Boolean = true): DataFrame = {
-    // |Q|-proportional hint gating — same rule as the wide tier (ADVICE r9)
-    def bcq(df: DataFrame): DataFrame = if (hintQueryBroadcast) broadcast(df) else df
-    // the two quantization constants must agree for the scaled index: the
-    // layered fit routes on kmScale integers while the PQ LUT/ADC run on
-    // pqScale integers — one xq table serves both only because they are
-    // the same grid (both 10000; a future retune must move them together)
-    require(pqScale == kmScale, "scaled IVF-PQ requires pqScale == kmScale")
     val route = assignScaled(
         queries.select(col("query_id").as("vec_id"), col("xq")), pf, pg, sseeds)
       .select(col("vec_id").as("query_id"), col("cid").as("probe_cid"))
-    val cellMembers = bcq(route)
-      .join(members.select(col("vec_id"), col("cid")), col("cid") === col("probe_cid"))
-    val adc = adcScores(
-      (if (selfExclude) cellMembers.filter(col("vec_id") =!= col("query_id"))
-       else cellMembers).select("query_id", "vec_id"),
-      codes, queries, cb, bcq)
-    val scoredAll = delta.fold(adc) { dl =>
-      val fresh = bcq(route)
-        .join(bcq(queries.select(col("query_id").as("fq"), col("xq").as("qxq"))),
-          col("fq") === col("query_id"))
-        .join(dl.select(col("vec_id").as("neighbor_id"), col("cell"), col("xq").as("dxq")),
-          col("cell") === col("probe_cid"))
-        .filter(!(lit(selfExclude) && col("neighbor_id") === col("query_id")))
-        .select(col("query_id"), col("neighbor_id"),
-          expr("vector_l2q(qxq, dxq)").as("adist"))
-      adc.unionByName(fresh)
-        .groupBy("query_id", "neighbor_id")
-        .agg(min("adist").as("adist")) // base ∪ delta overlap: one slot, the exact score
-    }
-    val w = Window.partitionBy("query_id").orderBy(col("adist"), col("neighbor_id"))
-    scoredAll.withColumn("rn", row_number().over(w)).filter(col("rn") <= topK)
-      .select("query_id", "neighbor_id", "adist")
-      .orderBy("query_id", "neighbor_id")
+    servedTopk(adcServe(cb, codes, members, route, queries, selfExclude, delta,
+      hintQueryBroadcast))
   }
 
   /** WIDE re-rank IVF-PQ serving over the scaled cells — the recall tier
-    * above [[pqServeQueriesScaled]] (VERDICT r8 #4): where the single-cell
-    * serve bounds recall by ONE cell's coverage, this path (1) probes the
+    * above [[pqServeScaled]] (VERDICT r8 #4): where the single-cell serve
+    * bounds recall by ONE cell's coverage, this path (1) probes the
     * query's top-`nprobe` fine cells through [[multiprobeRouteDF]] (the
     * graph's router — probe #1 is the single-cell serve's cell, so this is
-    * a strict superset), (2) ranks the pooled members by the SAME ADC LUT
-    * (content still moves as 8-byte codes — nprobe× the LUT joins, nothing
-    * else grows), (3) keeps the top [[serveTopC]] per query and re-ranks
-    * ONLY those by exact quantized L2 against the corpus vectors —
-    * prune-first, the sim_twostage shape: |Q|·C exact distances instead of
-    * |Q|·cell, and the ADC's sub-quantization error cannot reorder the
-    * final top-k. Output (query_id, neighbor_id, adist, fdist): the ADC
-    * score that selected and the exact score that ranked.
+    * a strict superset), (2) ranks the pooled members by the SAME scorer
+    * (content still moves as 8-byte codes), (3) keeps the top
+    * [[serveTopC]] per query and re-ranks ONLY those by exact quantized L2
+    * against the corpus vectors — prune-first, the sim_twostage shape:
+    * |Q|·C exact distances instead of |Q|·cell, and the ADC's
+    * sub-quantization error cannot reorder the final top-k. Output
+    * (query_id, neighbor_id, adist, fdist): the ADC score that selected
+    * and the exact score that ranked.
     *
     * @param xqCorpus (vec_id, xq) — the corpus at [[pqScale]] quantization,
     *                 read thin (two columns) and joined only against the
     *                 |Q|·C shortlist
-    * @param delta    optional fresh vectors, same contract as
-    *                 [[pqServeQueriesScaled]] (exact scores, min-dedup'd) */
-  private[llm] def pqServeQueriesScaledWide(s: org.apache.spark.sql.SparkSession,
-      cb: DataFrame, codes: DataFrame, members: DataFrame,
+    * @see [[pqServeScaled]] for the other parameters */
+  private[llm] def pqServeWide(cb: DataFrame, codes: DataFrame, members: DataFrame,
       sseeds: DataFrame, pf: DataFrame, pg: DataFrame,
       queries: DataFrame, xqCorpus: DataFrame, selfExclude: Boolean,
       nprobe: Int = mpScaledNprobe,
       delta: Option[DataFrame] = None,
       hintQueryBroadcast: Boolean = true): DataFrame = {
-    require(pqScale == kmScale, "scaled IVF-PQ requires pqScale == kmScale")
-    // ADVICE r9: route (|Q|*nprobe rows), lut (|Q|*M*K rows) and the
-    // queries frame scale with |Q| — the streaming serve's micro-batch |Q|
-    // is tiny and KEEPS the explicit hint (stats on a fresh batch frame
-    // can't prove broadcastability in time), but the batch face's |Q| =
-    // N/50 grows a decade per slice and a hinted broadcast is one AQE
-    // cannot demote; there the hint is dropped and AQE upgrades the
-    // shuffle join to broadcast at runtime whenever the measured size
-    // allows (it does at every test SF).
-    def bcq(df: DataFrame): DataFrame = if (hintQueryBroadcast) broadcast(df) else df
     val route = multiprobeRouteDF(
         queries.select(col("query_id").as("vec_id"), col("xq")),
         sseeds, pg, pf, mpSuper, mpCoarse, nprobe)
       .select(col("vec_id").as("query_id"), col("pcid").as("probe_cid"))
-    val cellMembers = bcq(route)
-      .join(members.select(col("vec_id"), col("cid")), col("cid") === col("probe_cid"))
-      // a member can sit in several probed cells' buckets only if cells
-      // overlapped — they don't (unique assignment); no dedup needed
-    val adc = adcScores(
-      (if (selfExclude) cellMembers.filter(col("vec_id") =!= col("query_id"))
-       else cellMembers).select("query_id", "vec_id"),
-      codes, queries, cb, bcq)
-    val scoredAll = delta.fold(adc) { dl =>
-      val fresh = bcq(route)
-        .join(bcq(queries.select(col("query_id").as("fq"), col("xq").as("qxq"))),
-          col("fq") === col("query_id"))
-        .join(dl.select(col("vec_id").as("neighbor_id"), col("cell"), col("xq").as("dxq")),
-          col("cell") === col("probe_cid"))
-        .filter(!(lit(selfExclude) && col("neighbor_id") === col("query_id")))
-        .select(col("query_id"), col("neighbor_id"),
-          expr("vector_l2q(qxq, dxq)").as("adist"))
-      adc.unionByName(fresh)
-        .groupBy("query_id", "neighbor_id")
-        .agg(min("adist").as("adist")) // base ∪ delta overlap: one slot, the exact score
-    }
-    // shortlist: top-C by ADC — a window over thin (query, neighbor, adist)
-    val wc = Window.partitionBy("query_id").orderBy(col("adist"), col("neighbor_id"))
-    val shortlist = scoredAll.withColumn("rn", row_number().over(wc))
-      .filter(col("rn") <= serveTopC)
+    val shortlist = topkBy(adcServe(cb, codes, members, route, queries, selfExclude,
+        delta, hintQueryBroadcast), "adist", serveTopC)
       .select("query_id", "neighbor_id", "adist")
     // exact re-rank: |Q|·C rows pull their true vectors by id (AQE
     // broadcasts the tiny shortlist side), then one window to the final k.
@@ -3209,13 +3134,12 @@ object SimilarityQueries {
         .dropDuplicates("vec_id")
         .select(col("vec_id").as("neighbor_id"), col("xq").as("nxq"))
     }
-    val wf = Window.partitionBy("query_id").orderBy(col("fdist"), col("neighbor_id"))
-    shortlist
+    val rescored = shortlist
       .join(lookup, Seq("neighbor_id"))
-      .join(bcq(queries.select(col("query_id"), col("xq").as("qxq"))), Seq("query_id"))
+      .join(hinted(queries.select(col("query_id"), col("xq").as("qxq")), hintQueryBroadcast),
+        Seq("query_id"))
       .withColumn("fdist", expr("vector_l2q(qxq, nxq)"))
-      .withColumn("rn2", row_number().over(wf))
-      .filter(col("rn2") <= topK)
+    topkBy(rescored, "fdist", topK)
       .select("query_id", "neighbor_id", "adist", "fdist")
       .orderBy("query_id", "neighbor_id")
   }
@@ -3228,7 +3152,7 @@ object SimilarityQueries {
     * v6 = packed per-vector codes, see pq-v3.) */
   private def pqsStage: StagedTable.Stage = StagedTable.Stage("pqs_index", StagedTable.Vecs,
     s"pqs-v6;sp=$assignSProbe;gp=$assignGProbe;cap=$splitCap;scale=$pqScale;M=$pqM;sub=$pqSubDim;k=$pqK;tcap=$pqTrainCap;dims=${LlmHash.dims};" +
-      s"cellTarget=$cellTarget;kmScale=$kmScale")
+      s"cellTarget=$cellTarget;kmScale=$pqScale")
 
   /** Cross-session staged SCALED IVF-PQ index — [[stagePqIndex]]'s shape
     * over the k ∝ N three-level cells, self-contained for serving:
@@ -3247,22 +3171,13 @@ object SimilarityQueries {
     StagedTable.getOrStage(s, d, pqsStage) { write =>
       val fit = kmeansScaledLayer(s, d)
       val (_, cb, codes, pqCaches) = pqBuildCodebooks(s, d)
-      val nullV = lit(null).cast("bigint").as("vec_id")
-      val nullC = lit(null).cast("bigint").as("code")
-      write(cb.select(lit("cb").as("kind"), col("s"), col("cid"),
-          col("carr"), nullV, nullC)
-        .unionByName(codes.select(lit("code").as("kind"), lit(null).cast("int").as("s"),
-          lit(null).cast("bigint").as("cid"), lit(null).cast("array<bigint>").as("carr"),
-          col("vec_id"), col("code")))
-        .unionByName(fit.a2.select(lit("member").as("kind"), lit(null).cast("int").as("s"),
-          col("cid"), lit(null).cast("array<bigint>").as("carr"),
-          col("vec_id"), nullC))
-        .unionByName(fit.sseeds.select(lit("sseed").as("kind"), lit(null).cast("int").as("s"),
-          col("sid").as("cid"), col("sarr").as("carr"), nullV, nullC))
-        .unionByName(fit.pg.select(lit("gparent").as("kind"), lit(null).cast("int").as("s"),
-          col("gid").as("cid"), col("garr").as("carr"), col("sid").as("vec_id"), nullC))
-        .unionByName(fit.pf.select(lit("parent").as("kind"), lit(null).cast("int").as("s"),
-          col("cid"), col("carr"), col("gid").as("vec_id"), nullC)))
+      write(kindTagged(pqsLayout,
+        "cb" -> cb, "code" -> codes,
+        "member" -> fit.a2.select("vec_id", "cid"),
+        "sseed" -> fit.sseeds.select(col("sid").as("cid"), col("sarr").as("carr")),
+        "gparent" -> fit.pg.select(col("gid").as("cid"), col("garr").as("carr"),
+          col("sid").as("vec_id")),
+        "parent" -> fit.pf.select(col("cid"), col("carr"), col("gid").as("vec_id"))))
       fit.release() // frames AND checkpoint blocks (ADVICE r9)
       pqCaches.foreach(_.unpersist(blocking = false))
     }

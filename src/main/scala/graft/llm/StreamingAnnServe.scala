@@ -1,8 +1,8 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
 /** An incoming similarity query on the serving stream. */
 case class QueryVec(query_id: Long, timestamp: Long, embedding: Array[Float])
@@ -14,8 +14,10 @@ case class VecEvent(vec_id: Long, timestamp: Long, embedding: Array[Float])
   * IVF-PQ index (the shape a retrieval endpoint runs: queries arrive as a
   * stream, the index is a versioned on-disk artifact).
   *
-  * Each micro-batch of queries is served by the BATCH `pqServeQueries`
-  * plan against the fingerprinted staged index, via `foreachBatch` — the
+  * Each micro-batch of queries is served by the BATCH serve plan of its
+  * tier (`SimilarityQueries.pqServeFixed` / `pqServeScaled` /
+  * `pqServeWide`) against the fingerprinted staged index, through ONE
+  * per-batch sink loop ([[runServe]]) — the
   * standard Structured Streaming pattern when per-batch logic needs
   * operators a continuous plan can't host (the per-query rank window).
   * This is deliberately NOT a stateful stream: serving holds no state at
@@ -31,69 +33,98 @@ object StreamingAnnServe {
 
   /** Start serving `queries` against the staged index for `corpusDir`;
     * each micro-batch's results — (query_id, neighbor_id, adist), top-k
-    * per query — are handed to `sink`. */
+    * per query — are handed to `sink`.
+    *
+    * `deltaDir` adds FRESHNESS: each batch answers from the staged index
+    * UNION the delta directory [[annIndexStream]] appends to, so a vector
+    * ingested seconds ago is searchable before the next index build. The
+    * delta read goes through the sink directory's `_spark_metadata`
+    * commit log (a batch read over a file-sink path honors it), so an
+    * uncommitted in-flight file never serves; fresh members of the probed
+    * cell score by exact quantized L2 in the same units as the base's ADC
+    * sums (`SimilarityQueries.adcServe`). `Publish.compact`-then-rebuild
+    * retires the delta; an absent/empty delta dir serves base-only. */
   def serve(queries: Dataset[QueryVec], corpusDir: String,
-      trigger: Option[org.apache.spark.sql.streaming.Trigger] = None,
+      deltaDir: Option[String] = None,
+      trigger: Option[Trigger] = None,
       checkpoint: Option[String] = None)
-      (sink: DataFrame => Unit): StreamingQuery = {
-    val s = queries.sparkSession
-    val w0 = queries.toDF().writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val idx = s.table(SimilarityQueries.stagePqIndex(s, corpusDir))
-        val q = batch.select(col("query_id"),
-          expr(s"vector_quantize(embedding, ${SimilarityQueries.pqScale})").as("xq"))
-        sink(SimilarityQueries.pqServeQueries(s, corpusDir,
-          idx.filter(col("kind") === "cb").select("s", "cid", "carr"),
-          idx.filter(col("kind") === "code").select("vec_id", "code"),
-          idx.filter(col("kind") === "ccent").select("label", "carr"),
-          q, selfExclude = false))
-      }
-    val w1 = trigger.fold(w0)(w0.trigger)
-    checkpoint.fold(w1)(c => w1.option("checkpointLocation", c)).start()
-  }
+      (sink: DataFrame => Unit): StreamingQuery =
+    runServe(queries, deltaDir, trigger, checkpoint, sink) { (s, q, delta) =>
+      val (cb, codes, ccent) = SimilarityQueries.indexFrames(
+        s.table(SimilarityQueries.stagePqIndex(s, corpusDir)))
+      SimilarityQueries.pqServeFixed(s, corpusDir, cb, codes, ccent, q,
+        selfExclude = false, delta = delta)
+    }
 
-  /** [[serve]] with FRESHNESS: each query batch is answered from the
-    * staged PQ index UNION the delta directory [[annIndexStream]] is
-    * appending to — a vector ingested seconds ago is searchable without
-    * waiting for the next index build. The delta read goes through the
-    * sink directory's `_spark_metadata` commit log (a batch read over a
-    * file-sink path honors it automatically), so an uncommitted in-flight
-    * file is never served; fresh members of the probed cell score by
-    * exact quantized L2 in the same units as the base's ADC sums (see
-    * `pqServeQueries`' delta note). `Publish.compact`-then-rebuild retires
-    * the delta; an absent/empty delta dir serves base-only. */
-  def serveWithDelta(queries: Dataset[QueryVec], corpusDir: String,
-      deltaDir: String,
-      trigger: Option[org.apache.spark.sql.streaming.Trigger] = None,
+  /** [[serve]] against the SCALED staged index: each query batch routes
+    * through the layered rule and ranks the probed k ∝ N cell
+    * (`pqServeScaled`); `deltaDir` is [[annIndexStreamScaled]]'s
+    * cell-partitioned delta, same freshness contract as [[serve]]. */
+  def serveScaled(queries: Dataset[QueryVec], corpusDir: String,
+      deltaDir: Option[String] = None,
+      trigger: Option[Trigger] = None,
       checkpoint: Option[String] = None)
-      (sink: DataFrame => Unit): StreamingQuery = {
+      (sink: DataFrame => Unit): StreamingQuery =
+    runServe(queries, deltaDir, trigger, checkpoint, sink) { (s, q, delta) =>
+      val (cb, codes, members, sseeds, pf, pg) = SimilarityQueries.scaledIndexFrames(
+        s.table(SimilarityQueries.stagePqIndexScaled(s, corpusDir)))
+      SimilarityQueries.pqServeScaled(cb, codes, members, sseeds, pf, pg, q,
+        selfExclude = false, delta = delta)
+    }
+
+  /** [[serveScaled]] at the WIDE RE-RANK recall tier (VERDICT r8 #4): each
+    * query batch probes its top-nprobe fine cells through the graph's
+    * multiprobe router, pools their members by ADC, and exact-re-ranks the
+    * top-C shortlist against the true quantized corpus vectors
+    * (`pqServeWide`). Recall is the probed-cell-coverage number the graph
+    * audit measures instead of one cell's; the extra cost per batch is
+    * nprobe× the LUT joins plus |Q|·C exact distances and a thin
+    * (vec_id, embedding) corpus read for the shortlist join — measured
+    * against the single-cell tier in STREAM_RATE_ANN_SCALED. */
+  def serveScaledRerank(queries: Dataset[QueryVec], corpusDir: String,
+      deltaDir: Option[String] = None,
+      trigger: Option[Trigger] = None,
+      checkpoint: Option[String] = None)
+      (sink: DataFrame => Unit): StreamingQuery =
+    runServe(queries, deltaDir, trigger, checkpoint, sink) { (s, q, delta) =>
+      val (cb, codes, members, sseeds, pf, pg) = SimilarityQueries.scaledIndexFrames(
+        s.table(SimilarityQueries.stagePqIndexScaled(s, corpusDir)))
+      val xqC = graft.core.Tables.embeddings(s, corpusDir)
+        .select(col("vec_id"), quantized.as("xq"))
+      SimilarityQueries.pqServeWide(cb, codes, members, sseeds, pf, pg, q, xqC,
+        selfExclude = false, delta = delta)
+    }
+
+  /** `embedding` on the serve index's quantization grid. */
+  private def quantized: Column =
+    expr(s"vector_quantize(embedding, ${SimilarityQueries.pqScale})")
+
+  /** The one serve loop behind every tier: per micro-batch, quantize the
+    * queries, read the delta (if any), and sink what `answer` returns.
+    *
+    * The empty-delta steady state must not pay a Spark job per micro-batch
+    * just to learn the delta is still empty: probe with a driver-side FS
+    * listing (a metadata op, no job), and MEMOIZE once non-empty — a delta
+    * only grows until compaction retires it, and compaction is a serve
+    * restart (new corpus version), so the flag never needs to flip back.
+    * A listed-but-uncommitted in-flight file makes the probe true early;
+    * the actual read still goes through the `_spark_metadata` commit log,
+    * so at worst one batch unions an empty frame (never a wrong result). */
+  private def runServe(queries: Dataset[QueryVec], deltaDir: Option[String],
+      trigger: Option[Trigger], checkpoint: Option[String], sink: DataFrame => Unit)
+      (answer: (SparkSession, DataFrame, Option[DataFrame]) => DataFrame): StreamingQuery = {
     val s = queries.sparkSession
-    // The empty-delta steady state must not pay a Spark job per micro-batch
-    // just to learn the delta is still empty: probe with a driver-side FS
-    // listing (a metadata op, no job), and MEMOIZE once non-empty — a delta
-    // only grows until compaction retires it, and compaction is a serve
-    // restart (new corpus version), so the flag never needs to flip back.
-    // A listed-but-uncommitted in-flight file makes the probe true early;
-    // the actual read still goes through the `_spark_metadata` commit log,
-    // so at worst one batch unions an empty frame (never a wrong result).
     var deltaSeen = false
     val w0 = queries.toDF().writeStream.outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val idx = s.table(SimilarityQueries.stagePqIndex(s, corpusDir))
-        val q = batch.select(col("query_id"),
-          expr(s"vector_quantize(embedding, ${SimilarityQueries.pqScale})").as("xq"))
-        if (!deltaSeen) deltaSeen = dirHasDataFiles(s, deltaDir)
+        val q = batch.select(col("query_id"), quantized.as("xq"))
+        if (!deltaSeen) deltaSeen = deltaDir.exists(dirHasDataFiles(s, _))
         val delta =
           if (!deltaSeen) None // absent/empty delta dir: serve base-only
           else scala.util.Try { // _spark_metadata-aware sink read
-            s.read.parquet(deltaDir).select(col("vec_id"), col("cell"),
-              expr(s"vector_quantize(embedding, ${SimilarityQueries.pqScale})").as("xq"))
+            s.read.parquet(deltaDir.get).select(col("vec_id"), col("cell"), quantized.as("xq"))
           }.toOption // a race with the first commit degrades to base-only
-        sink(SimilarityQueries.pqServeQueries(s, corpusDir,
-          idx.filter(col("kind") === "cb").select("s", "cid", "carr"),
-          idx.filter(col("kind") === "code").select("vec_id", "code"),
-          idx.filter(col("kind") === "ccent").select("label", "carr"),
-          q, selfExclude = false, delta = delta))
+        sink(answer(s, q, delta))
       }
     val w1 = trigger.fold(w0)(w0.trigger)
     checkpoint.fold(w1)(c => w1.option("checkpointLocation", c)).start()
@@ -136,7 +167,7 @@ object StreamingAnnServe {
     * ONE-ROW struct array (a no-grouping aggregate — the provably-constant
     * broadcast build), and each vector's cell is a [[routeToCells]]
     * row-local array_min over quantized-L2 distances — the IDENTICAL rule
-    * and (dist ASC, label ASC) tie order `pqServeQueries` routes QUERIES
+    * and (dist ASC, label ASC) tie order `pqServeFixed` routes QUERIES
     * with (ADVICE r7: the former cosine-vs-IVF-centroids rule disagreed
     * with the serve router on boundary vectors, leaving a fresh vector in
     * a cell the matching query never probes at nprobe=1). The centroid
@@ -144,21 +175,26 @@ object StreamingAnnServe {
     * a corpus-version event (new fingerprint) that restarts maintenance,
     * never an in-stream drift. */
   def annIndexStream(vecs: Dataset[VecEvent], corpusDir: String, outDir: String,
-      checkpoint: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+      checkpoint: String): DataStreamWriter[Row] = {
     val s = vecs.sparkSession
-    val ccent = s.table(SimilarityQueries.stagePqIndex(s, corpusDir))
-      .filter(col("kind") === "ccent").select("label", "carr")
-    routeToCells(vecs.toDF(), ccent)
-      .writeStream.format("parquet")
+    val (_, _, ccent) = SimilarityQueries.indexFrames(
+      s.table(SimilarityQueries.stagePqIndex(s, corpusDir)))
+    cellPartitioned(routeToCells(vecs.toDF(), ccent), outDir, checkpoint)
+  }
+
+  /** The delta writer both maintenance streams end in: routed rows append
+    * CELL-PARTITIONED to `outDir` through the file sink's commit log. */
+  private def cellPartitioned(routed: DataFrame, outDir: String,
+      checkpoint: String): DataStreamWriter[Row] =
+    routed.writeStream.format("parquet")
       .partitionBy("cell")
       .option("path", outDir)
       .option("checkpointLocation", checkpoint)
-  }
 
   /** The routing projection shared by [[annIndexStream]] and its batch
     * parity twin: (vec_id, timestamp, embedding, cell) with `cell` the
     * argmin-quantized-L2 coarse centroid, (dist ASC, label ASC) tie order
-    * — `pqServeQueries`' query-routing rule as a row-local expression, so
+    * — `pqServeFixed`' query-routing rule as a row-local expression, so
     * ingest and serve can never disagree on a boundary vector. The k-row
     * `ccent` table (label, carr — the staged PQ index's coarse centroids)
     * folds to one broadcast struct-array row; the per-vector argmin is one
@@ -171,8 +207,7 @@ object StreamingAnnServe {
       .select(struct(col("label").cast("int").as("label"), col("carr")).as("cell"))
       .agg(expr("array_sort(collect_list(cell))").as("cells"))
     vecs
-      .withColumn("xq",
-        expr(s"vector_quantize(embedding, ${SimilarityQueries.pqScale})"))
+      .withColumn("xq", quantized)
       .crossJoin(broadcast(centsRow)) // 1-row struct-array: constant by construction
       .withColumn("cell", expr(
         "array_min(transform(cells, c -> " +
@@ -185,18 +220,13 @@ object StreamingAnnServe {
     * router cannot even compile at scaled k; this one is O(k^(1/3)) per
     * vector and k-agnostic in generated code). Routing =
     * [[routeToCellsScaled]], bit-parity with
-    * `assignScaled`/`pqServeQueriesScaled`. */
+    * `assignScaled`/`pqServeScaled`. */
   def annIndexStreamScaled(vecs: Dataset[VecEvent], corpusDir: String,
-      outDir: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+      outDir: String, checkpoint: String): DataStreamWriter[Row] = {
     val s = vecs.sparkSession
     val (_, _, _, sseeds, pf, pg) = SimilarityQueries.scaledIndexFrames(
       s.table(SimilarityQueries.stagePqIndexScaled(s, corpusDir)))
-    routeToCellsScaled(vecs.toDF(), sseeds, pf, pg)
-      .writeStream.format("parquet")
-      .partitionBy("cell")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpoint)
+    cellPartitioned(routeToCellsScaled(vecs.toDF(), sseeds, pf, pg), outDir, checkpoint)
   }
 
   /** THREE-LEVEL routing as a STREAM-SAFE projection — the `assignScaled`
@@ -230,8 +260,7 @@ object StreamingAnnServe {
       s"struct(vector_l2q(xq, g.sarr) AS d, g.sid AS sid))), 1, $sp)"
     val withS = (0 until sp).foldLeft(
       vecs
-        .withColumn("xq",
-          expr(s"vector_quantize(embedding, ${SimilarityQueries.pqScale})"))
+        .withColumn("xq", quantized)
         .crossJoin(broadcast(ssRow)) // 1-row kcc-entry array: constant by construction
         .withColumn("stop", expr(topS))
         .drop("ss")
@@ -263,79 +292,5 @@ object StreamingAnnServe {
         s"array_min(transform($allKids, c -> " +
           "struct(vector_l2q(xq, c.carr) AS d, c.cid AS cid))).cid").cast("int"))
       .select(col("vec_id"), col("timestamp"), col("embedding"), col("cell"))
-  }
-
-  /** [[serve]]/[[serveWithDelta]] against the SCALED staged index: each
-    * query batch routes through the layered rule and ranks the probed k ∝ N cell via
-    * `pqServeQueriesScaled`; `deltaDir` (when given) adds the freshness
-    * union over [[annIndexStreamScaled]]'s cell-partitioned delta, with
-    * the same memoized FS-listing emptiness probe as the fixed path. */
-  def serveScaled(queries: Dataset[QueryVec], corpusDir: String,
-      deltaDir: Option[String] = None,
-      trigger: Option[org.apache.spark.sql.streaming.Trigger] = None,
-      checkpoint: Option[String] = None)
-      (sink: DataFrame => Unit): StreamingQuery = {
-    val s = queries.sparkSession
-    var deltaSeen = false
-    val w0 = queries.toDF().writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val (cb, codes, members, sseeds, pf, pg) =
-          SimilarityQueries.scaledIndexFrames(
-            s.table(SimilarityQueries.stagePqIndexScaled(s, corpusDir)))
-        val q = batch.select(col("query_id"),
-          expr(s"vector_quantize(embedding, ${SimilarityQueries.pqScale})").as("xq"))
-        if (!deltaSeen) deltaSeen = deltaDir.exists(dirHasDataFiles(s, _))
-        val delta =
-          if (!deltaSeen) None
-          else scala.util.Try {
-            s.read.parquet(deltaDir.get).select(col("vec_id"), col("cell"),
-              expr(s"vector_quantize(embedding, ${SimilarityQueries.pqScale})").as("xq"))
-          }.toOption
-        sink(SimilarityQueries.pqServeQueriesScaled(s, cb, codes, members,
-          sseeds, pf, pg, q, selfExclude = false, delta = delta))
-      }
-    val w1 = trigger.fold(w0)(w0.trigger)
-    checkpoint.fold(w1)(c => w1.option("checkpointLocation", c)).start()
-  }
-
-  /** [[serveScaled]] at the WIDE RE-RANK recall tier (VERDICT r8 #4): each
-    * query batch probes its top-nprobe fine cells through the graph's
-    * multiprobe router, pools their members by ADC, and exact-re-ranks the
-    * top-C shortlist against the true quantized corpus vectors
-    * (`pqServeQueriesScaledWide`). Recall is the probed-cell-coverage
-    * number the graph audit measures instead of one cell's; the extra cost
-    * per batch is nprobe× the LUT joins plus |Q|·C exact distances and a
-    * thin (vec_id, embedding) corpus read for the shortlist join —
-    * measured against the single-cell tier in STREAM_RATE_ANN_SCALED.
-    * Delta contract identical to [[serveScaled]]. */
-  def serveScaledRerank(queries: Dataset[QueryVec], corpusDir: String,
-      deltaDir: Option[String] = None,
-      trigger: Option[org.apache.spark.sql.streaming.Trigger] = None,
-      checkpoint: Option[String] = None)
-      (sink: DataFrame => Unit): StreamingQuery = {
-    val s = queries.sparkSession
-    var deltaSeen = false
-    val w0 = queries.toDF().writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val (cb, codes, members, sseeds, pf, pg) =
-          SimilarityQueries.scaledIndexFrames(
-            s.table(SimilarityQueries.stagePqIndexScaled(s, corpusDir)))
-        val q = batch.select(col("query_id"),
-          expr(s"vector_quantize(embedding, ${SimilarityQueries.pqScale})").as("xq"))
-        val xqC = graft.core.Tables.embeddings(s, corpusDir)
-          .select(col("vec_id"),
-            expr(s"vector_quantize(embedding, ${SimilarityQueries.pqScale})").as("xq"))
-        if (!deltaSeen) deltaSeen = deltaDir.exists(dirHasDataFiles(s, _))
-        val delta =
-          if (!deltaSeen) None
-          else scala.util.Try {
-            s.read.parquet(deltaDir.get).select(col("vec_id"), col("cell"),
-              expr(s"vector_quantize(embedding, ${SimilarityQueries.pqScale})").as("xq"))
-          }.toOption
-        sink(SimilarityQueries.pqServeQueriesScaledWide(s, cb, codes, members,
-          sseeds, pf, pg, q, xqC, selfExclude = false, delta = delta))
-      }
-    val w1 = trigger.fold(w0)(w0.trigger)
-    checkpoint.fold(w1)(c => w1.option("checkpointLocation", c)).start()
   }
 }

@@ -114,12 +114,24 @@ class StreamingAnnServeScaledSpec extends SparkSpec {
       .select(col("cid")).as[Long].head()
     val delta = member42.select(col("vec_id"), lit(cell42).cast("int").as("cell"), col("xq"))
     val queries = member42.select(col("vec_id").as("query_id"), col("xq"))
-    val got = SimilarityQueries.pqServeQueriesScaled(spark, cb, codes, members,
+    val xqC = Tables.embeddings(spark, corpus)
+      .select(col("vec_id"),
+        expr(s"vector_quantize(embedding, ${SimilarityQueries.pqScale})").as("xq"))
+    // both scaled tiers share the one fresh-buffer merge; the wide tier's
+    // exact re-rank also looks the vector up in corpus ∪ delta
+    val single = SimilarityQueries.pqServeScaled(cb, codes, members,
         sseeds, pf, pg, queries, selfExclude = false, delta = Some(delta))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    val self = got.filter { case (q, n, _) => q == 42L && n == 42L }
-    assert(self.length == 1, s"one slot for the doubly-present vector: ${self.toSeq}")
-    assert(self.head._3 == 0L, "the exact (delta) score must win the min-dedup")
+    val wide = SimilarityQueries.pqServeWide(cb, codes, members,
+        sseeds, pf, pg, queries, xqC, selfExclude = false, delta = Some(delta))
+    Seq("single-cell" -> single, "wide" -> wide).foreach { case (tier, served) =>
+      val self = served.filter(col("query_id") === 42L && col("neighbor_id") === 42L)
+        .collect()
+      assert(self.length == 1, s"$tier: one slot for the doubly-present vector: ${self.toSeq}")
+      assert(self.head.getAs[Long]("adist") == 0L,
+        s"$tier: the exact (delta) score must win the min-dedup")
+      if (tier == "wide") assert(self.head.getAs[Long]("fdist") == 0L,
+        "wide: the exact re-rank must find the vector once, at distance 0")
+    }
     dropScaledIndex(corpus)
   }
 
@@ -214,10 +226,10 @@ class StreamingAnnServeScaledSpec extends SparkSpec {
     // the honest IVF-PQ trade, measured here, not asserted away); the
     // single-cell tier is bounded by ONE cell's coverage on top of that.
     // Both runs are deterministic — the assertions pin measured values.
-    val wide = SimilarityQueries.pqServeQueriesScaledWide(spark, cb, codes,
+    val wide = SimilarityQueries.pqServeWide(cb, codes,
         members, sseeds, pf, pg, queries, xqC, selfExclude = false)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val single = SimilarityQueries.pqServeQueriesScaled(spark, cb, codes,
+    val single = SimilarityQueries.pqServeScaled(cb, codes,
         members, sseeds, pf, pg, queries, selfExclude = false)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val wideRecall = exact.count(wide.contains).toDouble / exact.size

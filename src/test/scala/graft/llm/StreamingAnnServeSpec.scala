@@ -39,12 +39,12 @@ class StreamingAnnServeSpec extends SparkSpec {
     q.processAllAvailable()
     q.stop()
 
-    // batch twin: the same queries through pqServeQueries on the same index
+    // batch twin: the same queries through pqServeFixed on the same index
     val idx = spark.table(SimilarityQueries.stagePqIndex(spark, corpus))
     val queries = events.toSeq.toDF("query_id", "timestamp", "embedding")
       .select(col("query_id"),
         expr(s"vector_quantize(embedding, ${SimilarityQueries.pqScale})").as("xq"))
-    val want = SimilarityQueries.pqServeQueries(spark, corpus,
+    val want = SimilarityQueries.pqServeFixed(spark, corpus,
         idx.filter(col("kind") === "cb").select("s", "cid", "carr"),
         idx.filter(col("kind") === "code").select("vec_id", "s", "code"),
         idx.filter(col("kind") === "ccent").select("label", "carr"),
@@ -177,7 +177,7 @@ class StreamingAnnServeSpec extends SparkSpec {
       .select("vec_id", "cell").as[(Long, Int)].collect().toMap
     assert(got.toMap == want, "stream routing must equal the batch twin")
     // ...and the SERVE router (ADVICE r7): the cell a vector ingests into
-    // is the cell pqServeQueries would probe for the identical query —
+    // is the cell pqServeFixed would probe for the identical query —
     // argmin quantized-L2 over ccent, (dist, label) tie order
     val serveRoute = newVecs.toSeq.toDF("vec_id", "timestamp", "embedding")
       .select(col("vec_id"),
@@ -245,7 +245,7 @@ class StreamingAnnServeSpec extends SparkSpec {
     // serve the matching query WITH the delta: fresh id at adist 0, rank 1
     val results = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, Long)]()
     val qin = MemoryStream[QueryVec]
-    val q = StreamingAnnServe.serveWithDelta(qin.toDS(), corpus, deltaDir) { df =>
+    val q = StreamingAnnServe.serve(qin.toDS(), corpus, Some(deltaDir)) { df =>
       df.collect().foreach(r => results.add((r.getLong(0), r.getLong(1), r.getLong(2))))
     }
     qin.addData(QueryVec(1000042L, 1000L, seed))
@@ -268,11 +268,11 @@ class StreamingAnnServeSpec extends SparkSpec {
     assert(!results2.asScala.exists(_._2 == freshId),
       "base-only serve must not surface the un-indexed vector")
 
-    // absent delta dir: serveWithDelta degrades to base-only, no error
+    // absent delta dir: the delta serve degrades to base-only, no error
     val results3 = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, Long)]()
     val qin3 = MemoryStream[QueryVec]
-    val q3 = StreamingAnnServe.serveWithDelta(qin3.toDS(), corpus,
-      dir.resolve("never_written").toString) { df =>
+    val q3 = StreamingAnnServe.serve(qin3.toDS(), corpus,
+      Some(dir.resolve("never_written").toString)) { df =>
       df.collect().foreach(r => results3.add((r.getLong(0), r.getLong(1), r.getLong(2))))
     }
     qin3.addData(QueryVec(1000042L, 1000L, seed))
