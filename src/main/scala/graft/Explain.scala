@@ -131,6 +131,9 @@ object Explain {
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     var tripped = false
     names.foreach { name =>
+      // each query plans against an empty cache, as in Verify and Bench: an
+      // earlier query's persisted fit would otherwise show up in this plan
+      spark.catalog.clearCache()
       val qe = SparkEntry.queries(name)(spark, d).queryExecution
       if (verbose) {
         println(s"===== $name =====")

@@ -58,25 +58,39 @@ object StagedTable {
       bucketBy: Option[(Int, String)] = None) {
     def table(d: String): String = s"graft_${family}_" + math.abs(d.hashCode).toString
 
-    def fingerprint(s: SparkSession, d: String): String =
-      s"$params;" + inFlight.getOrElse((input, d), contentTerm(s, input, d))
+    def fingerprint(s: SparkSession, d: String): String = {
+      val c = content(s, input, d)
+      s"$params;${input.key}=${c.rows};xor=${c.xor}"
+    }
   }
 
-  /** `<docs|vecs>=<row count>;xor=<content xor>` of `input` over corpus `d`. */
-  private def contentTerm(s: SparkSession, input: Input, d: String): String = {
-    val r = Tables.load(s, d, input.table).agg(count(lit(1)),
-      expr(s"coalesce(bit_xor(md5_long60(concat(${input.row}))), 0L)")).head()
-    s"${input.key}=${r.getLong(0)};xor=${r.getLong(1)}"
-  }
+  /** Row count and order-free content xor of one input corpus. */
+  private final case class Content(rows: Long, xor: Long)
+
+  /** The content hash of `input` over corpus `d`: the one of the decision in
+    * progress when there is one, else a fresh scan. */
+  private def content(s: SparkSession, input: Input, d: String): Content =
+    inFlight.getOrElse((input, d), {
+      val r = Tables.load(s, d, input.table).agg(count(lit(1)),
+        expr(s"coalesce(bit_xor(md5_long60(concat(${input.row}))), 0L)")).head()
+      Content(r.getLong(0), r.getLong(1))
+    })
+
+  /** Row count of `input` over `d`. Inside a build it comes from the content
+    * hash the stage decision already paid for, so a builder can size itself
+    * (one task or distributed) without another pass over the input. */
+  def inputRows(s: SparkSession, d: String, input: Input): Long =
+    content(s, input, d).rows
 
   private val Sidecar = "_graft_fingerprint"
 
   private val staged = scala.collection.concurrent.TrieMap.empty[String, String]
 
-  /** Content terms of the decisions in progress, so a build that checks
+  /** Content hashes of the decisions in progress, so a build that checks
     * another family's stage over the same input (km2l reading pqs_index)
-    * does not hash the corpus a second time. */
-  private val inFlight = scala.collection.concurrent.TrieMap.empty[(Input, String), String]
+    * or reads its input size ([[inputRows]]) does not hash the corpus a
+    * second time. */
+  private val inFlight = scala.collection.concurrent.TrieMap.empty[(Input, String), Content]
 
   /** Test hook: number of actual builds this JVM ran — the cross-session
     * reuse specs assert a valid stage does NOT bump it. */
@@ -96,7 +110,7 @@ object StagedTable {
     staged.getOrElseUpdate(table, {
       val key = (stage.input, d)
       val owned = !inFlight.contains(key)
-      if (owned) inFlight(key) = contentTerm(s, stage.input, d)
+      if (owned) inFlight(key) = content(s, stage.input, d)
       try {
         val fp = stage.fingerprint(s, d)
         val loc = location(s, table)

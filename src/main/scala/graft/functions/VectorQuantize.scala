@@ -53,8 +53,10 @@ object VectorQuantize {
     * x ≥ 1, trivially exact below), and every |x| ≥ 2^52 is already an
     * integer — so `frac >= 0.5` is decided on the true binary value,
     * which is also the decision BigDecimal HALF_UP makes (a shortest-repr
-    * decimal equals k.5 exactly iff the double is exactly k.5). */
-  private def roundHalfAway(x: Double): Long =
+    * decimal equals k.5 exactly iff the double is exactly k.5). The same
+    * rule is Spark's `cast(round(x, 0) as bigint)`, so the one-task vector
+    * trainer (`graft.llm.LocalFit`) rounds its centroid means here too. */
+  private[graft] def roundHalfAway(x: Double): Long =
     if (x >= 0) {
       val f = math.floor(x)
       (if (x - f >= 0.5) f + 1 else f).toLong

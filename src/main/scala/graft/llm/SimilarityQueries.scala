@@ -1,8 +1,9 @@
 package graft.llm
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 import graft.batch.Q
 import graft.core.{StagedTable, Tables}
 import LlmHash._
@@ -61,9 +62,9 @@ object SimilarityQueries {
   private val semTau = "0.35"
   /** IVF-PQ geometry: M subspaces × subDim dims, k codes per subspace,
     * quantization scale (the sim_kmeans stance — integers are exact). */
-  private val pqM = 8
-  private val pqSubDim = 8
-  private val pqK = 16
+  private[llm] val pqM = 8
+  private[llm] val pqSubDim = 8
+  private[llm] val pqK = 16
   /** Bits per sub-code. pqK = 16 codewords → 4 bits, so a vector's WHOLE
     * M = 8 code packs into one BIGINT (the FAISS `uint8_t code[M]` layout,
     * flattened): the index's corpus-sized artifact is (vec_id, code) —
@@ -179,7 +180,7 @@ object SimilarityQueries {
     * SemDeDup/IVF production contract the fixed-k queries only document.
     * 32 keeps the re-fit observable at the sf0.01 oracle (500 vectors →
     * 15 cells ≠ the fixed 8). */
-  private val cellTarget = 32
+  private[llm] val cellTarget = 32
 
   /** Cap on EXTRA seeds one hot cell may spawn in the split repair.
     * Uncapped, a round-0 cell of occupancy n spawns n/[[cellTarget]]−1
@@ -399,6 +400,10 @@ object SimilarityQueries {
     * cross-artifact adoption spec asserts a valid PQ stage means ZERO. */
   @volatile private[graft] var scaledFitsComputed: Int = 0
 
+  /** The distributed fit. Its one-task twin is [[LocalFit.scaled]], which
+    * the `pqs_index` and `km2l_asg` stage builds run instead when the
+    * corpus has at most [[pqTrainCap]] vectors ([[fitsInOneTask]]); the
+    * query-shaped callers always run this one. */
   private[llm] def kmeansScaledLayer(s: org.apache.spark.sql.SparkSession, d: String)
       : ScaledFit = {
     scaledFitsComputed += 1
@@ -1044,10 +1049,13 @@ object SimilarityQueries {
     * r8 #2 + the r9 SplitCap guardrail): a checkout upgrading from the
     * uncapped v2 fit re-fingerprints and rebuilds. */
   private[llm] def stageKmeansScaledAssign(s: org.apache.spark.sql.SparkSession,
-      d: String): String =
-    StagedTable.getOrStage(s, d, StagedTable.Stage("km2l_asg", StagedTable.Vecs,
-        s"km3l-asg-v3;sp=$assignSProbe;gp=$assignGProbe;cap=$splitCap;dims=${LlmHash.dims};" +
-          s"cellTarget=$cellTarget;scale=$pqScale")) { write =>
+      d: String): String = stageKmeansScaledAssign(s, d, pqTrainCap)
+
+  /** [[stageKmeansScaledAssign]] with the one-task ceiling as a parameter
+    * (see [[fitsInOneTask]]); a spec forces the distributed fit with 0. */
+  private[llm] def stageKmeansScaledAssign(s: org.apache.spark.sql.SparkSession,
+      d: String, ceiling: Long): String =
+    StagedTable.getOrStage(s, d, km2lStage) { write =>
       // Cross-artifact adoption (SCALING r10): a VALID scaled PQ index
       // already carries this fit's assignment as its kind='member' rows —
       // the fit is deterministic and the pqs fingerprint pins a strict
@@ -1059,12 +1067,71 @@ object SimilarityQueries {
         case Some(idx) =>
           write(idx.filter(col("kind") === "member")
             .select(col("vec_id"), col("cid").cast("long").as("cid")))
+        case None if fitsInOneTask(s, d, km2lStage, ceiling) =>
+          scaledFitsComputed += 1
+          write(trainedInOneTask(s, d, km2lSchema)(c =>
+            LocalFit.scaled(c).members.iterator.map { case (v, cid) => Row(v, cid) }))
         case None =>
           val fit = kmeansScaledLayer(s, d)
           write(fit.a2.select(col("vec_id"), col("cid").cast("long").as("cid")))
           fit.release() // staging materialized — frames AND checkpoint blocks (ADVICE r7/r9)
       }
     }
+
+  private def km2lStage: StagedTable.Stage = StagedTable.Stage("km2l_asg", StagedTable.Vecs,
+    s"km3l-asg-v3;sp=$assignSProbe;gp=$assignGProbe;cap=$splitCap;dims=${LlmHash.dims};" +
+      s"cellTarget=$cellTarget;scale=$pqScale")
+
+  private def km2lSchema: StructType = StructType.fromDDL("vec_id bigint, cid bigint")
+
+  /** Whether a vector-stage build of `stage` over `d` trains in ONE task
+    * ([[LocalFit]]) rather than through the distributed fits: the corpus
+    * has at most `ceiling` vectors. The default ceiling is [[pqTrainCap]]:
+    * below it codebook training never samples, and the task's working set
+    * (N quantized vectors of 64 longs, 128 MB at the cap) is the budget
+    * [[DedupQueries.componentsOf]] gives its one-task solve. N is the row
+    * count of the stage's own content hash, so choosing costs no pass over
+    * the vectors. Prints the branch taken next to the `[stage]` line. */
+  private def fitsInOneTask(s: org.apache.spark.sql.SparkSession, d: String,
+      stage: StagedTable.Stage, ceiling: Long): Boolean = {
+    val n = StagedTable.inputRows(s, d, StagedTable.Vecs)
+    val local = n <= ceiling
+    System.err.println(s"[fit] ${stage.table(d)} ${if (local) "local" else "distributed"} " +
+      s"vecs=$n ceiling=$ceiling")
+    local
+  }
+
+  /** The stage rows `emit` derives from the corpus of `d` gathered into ONE
+    * task — [[DedupQueries.componentsOf]]'s local shape, `coalesce(1)` +
+    * `mapPartitions`, over the `vector_quantize` projection the distributed
+    * fits scan — as one frame for the stage's writer: a single job.
+    *
+    * A kind-tagged stage (`kinds` given) leaves the task in one partition
+    * per kind, so each written file holds one kind, as the distributed
+    * build's union writes them: a serve path's `kind = …` slice then skips
+    * the other kinds' files by their parquet statistics instead of reading
+    * the whole index in one task. */
+  private def trainedInOneTask(s: org.apache.spark.sql.SparkSession, d: String,
+      schema: StructType, kinds: Seq[String] = Nil)(
+      emit: LocalFit.Corpus => Iterator[Row]): DataFrame = {
+    import s.implicits._
+    val rows = Tables.embeddings(s, d)
+      .select(col("vec_id"), col("label"),
+        expr(s"vector_quantize(embedding, $pqScale)").as("xq"))
+      .as[(Long, Integer, Array[Long])]
+      .coalesce(1)
+      .rdd
+      .mapPartitions(it => emit(LocalFit.gather(it)))
+    s.createDataFrame(
+      if (kinds.isEmpty) rows
+      else rows.keyBy(_.getString(0)).partitionBy(new KindPartitioner(kinds)).values,
+      schema)
+  }
+
+  private final class KindPartitioner(kinds: Seq[String]) extends org.apache.spark.Partitioner {
+    def numPartitions: Int = kinds.size
+    def getPartition(kind: Any): Int = kinds.indexOf(kind)
+  }
 
   /** Mutual-edge components shared by sim_components (label cells) and
     * sim_components_kmeans (learned cells): mutual filter (a ∈ knn(b) AND
@@ -2827,11 +2894,16 @@ object SimilarityQueries {
     * (2 Lloyd-style rounds from deterministic seeds) and per-vector 8-byte
     * codes. Factored out so the SCALED index (k ∝ N three-level cells) can
     * share the exact PQ construction with the fixed-label index; returns
-    * (xq quantized corpus, cb, codes, cache handles). */
+    * (xq quantized corpus, cb, codes, cache handles). Its one-task twin is
+    * [[LocalFit.pq]], which the `pq_index` and `pqs_index` stage builds run
+    * instead when the corpus has at most [[pqTrainCap]] vectors
+    * ([[fitsInOneTask]]); the query-shaped callers always run this one. */
   private[llm] def pqBuildCodebooks(s: org.apache.spark.sql.SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame, Seq[DataFrame]) = {
     val n = Tables.embeddings(s, d).count()
     val step = math.max(1L, n / pqTrainCap)
+    if (step > 1L)
+      System.err.println(s"[fit] pq codebooks sampled: step=$step vecs=$n cap=$pqTrainCap")
     // at step = 1 (every oracle-checked corpus) sub feeds three consumers
     // (seed, train, codes) and earns its persist; at decade scale the
     // sampled train is the only repeat consumer, so the corpus-sized xq and
@@ -2915,16 +2987,53 @@ object SimilarityQueries {
     * corpus-sized member (codes) is narrow (vec_id, code — 8 bytes of
     * code per vector). */
   private[graft] def stagePqIndex(s: org.apache.spark.sql.SparkSession, d: String): String =
+    stagePqIndex(s, d, pqTrainCap)
+
+  /** [[stagePqIndex]] with the one-task ceiling as a parameter (see
+    * [[fitsInOneTask]]); a spec forces the distributed build with 0. */
+  private[llm] def stagePqIndex(s: org.apache.spark.sql.SparkSession, d: String,
+      ceiling: Long): String = {
     // pq-v3 = PACKED per-vector codes (one bigint), replacing the
     // (vec_id, s, code) triples of v2
-    StagedTable.getOrStage(s, d, StagedTable.Stage("pq_index", StagedTable.Vecs,
-        s"pq-v3;scale=$pqScale;M=$pqM;sub=$pqSubDim;k=$pqK;tcap=$pqTrainCap;" +
-          s"dims=${LlmHash.dims}")) { write =>
-      val (cb, codes, ccent, caches) = pqBuildIndex(s, d)
-      write(kindTagged(pqsLayout :+ ("label" -> "int"),
-        "cb" -> cb, "code" -> codes, "ccent" -> ccent))
-      caches.foreach(_.unpersist(blocking = false))
+    val stage = StagedTable.Stage("pq_index", StagedTable.Vecs,
+      s"pq-v3;scale=$pqScale;M=$pqM;sub=$pqSubDim;k=$pqK;tcap=$pqTrainCap;" +
+        s"dims=${LlmHash.dims}")
+    StagedTable.getOrStage(s, d, stage) { write =>
+      if (fitsInOneTask(s, d, stage, ceiling))
+        write(trainedInOneTask(s, d, kindSchema(pqLayout), Seq("cb", "code", "ccent")) { c =>
+          pqRows(pqLayout, LocalFit.pq(c)) ++ LocalFit.labelCentroids(c).iterator.map {
+            case (label, carr) => kindRow(pqLayout, "ccent", "label" -> label, "carr" -> carr) }
+        })
+      else {
+        val (cb, codes, ccent, caches) = pqBuildIndex(s, d)
+        write(kindTagged(pqLayout, "cb" -> cb, "code" -> codes, "ccent" -> ccent))
+        caches.foreach(_.unpersist(blocking = false))
+      }
     }
+  }
+
+  private def pqLayout: Seq[(String, String)] = pqsLayout :+ ("label" -> "int")
+
+  /** The schema of a [[kindTagged]] frame: `kind` (never null) and the
+    * `layout` columns (null where a kind lacks them). */
+  private def kindSchema(layout: Seq[(String, String)]): StructType =
+    StructType(StructField("kind", StringType, nullable = false) +:
+      layout.map { case (c, t) => StructField(c, DataType.fromDDL(t)) })
+
+  /** One [[kindTagged]] row: `kind`, the named `cols`, nulls elsewhere. */
+  private def kindRow(layout: Seq[(String, String)], kind: String, cols: (String, Any)*): Row = {
+    val v = new Array[Any](layout.size + 1)
+    v(0) = kind
+    cols.foreach { case (c, x) => v(1 + layout.indexWhere(_._1 == c)) = x }
+    Row.fromSeq(v.toSeq)
+  }
+
+  /** The `cb` and `code` rows of a one-task PQ training. */
+  private def pqRows(layout: Seq[(String, String)], pq: LocalFit.Pq): Iterator[Row] =
+    pq.cb.iterator.map { case (sub, cid, carr) =>
+      kindRow(layout, "cb", "s" -> sub, "cid" -> cid, "carr" -> carr) } ++
+    pq.codes.iterator.map { case (v, code) =>
+      kindRow(layout, "code", "vec_id" -> v, "code" -> code) }
 
   /** The (cb, codes, ccent) frame bundle sliced out of a staged fixed-cell
     * index table — [[scaledIndexFrames]]' twin. */
@@ -3167,19 +3276,40 @@ object SimilarityQueries {
     * law (a grown corpus changes N, k and the xor — a stale scaled index
     * can never serve). */
   private[graft] def stagePqIndexScaled(s: org.apache.spark.sql.SparkSession,
-      d: String): String =
+      d: String): String = stagePqIndexScaled(s, d, pqTrainCap)
+
+  /** [[stagePqIndexScaled]] with the one-task ceiling as a parameter (see
+    * [[fitsInOneTask]]); a spec forces the distributed build with 0. */
+  private[llm] def stagePqIndexScaled(s: org.apache.spark.sql.SparkSession,
+      d: String, ceiling: Long): String =
     StagedTable.getOrStage(s, d, pqsStage) { write =>
-      val fit = kmeansScaledLayer(s, d)
-      val (_, cb, codes, pqCaches) = pqBuildCodebooks(s, d)
-      write(kindTagged(pqsLayout,
-        "cb" -> cb, "code" -> codes,
-        "member" -> fit.a2.select("vec_id", "cid"),
-        "sseed" -> fit.sseeds.select(col("sid").as("cid"), col("sarr").as("carr")),
-        "gparent" -> fit.pg.select(col("gid").as("cid"), col("garr").as("carr"),
-          col("sid").as("vec_id")),
-        "parent" -> fit.pf.select(col("cid"), col("carr"), col("gid").as("vec_id"))))
-      fit.release() // frames AND checkpoint blocks (ADVICE r9)
-      pqCaches.foreach(_.unpersist(blocking = false))
+      if (fitsInOneTask(s, d, pqsStage, ceiling)) {
+        scaledFitsComputed += 1
+        write(trainedInOneTask(s, d, kindSchema(pqsLayout),
+            Seq("cb", "code", "member", "sseed", "gparent", "parent")) { c =>
+          val fit = LocalFit.scaled(c)
+          def row(kind: String, cols: (String, Any)*) = kindRow(pqsLayout, kind, cols: _*)
+          pqRows(pqsLayout, LocalFit.pq(c)) ++
+            fit.members.iterator.map { case (v, cid) => row("member", "vec_id" -> v, "cid" -> cid) } ++
+            fit.sseeds.iterator.map { case (sid, sarr) => row("sseed", "cid" -> sid, "carr" -> sarr) } ++
+            fit.gparents.iterator.map { case (gid, garr, sid) =>
+              row("gparent", "cid" -> gid, "carr" -> garr, "vec_id" -> sid) } ++
+            fit.parents.iterator.map { case (cid, carr, gid) =>
+              row("parent", "cid" -> cid, "carr" -> carr, "vec_id" -> gid) }
+        })
+      } else {
+        val fit = kmeansScaledLayer(s, d)
+        val (_, cb, codes, pqCaches) = pqBuildCodebooks(s, d)
+        write(kindTagged(pqsLayout,
+          "cb" -> cb, "code" -> codes,
+          "member" -> fit.a2.select("vec_id", "cid"),
+          "sseed" -> fit.sseeds.select(col("sid").as("cid"), col("sarr").as("carr")),
+          "gparent" -> fit.pg.select(col("gid").as("cid"), col("garr").as("carr"),
+            col("sid").as("vec_id")),
+          "parent" -> fit.pf.select(col("cid"), col("carr"), col("gid").as("vec_id"))))
+        fit.release() // frames AND checkpoint blocks (ADVICE r9)
+        pqCaches.foreach(_.unpersist(blocking = false))
+      }
     }
 
   /** The (cb, codes, members, sseeds, pf, pg) frame bundle sliced out of

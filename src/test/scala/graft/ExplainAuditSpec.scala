@@ -19,6 +19,7 @@ class ExplainAuditSpec extends SparkSpec {
     try {
       val dir = sf("sf0.001")
       val bad = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
+        spark.catalog.clearCache() // as Explain.main: no earlier query's caches
         val plan = SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan
         Explain.audit(plan, Explain.DeclaredBoundedBuilds.getOrElse(name, 0),
           Explain.DeclaredGlobalWindows.getOrElse(name, 0))
