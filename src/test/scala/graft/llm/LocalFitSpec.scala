@@ -82,6 +82,23 @@ class LocalFitSpec extends SparkSpec {
     assert(sameBothWays(corpus).exists(_._2 >= k), "a split seed (cid ≥ k) holds members")
   }
 
+  test("one-task vector stages equal the distributed ones when the super probe prunes") {
+    // 5 000 vectors: k = 156 cells under kcc = 6 supers, more than the
+    // assignSProbe = 4 a vector routes through, so the super-level top-4
+    // decides. 4 000 of them are 40 hashed clusters spread over all 64
+    // dims (a geometry where the top-4 supers miss cells); the
+    // 1 000-vector clump at cluster 7's centre fills one round-1 cell far
+    // past 3·cellTarget, so its split repair seeds more than one extra cell
+    val n = 5000L
+    val corpus = corpusOf("fit_prune", planted(n,
+      "if(id < 4000, pmod(hash(id % 40, j), 1000) / 1000.0 + pmod(hash(id, j), 1000) / 4000.0, " +
+        "pmod(hash(7, j), 1000) / 1000.0 + 0.001 * ((id * 7 + j * 3) % 11))"))
+    val k = n / SimilarityQueries.cellTarget
+    assert(SimilarityQueries.kccOf(k) > SimilarityQueries.assignSProbe)
+    val splitCells = sameBothWays(corpus).map(_._2).filter(_ >= k).distinct
+    assert(splitCells.size > 1, s"split seeds holding members: $splitCells")
+  }
+
   test("one-task vector stages equal the distributed ones on an empty and a one-row corpus") {
     assert(sameBothWays(corpusOf("fit_empty", planted(0, "j"))).isEmpty)
     assert(sameBothWays(corpusOf("fit_one", planted(1, "j * 0.01"))) == Seq(0L -> 0L))
