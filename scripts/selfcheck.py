@@ -4,7 +4,9 @@
 Usage: python3 scripts/selfcheck.py <sfDir> <verifyOutDir> [artifactJson]
 Runs each oracle_sql.json query in DuckDB with the sfDir parquet tables
 registered as views, loads the Spark parquet result, sorts columns by name
-and rows by all columns, and compares values.
+and rows by all columns, and compares values. Byte-identical oracle SQL (a
+query and its staged twin share one) runs once in DuckDB, and every Spark
+output it gates compares against that one result (or fails on its error).
 
 When artifactJson is given (normally CORRECTNESS_LOCAL.json at the repo
 root), also writes the round's builder-produced correctness artifact: one
@@ -27,6 +29,18 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     df = df.sort_values(by=list(df.columns), ignore_index=True)
     return df
 
+def oracle_result(con, memo, sql):
+    """canon(DuckDB's result of `sql`), evaluated once per SQL text; a
+    failed evaluation is remembered and raised again."""
+    if sql not in memo:
+        try:
+            memo[sql] = canon(con.execute(sql).df())
+        except Exception as e:
+            memo[sql] = e
+    if isinstance(memo[sql], Exception):
+        raise memo[sql]
+    return memo[sql]
+
 def main(sf_dir, out_dir, artifact=None):
     con = duckdb.connect()
     for t in TABLES:
@@ -36,6 +50,7 @@ def main(sf_dir, out_dir, artifact=None):
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
     results = {}  # name -> dict of boolean checks
+    memo = {}  # oracle SQL text -> its canon result or its exception
     for name, sql in sorted(oracle.items()):
         spark_dir = f"{out_dir}/{name}"
         r = results[name] = {"rows_match": False, "schema_match": False,
@@ -45,7 +60,7 @@ def main(sf_dir, out_dir, artifact=None):
             print(f"FAIL {name}: no spark output"); n_fail += 1; continue
         try:
             got = canon(pd.read_parquet(spark_dir))
-            want = canon(con.execute(sql).df())
+            want = oracle_result(con, memo, sql)
         except Exception as e:
             print(f"FAIL {name}: {type(e).__name__}: {e}"); n_fail += 1; continue
         r["schema_match"] = list(got.columns) == list(want.columns)

@@ -3,7 +3,7 @@ package graft.batch
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables
-import Q.{dec4, sqlDec4, exactSum, sqlExactSum, exactAvg, sqlExactAvg}
+import Q.{exactSum, sqlExactSum, exactAvg, sqlExactAvg}
 
 /** Joins & enrichment (SURVEY.md §2.8) plus a TPC-H-style relational suite.
   *

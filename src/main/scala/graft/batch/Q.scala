@@ -2,7 +2,6 @@ package graft.batch
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** One correctness-gated query: a Spark DataFrame program plus (optionally)
   * the equivalent ANSI SQL the driver runs in DuckDB over the same parquet.

@@ -78,9 +78,10 @@ object StagedTable {
 
   /** Row count of `input` over `d`. Inside a build it comes from the content
     * hash the stage decision already paid for, so a builder can size itself
-    * (one task or distributed) without another pass over the input. */
+    * (one task or distributed) without another pass over the input; outside
+    * one it is a plain count, which hashes nothing. */
   def inputRows(s: SparkSession, d: String, input: Input): Long =
-    content(s, input, d).rows
+    inFlight.get((input, d)).fold(Tables.load(s, d, input.table).count())(_.rows)
 
   private val Sidecar = "_graft_fingerprint"
 

@@ -1,6 +1,8 @@
 package graft.core
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
@@ -27,7 +29,8 @@ object Tables {
     // re-configuring a live session on every call is a concurrency footgun.
     if (!spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").contains("true"))
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val df = spark.read.schema(schemaOf(spark, path)).parquet(path)
     if (name == "events") {
       import org.apache.spark.sql.functions.{col, expr}
       import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
@@ -37,6 +40,35 @@ object Tables {
         case _                => df
       }
     } else df
+  }
+
+  /** Each table's schema with the version of its files it was read from. */
+  private val schemas = scala.collection.concurrent.TrieMap.empty[String, (Seq[Any], StructType)]
+
+  /** The schema of the parquet table at `path`, read from its footers once
+    * per version of the table: a footer read is a Spark job, and a query
+    * or a stage build loads the same table several times. The version is
+    * every file under `path` with its length and modification time, plus
+    * the session's parquet settings, so a table rewritten under the same
+    * path is read fresh. A missing path is left to the read to report. */
+  private def schemaOf(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = Seq.newBuilder[(String, Long, Long)]
+    if (fs.exists(p)) {
+      val it = fs.listFiles(p, true)
+      while (it.hasNext) {
+        val f = it.next()
+        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+    }
+    val version = files.result().sorted ++
+      spark.conf.getAll.filter(_._1.contains("parquet")).toSeq.sorted
+    schemas.get(path).collect { case (v, schema) if v == version => schema }.getOrElse {
+      val schema = spark.read.parquet(path).schema
+      schemas(path) = (version, schema)
+      schema
+    }
   }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")

@@ -4,9 +4,10 @@ import graft.functions.VectorQuantize.roundHalfAway
 import SimilarityQueries.{assignGProbe, assignSProbe, cellTarget, kccOf, pqCodeBits, pqK,
   pqM, pqSubDim, splitCap}
 
-/** The vector-stage trainers in ONE task: the in-process twins of the
-  * distributed fits behind the `pqs_index`, `km2l_asg` and `pq_index`
-  * stages, used when the corpus has at most `pqTrainCap` vectors (see
+/** The vector fits in ONE task: the in-process twins of the distributed
+  * three-level fit and PQ training, which `SimilarityQueries.scaledFit` and
+  * `SimilarityQueries.pqTrain` run instead, for every caller, when the
+  * corpus has at most `pqTrainCap` vectors (see
   * `SimilarityQueries.fitsInOneTask`).
   *
   * Each method reproduces its twin row for row: the same seeds (the rows
@@ -17,7 +18,9 @@ import SimilarityQueries.{assignGProbe, assignSProbe, cellTarget, kccOf, pqCodeB
   * [[graft.functions.VectorQuantize]]). Vectors arrive already quantized
   * by the `vector_quantize` projection the distributed fits scan. A corpus
   * row must carry a `vec_id` and an embedding, and `vec_id`s are keys —
-  * the embeddings contract every stage builder assumes.
+  * the embeddings contract every stage builder assumes. Each fit comes out
+  * as [[Tagged]] rows, which the caller slices into the distributed twin's
+  * frames.
   *
   * Why: below the ceiling the distributed fit is job count, not work — ~100
   * Spark jobs, most of them one task over k-row tables, and the query
@@ -28,30 +31,26 @@ import SimilarityQueries.{assignGProbe, assignSProbe, cellTarget, kccOf, pqCodeB
 private[llm] object LocalFit {
 
   /** The corpus gathered into one task, in scan order. */
-  final class Corpus(val ids: Array[Long], val labels: Array[Integer],
-      val xq: Array[Array[Long]]) {
+  final class Corpus(val ids: Array[Long], val xq: Array[Array[Long]]) {
     def size: Int = ids.length
   }
 
-  def gather(rows: Iterator[(Long, Integer, Array[Long])]): Corpus = {
+  def gather(rows: Iterator[(Long, Array[Long])]): Corpus = {
     val ids = Array.newBuilder[Long]
-    val labels = Array.newBuilder[Integer]
     val xq = Array.newBuilder[Array[Long]]
-    rows.foreach { case (i, l, v) => ids += i; labels += l; xq += v }
-    new Corpus(ids.result(), labels.result(), xq.result())
+    rows.foreach { case (i, v) => ids += i; xq += v }
+    new Corpus(ids.result(), xq.result())
   }
 
-  /** The three-level fit of `SimilarityQueries.kmeansScaledLayer` as stage
-    * rows: the final assignment `members` (vec_id, cid), the super seeds
-    * (sid, sarr), and the round-2 parent maps `gparents` (gid, garr, sid)
-    * and `parents` (cid, carr, gid). */
-  final case class Scaled(members: Seq[(Long, Long)], sseeds: Seq[(Long, Array[Long])],
-      gparents: Seq[(Long, Array[Long], Long)], parents: Seq[(Long, Array[Long], Long)])
-
-  /** Step-1 PQ training of `SimilarityQueries.pqBuildCodebooks` (never
-    * sampled below the ceiling): codebooks (s, cid, carr) and packed codes
-    * (vec_id, code). */
-  final case class Pq(cb: Seq[(Int, Long, Array[Long])], codes: Seq[(Long, Long)])
+  /** One fitted row (kind, i, j, arr). Each kind fills the fields its frame
+    * has and leaves the rest 0 or null:
+    *   - `member` (vec_id, cid): the final assignment;
+    *   - `sseed` (sid, -, sarr): the super seeds;
+    *   - `gparent` (gid, sid, garr): the coarse→super parent map;
+    *   - `parent` (cid, gid, carr): the fine→coarse parent map;
+    *   - `cb` (s, cid, carr): the PQ codebooks;
+    *   - `code` (vec_id, code): the packed PQ codes. */
+  type Tagged = (String, Long, Long, Array[Long])
 
   /** Rows of (id, vector): seeds or centroids. */
   private final class Table(val ids: Array[Long], val vecs: Array[Array[Long]]) {
@@ -157,8 +156,9 @@ private[llm] object LocalFit {
 
   /** `kmeansScaledLayer`: k = max(8, N / cellTarget) seeds, one routed
     * assign, the Lloyd update plus ONE capped hot-cell split repair, the
-    * round-2 parent maps and the final routed assign. */
-  def scaled(c: Corpus): Scaled = {
+    * round-2 parent maps and the final routed assign, as `member`, `sseed`,
+    * `gparent` and `parent` rows. */
+  def scaled(c: Corpus): Iterator[Tagged] = {
     val k = math.max(8L, c.size / cellTarget)
     val kcc = kccOf(k)
     val (sseeds, gseeds, c0) = (below(c, kcc), below(c, kcc * kcc), below(c, k))
@@ -183,24 +183,24 @@ private[llm] object LocalFit {
     }
     val c1 = new Table((lloyd ++ split).map(_._1).toArray, (lloyd ++ split).map(_._2).toArray)
     val r1 = new Routing(c1, gseeds, sseeds)
-    Scaled(
-      members = c.xq.indices.map(i => i -> r1.assign(c.xq(i))).collect {
-        case (i, j) if j >= 0 => c.ids(i) -> c1.ids(j) },
-      sseeds = sseeds.all.toSeq.map(s => sseeds.ids(s) -> sseeds.vecs(s)),
-      gparents = gseeds.all.toSeq.collect { case g if r1.pg(g) >= 0 =>
-        (gseeds.ids(g), gseeds.vecs(g), sseeds.ids(r1.pg(g))) },
-      parents = c1.all.toSeq.collect { case j if r1.pf(j) >= 0 =>
-        (c1.ids(j), c1.vecs(j), gseeds.ids(r1.pf(j))) })
+    c.xq.indices.iterator.map(i => i -> r1.assign(c.xq(i))).collect {
+      case (i, j) if j >= 0 => ("member", c.ids(i), c1.ids(j), null: Array[Long]) } ++
+    sseeds.all.iterator.map(s => ("sseed", sseeds.ids(s), 0L, sseeds.vecs(s))) ++
+    gseeds.all.iterator.collect { case g if r1.pg(g) >= 0 =>
+      ("gparent", gseeds.ids(g), sseeds.ids(r1.pg(g)), gseeds.vecs(g)) } ++
+    c1.all.iterator.collect { case j if r1.pf(j) >= 0 =>
+      ("parent", c1.ids(j), gseeds.ids(r1.pf(j)), c1.vecs(j)) }
   }
 
   /** Sub-vector `s` of `x` as (offset, length) — `slice(xq, s·sub + 1, sub)`. */
   private def sub(x: Array[Long], s: Int): (Int, Int) =
     (s * pqSubDim, math.max(0, math.min(pqSubDim, x.length - s * pqSubDim)))
 
-  /** `pqBuildCodebooks` at step 1: per subspace, the `vec_id < pqK` seeds,
-    * one argmin round, the rounded-mean codebooks, and each vector's
-    * nearest codeword per subspace packed as code_s << s·pqCodeBits. */
-  def pq(c: Corpus): Pq = {
+  /** `pqBuildCodebooks` at step 1 (never sampled below the ceiling): per
+    * subspace, the `vec_id < pqK` seeds, one argmin round, the rounded-mean
+    * codebooks (`cb` rows), and each vector's nearest codeword per subspace
+    * packed as code_s << s·pqCodeBits (`code` rows). */
+  def pq(c: Corpus): Iterator[Tagged] = {
     val seeds = below(c, pqK)
     val means = new Means(pqM * seeds.size, pqSubDim)
     for (i <- 0 until c.size; s <- 0 until pqM) {
@@ -215,7 +215,7 @@ private[llm] object LocalFit {
       carr <- means.mean(s * seeds.size + j)) yield (s, seeds.ids(j), carr)
     val book = cb.groupBy(_._1).map { case (s, e) =>
       s -> new Table(e.map(_._2).toArray, e.map(_._3).toArray) }
-    val codes = c.xq.indices.flatMap { i =>
+    val codes = c.xq.indices.iterator.flatMap { i =>
       val x = c.xq(i)
       val picks = book.toSeq.flatMap { case (s, t) =>
         val (xo, xn) = sub(x, s)
@@ -224,17 +224,7 @@ private[llm] object LocalFit {
       }
       if (picks.isEmpty) None else Some(c.ids(i) -> picks.sum)
     }
-    Pq(cb, codes)
-  }
-
-  /** `pqBuildIndex`'s coarse centroids: each label's rounded-mean vector
-    * (a null label is one group, as in a `groupBy`). */
-  def labelCentroids(c: Corpus): Seq[(Integer, Array[Long])] = {
-    val key = c.labels.map(Option(_))
-    val labels = key.distinct
-    val group = labels.zipWithIndex.toMap
-    val means = new Means(labels.length, c.xq.map(_.length).maxOption.getOrElse(0))
-    c.xq.indices.foreach(i => means.add(group(key(i)), c.xq(i), 0, c.xq(i).length))
-    labels.toSeq.flatMap(l => means.mean(group(l)).map(l.orNull -> _))
+    cb.iterator.map { case (s, cid, carr) => ("cb", s.toLong, cid, carr) } ++
+      codes.map { case (v, code) => ("code", v, code, null: Array[Long]) }
   }
 }

@@ -1,9 +1,8 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 import graft.batch.Q
 import graft.core.{StagedTable, Tables}
 import LlmHash._
@@ -368,18 +367,23 @@ object SimilarityQueries {
     * vectors — documented, not yet needed: at 2M vectors it is 100M
     * broadcast-side distance evals, seconds of work).
     *
-    * Returns the [[ScaledFit]] bundle: xq (persisted), the super and
-    * coarse seed tables, c1 (fine centroids, persisted), the round-1
-    * fine→coarse (pf) and coarse→super (pg) parent maps (persisted —
-    * downstream probe selection and the scaled PQ index REUSE them instead
-    * of recomputing; ADVICE r7), the final a2 assignment, k, and the
-    * persisted cache handles. Handle contract (the pqBuildIndex pattern):
-    * callers that materialize their result (staging builders) unpersist
-    * `caches` when done; query-shaped callers hand frames to the runner
-    * and rely on the Verify/Bench clearCache contract. */
-  private[llm] case class ScaledFit(xq: DataFrame, sseeds: DataFrame,
-      gseeds: DataFrame, cents: DataFrame, pf: DataFrame, pg: DataFrame,
-      a2: DataFrame, k: Long, caches: Seq[DataFrame],
+    * Returns the [[ScaledFit]] bundle: xq (persisted), the final
+    * assignment `members`, the super seed table, the round-1 fine→coarse
+    * (pf) and coarse→super (pg) parent maps (persisted — downstream probe
+    * selection and the scaled PQ index REUSE them instead of recomputing;
+    * ADVICE r7), and the persisted cache handles. Handle contract (the
+    * pqBuildIndex pattern): callers that materialize their result (staging
+    * builders) call `release()` when done; query-shaped callers hand frames
+    * to the runner and rely on the Verify/Bench clearCache contract.
+    *
+    * @param xq      (vec_id, xq) the corpus at [[pqScale]] quantization
+    * @param members (vec_id, cid) each vector's cell
+    * @param sseeds  (sid, sarr) super seeds
+    * @param pf      (cid, gid, carr) fine centroids with their coarse parent
+    * @param pg      (gid, sid, garr) routable coarse seeds with their super
+    *                parent */
+  private[llm] case class ScaledFit(xq: DataFrame, members: DataFrame, sseeds: DataFrame,
+      pf: DataFrame, pg: DataFrame, caches: Seq[DataFrame],
       ckRdds: Seq[org.apache.spark.rdd.RDD[_]] = Nil) {
     /** Release EVERYTHING the fit pinned in the block manager: the persisted
       * frames AND the localCheckpoint block sets behind its two
@@ -401,13 +405,35 @@ object SimilarityQueries {
     * cross-artifact adoption spec asserts a valid PQ stage means ZERO. */
   @volatile private[graft] var scaledFitsComputed: Int = 0
 
-  /** The distributed fit. Its one-task twin is [[LocalFit.scaled]], which
-    * the `pqs_index` and `km2l_asg` stage builds run instead when the
-    * corpus has at most [[pqTrainCap]] vectors ([[fitsInOneTask]]); the
-    * query-shaped callers always run this one. */
-  private[llm] def kmeansScaledLayer(s: org.apache.spark.sql.SparkSession, d: String)
-      : ScaledFit = {
+  /** THE scaled fit of corpus `d`, for every caller — the stage builders
+    * and the query-shaped callers alike. It trains in one task
+    * ([[LocalFit.scaled]]) when [[fitsInOneTask]] says the corpus is small
+    * enough, and through the distributed [[kmeansScaledLayer]] otherwise;
+    * both give the same rows. The one-task job's kind-tagged output is
+    * persisted once, and the fit's frames are slices of it, the way
+    * [[scaledIndexFrames]] slices a staged index. */
+  private[llm] def scaledFit(s: org.apache.spark.sql.SparkSession, d: String): ScaledFit = {
     scaledFitsComputed += 1
+    if (!fitsInOneTask(s, d, "scaled")) kmeansScaledLayer(s, d)
+    else {
+      val t = trainedInOneTask(s, d)(LocalFit.scaled)
+      val xq = Tables.embeddings(s, d)
+        .select(col("vec_id"), expr(s"vector_quantize(embedding, $pqScale)").as("xq"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      ScaledFit(xq,
+        members = kindSlice(t, "member", col("i").as("vec_id"), col("j").as("cid")),
+        sseeds = kindSlice(t, "sseed", col("i").as("sid"), col("arr").as("sarr")),
+        pf = kindSlice(t, "parent", col("i").as("cid"), col("j").as("gid"), col("arr").as("carr")),
+        pg = kindSlice(t, "gparent", col("i").as("gid"), col("j").as("sid"), col("arr").as("garr")),
+        caches = Seq(t, xq))
+    }
+  }
+
+  /** The distributed three-level fit: the 100 TB path, and the only one
+    * that runs above the one-task ceiling. Its one-task twin is
+    * [[LocalFit.scaled]]; [[scaledFit]] chooses between them. */
+  private def kmeansScaledLayer(s: org.apache.spark.sql.SparkSession, d: String)
+      : ScaledFit = {
     val n = Tables.embeddings(s, d).count()
     val k = math.max(8L, n / cellTarget)
     val kcc = kccOf(k)
@@ -485,8 +511,7 @@ object SimilarityQueries {
     val c1 = c1Cut.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val pf1 = fineParents(c1, gseeds)
     val pg1 = superParents(pf1, gseeds, sseeds)
-    ScaledFit(xq, sseeds, gseeds, c1, pf1, pg1,
-      assignScaled(xq, pf1, pg1, sseeds), k,
+    ScaledFit(xq, assignScaled(xq, pf1, pg1, sseeds).select("vec_id", "cid"), sseeds, pf1, pg1,
       Seq(xq, a1, c1, pf0, pg0, pf1, pg1), a1Ck ++ c1Ck)
   }
 
@@ -771,15 +796,15 @@ object SimilarityQueries {
   private[llm] def multiprobeKnnScaledDF(s: org.apache.spark.sql.SparkSession,
       d: String, nSuper: Int = mpSuper, nCoarse: Int = mpCoarse,
       nprobe: Int = mpScaledNprobe): DataFrame = {
-    val fit = kmeansScaledLayer(s, d)
-    val (xq, a2) = (fit.xq, fit.a2)
+    val fit = scaledFit(s, d)
+    val xq = fit.xq
     // parent maps the final assign already built — reuse, don't re-persist
     // (ADVICE r7)
     val probes = multiprobeRouteDF(xq, fit.sseeds, fit.pg, fit.pf,
       nSuper, nCoarse, nprobe)
     probes.join(xq, "vec_id")
       .join(
-        a2.select(col("cid").as("pcid"), col("vec_id").as("neighbor_id"))
+        fit.members.select(col("cid").as("pcid"), col("vec_id").as("neighbor_id"))
           .join(xq.select(col("vec_id").as("neighbor_id"), col("xq").as("xqb")),
             "neighbor_id"),
         "pcid") // hash-partitioned on the probed cell — never all-pairs
@@ -1050,12 +1075,7 @@ object SimilarityQueries {
     * r8 #2 + the r9 SplitCap guardrail): a checkout upgrading from the
     * uncapped v2 fit re-fingerprints and rebuilds. */
   private[llm] def stageKmeansScaledAssign(s: org.apache.spark.sql.SparkSession,
-      d: String): String = stageKmeansScaledAssign(s, d, pqTrainCap)
-
-  /** [[stageKmeansScaledAssign]] with the one-task ceiling as a parameter
-    * (see [[fitsInOneTask]]); a spec forces the distributed fit with 0. */
-  private[llm] def stageKmeansScaledAssign(s: org.apache.spark.sql.SparkSession,
-      d: String, ceiling: Long): String =
+      d: String): String =
     StagedTable.getOrStage(s, d, km2lStage) { write =>
       // Cross-artifact adoption (SCALING r10): a VALID scaled PQ index
       // already carries this fit's assignment as its kind='member' rows —
@@ -1068,13 +1088,9 @@ object SimilarityQueries {
         case Some(idx) =>
           write(idx.filter(col("kind") === "member")
             .select(col("vec_id"), col("cid").cast("long").as("cid")))
-        case None if fitsInOneTask(s, d, km2lStage, ceiling) =>
-          scaledFitsComputed += 1
-          write(trainedInOneTask(s, d, km2lSchema)(c =>
-            LocalFit.scaled(c).members.iterator.map { case (v, cid) => Row(v, cid) }))
         case None =>
-          val fit = kmeansScaledLayer(s, d)
-          write(fit.a2.select(col("vec_id"), col("cid").cast("long").as("cid")))
+          val fit = scaledFit(s, d)
+          write(fit.members)
           fit.release() // staging materialized — frames AND checkpoint blocks (ADVICE r7/r9)
       }
     }
@@ -1083,64 +1099,71 @@ object SimilarityQueries {
     s"km3l-asg-v3;sp=$assignSProbe;gp=$assignGProbe;cap=$splitCap;dims=${LlmHash.dims};" +
       s"cellTarget=$cellTarget;scale=$pqScale")
 
-  private def km2lSchema: StructType = StructType.fromDDL("vec_id bigint, cid bigint")
+  /** The corpus size at or below which [[fitsInOneTask]] trains in one
+    * task: [[pqTrainCap]]. Only a `withValue` scope lowers it, to 0, so a
+    * spec or the plan audit gets the distributed fits; it never goes above
+    * [[pqTrainCap]], past which the one-task PQ training would not sample
+    * as [[pqBuildCodebooks]] does. */
+  private[graft] val oneTaskCeiling = new scala.util.DynamicVariable[Long](pqTrainCap)
 
-  /** Whether a vector-stage build of `stage` over `d` trains in ONE task
+  /** Whether the `fit` ("scaled" or "pq") of corpus `d` trains in ONE task
     * ([[LocalFit]]) rather than through the distributed fits: the corpus
-    * has at most `ceiling` vectors. The default ceiling is [[pqTrainCap]]:
-    * below it codebook training never samples, and the task's working set
+    * has at most [[oneTaskCeiling]] vectors. Below [[pqTrainCap]]
+    * codebook training never samples, and the task's working set
     * (N quantized vectors of 64 longs, 128 MB at the cap) is the budget
     * [[DedupQueries.componentsOf]] gives its one-task solve. The one task
     * wins all the way up to it: a fresh-process `pqs_index` build (4-core
     * host, GenScale slices of sf0.1) took 8.2 s in one task against 26.8 s
     * distributed at 20k vectors, 20.3 s against 57.2 s at 200k, and 26.5 s
     * against 72.2 s at 262 144, where the JVM's peak heap was 1.0 GB
-    * against 4.0 GB. N is the row count of the stage's own content hash,
-    * so choosing costs no pass over the vectors. Prints the branch taken
-    * next to the `[stage]` line. */
+    * against 4.0 GB. N comes from [[StagedTable.inputRows]]: inside a
+    * stage build, the row count of the stage's own content hash, so
+    * choosing costs no pass over the vectors; outside one, a plain count.
+    * Prints `[fit] <fit> <d> local|distributed vecs=<N> ceiling=<c>`, for
+    * the stage builds and the query-shaped callers alike. */
   private def fitsInOneTask(s: org.apache.spark.sql.SparkSession, d: String,
-      stage: StagedTable.Stage, ceiling: Long): Boolean = {
+      fit: String): Boolean = {
     val n = StagedTable.inputRows(s, d, StagedTable.Vecs)
+    val ceiling = oneTaskCeiling.value
     val local = n <= ceiling
-    System.err.println(s"[fit] ${stage.table(d)} ${if (local) "local" else "distributed"} " +
+    System.err.println(s"[fit] $fit $d ${if (local) "local" else "distributed"} " +
       s"vecs=$n ceiling=$ceiling")
     local
   }
 
-  /** The stage rows `emit` derives from the corpus of `d` gathered into ONE
-    * task — [[DedupQueries.componentsOf]]'s local shape, `coalesce(1)` +
-    * `mapPartitions`, over the `vector_quantize` projection the distributed
-    * fits scan — as one frame for the stage's writer: a single job.
+  /** The [[LocalFit.Tagged]] rows `emit` derives from the corpus of `d`
+    * gathered into ONE task — [[DedupQueries.componentsOf]]'s local shape,
+    * `coalesce(1)` + `mapPartitions`, over the `vector_quantize` projection
+    * the distributed fits scan — as one persisted single-partition frame
+    * (kind, i, j, arr), computed once by whichever job first reads it.
     *
-    * A kind-tagged stage (`kinds` given) leaves the task in one partition
-    * per kind, so each written file holds one kind, as the distributed
-    * build's union writes them: a serve path's `kind = …` slice then skips
+    * A stage that unions [[kindSlice]]s of it in [[kindTagged]] writes one
+    * file per kind, as the distributed build's union does: each slice is
+    * one partition of the union. A serve path's `kind = …` slice then skips
     * the other kinds' files by their parquet statistics instead of reading
     * the whole index in one task. Measured on a 200k-vector corpus (4-core
     * host, warm `sim_ivfpq_scaled_staged`, two runs each): 4.67–4.97 s per
     * serve with per-kind files, 5.44–5.45 s with the single file; at 500
     * vectors the two layouts time the same. */
-  private def trainedInOneTask(s: org.apache.spark.sql.SparkSession, d: String,
-      schema: StructType, kinds: Seq[String] = Nil)(
-      emit: LocalFit.Corpus => Iterator[Row]): DataFrame = {
+  private def trainedInOneTask(s: org.apache.spark.sql.SparkSession, d: String)(
+      emit: LocalFit.Corpus => Iterator[LocalFit.Tagged]): DataFrame = {
     import s.implicits._
-    val rows = Tables.embeddings(s, d)
-      .select(col("vec_id"), col("label"),
-        expr(s"vector_quantize(embedding, $pqScale)").as("xq"))
-      .as[(Long, Integer, Array[Long])]
-      .coalesce(1)
-      .rdd
-      .mapPartitions(it => emit(LocalFit.gather(it)))
-    s.createDataFrame(
-      if (kinds.isEmpty) rows
-      else rows.keyBy(_.getString(0)).partitionBy(new KindPartitioner(kinds)).values,
-      schema)
+    // through an RDD, so the frame's partitioning is unknown: a union of
+    // slices that all report SinglePartition is merged into ONE partition
+    // (Spark's partitioning-aware union), which would write one file
+    s.createDataset(Tables.embeddings(s, d)
+        .select(col("vec_id"), expr(s"vector_quantize(embedding, $pqScale)").as("xq"))
+        .as[(Long, Array[Long])]
+        .coalesce(1)
+        .rdd
+        .mapPartitions(it => emit(LocalFit.gather(it))))
+      .toDF("kind", "i", "j", "arr")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
-  private final class KindPartitioner(kinds: Seq[String]) extends org.apache.spark.Partitioner {
-    def numPartitions: Int = kinds.size
-    def getPartition(kind: Any): Int = kinds.indexOf(kind)
-  }
+  /** The `kind` rows of a [[trainedInOneTask]] frame as `cols`. */
+  private def kindSlice(t: DataFrame, kind: String, cols: Column*): DataFrame =
+    t.filter(col("kind") === kind).select(cols: _*)
 
   /** Mutual-edge components shared by sim_components (label cells) and
     * sim_components_kmeans (learned cells): mutual filter (a ∈ knn(b) AND
@@ -1616,11 +1639,11 @@ object SimilarityQueries {
     // centroids), the probed cell is CONSTANT-sized by the k ∝ N
     // contract, and the corpus appears only as 8-byte codes.
     Q("sim_ivfpq_scaled", pqScaledOracle) { (s, d) =>
-      val fit = kmeansScaledLayer(s, d)
-      val (_, cb, codes, _) = pqBuildCodebooks(s, d)
+      val fit = scaledFit(s, d)
+      val (cb, codes, _) = pqTrain(s, d)
       val queries = fit.xq.filter(expr(querySel))
         .select(col("vec_id").as("query_id"), col("xq"))
-      pqServeScaled(cb, codes, fit.a2.select("vec_id", "cid"),
+      pqServeScaled(cb, codes, fit.members,
         fit.sseeds, fit.pf, fit.pg, queries, selfExclude = true,
         hintQueryBroadcast = false)
     },
@@ -2467,8 +2490,10 @@ object SimilarityQueries {
       s"""WITH $kmeansThreeLevelCtes
          |SELECT vec_id, cid AS cluster_id, dist FROM a2 ORDER BY vec_id""".stripMargin) {
       (s, d) =>
-      kmeansScaledLayer(s, d).a2
-        .select(col("vec_id"), col("cid").as("cluster_id"), col("dist"))
+      val fit = scaledFit(s, d)
+      fit.members.join(fit.xq, "vec_id").join(fit.pf.select("cid", "carr"), "cid")
+        .select(col("vec_id"), col("cid").as("cluster_id"),
+          expr("vector_l2q(xq, carr)").as("dist"))
         .orderBy("vec_id")
     },
 
@@ -2482,8 +2507,8 @@ object SimilarityQueries {
     // three-level-assigned scaled layer, so EVERY stage of this chain is
     // now sub-quadratic in N.
     Q("sim_components_kmeans_scaled", kmComponentsScaledOracle) { (s, d) =>
-      val fit = kmeansScaledLayer(s, d)
-      kmComponentsFrom(s, d, fit.a2.select("vec_id", "cid"), fit.xq,
+      val fit = scaledFit(s, d)
+      kmComponentsFrom(s, d, fit.members, fit.xq,
         "sim_components_kmeans_scaled")
     },
 
@@ -2886,29 +2911,43 @@ object SimilarityQueries {
     .agg(expr("transform(array_sort(collect_list(struct(i, cm))), p -> p.cm)").as("carr"))
 
   /** The IVF-PQ INDEX build — the once-per-corpus-version pass: subspace
-    * codebooks (2 Lloyd-style rounds from deterministic seeds), per-vector
-    * 8-byte PQ codes, and the coarse cell centroids. Returned caches are
-    * the persisted intermediate frames (callers keep them alive until the
-    * serve plan has executed). */
+    * codebooks and per-vector 8-byte PQ codes ([[pqTrain]]), and the
+    * coarse cell centroids (each label's rounded-mean vector). Returned
+    * caches are the persisted intermediate frames (callers keep them alive
+    * until the serve plan has executed). */
   private[llm] def pqBuildIndex(s: org.apache.spark.sql.SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame, Seq[DataFrame]) = {
-    val (xq, cb, codes, caches) = pqBuildCodebooks(s, d)
+    val (cb, codes, caches) = pqTrain(s, d)
     val ccent = centroids(
-      xq.select(col("label"), posexplode(col("xq")).as(Seq("i", "v"))),
+      Tables.embeddings(s, d).select(col("label"),
+        posexplode(expr(s"vector_quantize(embedding, $pqScale)")).as(Seq("i", "v"))),
       Seq("label"))
     (cb, codes, ccent, caches)
   }
 
-  /** The CELL-INDEPENDENT half of the PQ build — subspace codebooks
-    * (2 Lloyd-style rounds from deterministic seeds) and per-vector 8-byte
-    * codes. Factored out so the SCALED index (k ∝ N three-level cells) can
-    * share the exact PQ construction with the fixed-label index; returns
-    * (xq quantized corpus, cb, codes, cache handles). Its one-task twin is
-    * [[LocalFit.pq]], which the `pq_index` and `pqs_index` stage builds run
-    * instead when the corpus has at most [[pqTrainCap]] vectors
-    * ([[fitsInOneTask]]); the query-shaped callers always run this one. */
-  private[llm] def pqBuildCodebooks(s: org.apache.spark.sql.SparkSession, d: String)
-      : (DataFrame, DataFrame, DataFrame, Seq[DataFrame]) = {
+  /** THE PQ training of corpus `d`, for every caller — (cb, codes, cache
+    * handles), the codebooks (s, cid, carr) and packed codes (vec_id,
+    * code) of the CELL-INDEPENDENT half of the PQ build, shared by the
+    * fixed-label and the SCALED index. It trains in one task
+    * ([[LocalFit.pq]]) when [[fitsInOneTask]] says the corpus is small
+    * enough, as slices of one persisted frame, and through the distributed
+    * [[pqBuildCodebooks]] otherwise; both give the same rows. */
+  private[llm] def pqTrain(s: org.apache.spark.sql.SparkSession, d: String)
+      : (DataFrame, DataFrame, Seq[DataFrame]) =
+    if (!fitsInOneTask(s, d, "pq")) pqBuildCodebooks(s, d)
+    else {
+      val t = trainedInOneTask(s, d)(LocalFit.pq)
+      (kindSlice(t, "cb", col("i").cast("int").as("s"), col("j").as("cid"), col("arr").as("carr")),
+        kindSlice(t, "code", col("i").as("vec_id"), col("j").as("code")), Seq(t))
+    }
+
+  /** The distributed PQ training — subspace codebooks (Lloyd-style rounds
+    * from deterministic seeds, on a hash-sample above [[pqTrainCap]]) and
+    * per-vector 8-byte codes: the 100 TB path, and the only one that runs
+    * above the one-task ceiling. Returns (cb, codes, cache handles). Its
+    * one-task twin is [[LocalFit.pq]]; [[pqTrain]] chooses between them. */
+  private def pqBuildCodebooks(s: org.apache.spark.sql.SparkSession, d: String)
+      : (DataFrame, DataFrame, Seq[DataFrame]) = {
     val n = Tables.embeddings(s, d).count()
     val step = math.max(1L, n / pqTrainCap)
     if (step > 1L)
@@ -2968,8 +3007,7 @@ object SimilarityQueries {
       .groupBy("vec_id")
       .agg(sum(expr(s"code << (s * $pqCodeBits)")).as("code"))
       .select("vec_id", "code")
-    (xq, cb, codes,
-      if (step == 1L) Seq(xq, sub) else Seq(train))
+    (cb, codes, if (step == 1L) Seq(xq, sub) else Seq(train))
   }
 
   /** Column layout (name, SQL type) of the scaled index stage; the fixed
@@ -2996,54 +3034,20 @@ object SimilarityQueries {
     * single-artifact layout mirrors a serialized ANN index file; the
     * corpus-sized member (codes) is narrow (vec_id, code — 8 bytes of
     * code per vector). */
-  private[graft] def stagePqIndex(s: org.apache.spark.sql.SparkSession, d: String): String =
-    stagePqIndex(s, d, pqTrainCap)
-
-  /** [[stagePqIndex]] with the one-task ceiling as a parameter (see
-    * [[fitsInOneTask]]); a spec forces the distributed build with 0. */
-  private[llm] def stagePqIndex(s: org.apache.spark.sql.SparkSession, d: String,
-      ceiling: Long): String = {
+  private[graft] def stagePqIndex(s: org.apache.spark.sql.SparkSession, d: String): String = {
     // pq-v3 = PACKED per-vector codes (one bigint), replacing the
     // (vec_id, s, code) triples of v2
     val stage = StagedTable.Stage("pq_index", StagedTable.Vecs,
       s"pq-v3;scale=$pqScale;M=$pqM;sub=$pqSubDim;k=$pqK;tcap=$pqTrainCap;" +
         s"dims=${LlmHash.dims}")
     StagedTable.getOrStage(s, d, stage) { write =>
-      if (fitsInOneTask(s, d, stage, ceiling))
-        write(trainedInOneTask(s, d, kindSchema(pqLayout), Seq("cb", "code", "ccent")) { c =>
-          pqRows(pqLayout, LocalFit.pq(c)) ++ LocalFit.labelCentroids(c).iterator.map {
-            case (label, carr) => kindRow(pqLayout, "ccent", "label" -> label, "carr" -> carr) }
-        })
-      else {
-        val (cb, codes, ccent, caches) = pqBuildIndex(s, d)
-        write(kindTagged(pqLayout, "cb" -> cb, "code" -> codes, "ccent" -> ccent))
-        caches.foreach(_.unpersist(blocking = false))
-      }
+      val (cb, codes, ccent, caches) = pqBuildIndex(s, d)
+      write(kindTagged(pqLayout, "cb" -> cb, "code" -> codes, "ccent" -> ccent))
+      caches.foreach(_.unpersist(blocking = false))
     }
   }
 
   private def pqLayout: Seq[(String, String)] = pqsLayout :+ ("label" -> "int")
-
-  /** The schema of a [[kindTagged]] frame: `kind` (never null) and the
-    * `layout` columns (null where a kind lacks them). */
-  private def kindSchema(layout: Seq[(String, String)]): StructType =
-    StructType(StructField("kind", StringType, nullable = false) +:
-      layout.map { case (c, t) => StructField(c, DataType.fromDDL(t)) })
-
-  /** One [[kindTagged]] row: `kind`, the named `cols`, nulls elsewhere. */
-  private def kindRow(layout: Seq[(String, String)], kind: String, cols: (String, Any)*): Row = {
-    val v = new Array[Any](layout.size + 1)
-    v(0) = kind
-    cols.foreach { case (c, x) => v(1 + layout.indexWhere(_._1 == c)) = x }
-    Row.fromSeq(v.toSeq)
-  }
-
-  /** The `cb` and `code` rows of a one-task PQ training. */
-  private def pqRows(layout: Seq[(String, String)], pq: LocalFit.Pq): Iterator[Row] =
-    pq.cb.iterator.map { case (sub, cid, carr) =>
-      kindRow(layout, "cb", "s" -> sub, "cid" -> cid, "carr" -> carr) } ++
-    pq.codes.iterator.map { case (v, code) =>
-      kindRow(layout, "code", "vec_id" -> v, "code" -> code) }
 
   /** The (cb, codes, ccent) frame bundle sliced out of a staged fixed-cell
     * index table — [[scaledIndexFrames]]' twin. */
@@ -3286,40 +3290,19 @@ object SimilarityQueries {
     * law (a grown corpus changes N, k and the xor — a stale scaled index
     * can never serve). */
   private[graft] def stagePqIndexScaled(s: org.apache.spark.sql.SparkSession,
-      d: String): String = stagePqIndexScaled(s, d, pqTrainCap)
-
-  /** [[stagePqIndexScaled]] with the one-task ceiling as a parameter (see
-    * [[fitsInOneTask]]); a spec forces the distributed build with 0. */
-  private[llm] def stagePqIndexScaled(s: org.apache.spark.sql.SparkSession,
-      d: String, ceiling: Long): String =
+      d: String): String =
     StagedTable.getOrStage(s, d, pqsStage) { write =>
-      if (fitsInOneTask(s, d, pqsStage, ceiling)) {
-        scaledFitsComputed += 1
-        write(trainedInOneTask(s, d, kindSchema(pqsLayout),
-            Seq("cb", "code", "member", "sseed", "gparent", "parent")) { c =>
-          val fit = LocalFit.scaled(c)
-          def row(kind: String, cols: (String, Any)*) = kindRow(pqsLayout, kind, cols: _*)
-          pqRows(pqsLayout, LocalFit.pq(c)) ++
-            fit.members.iterator.map { case (v, cid) => row("member", "vec_id" -> v, "cid" -> cid) } ++
-            fit.sseeds.iterator.map { case (sid, sarr) => row("sseed", "cid" -> sid, "carr" -> sarr) } ++
-            fit.gparents.iterator.map { case (gid, garr, sid) =>
-              row("gparent", "cid" -> gid, "carr" -> garr, "vec_id" -> sid) } ++
-            fit.parents.iterator.map { case (cid, carr, gid) =>
-              row("parent", "cid" -> cid, "carr" -> carr, "vec_id" -> gid) }
-        })
-      } else {
-        val fit = kmeansScaledLayer(s, d)
-        val (_, cb, codes, pqCaches) = pqBuildCodebooks(s, d)
-        write(kindTagged(pqsLayout,
-          "cb" -> cb, "code" -> codes,
-          "member" -> fit.a2.select("vec_id", "cid"),
-          "sseed" -> fit.sseeds.select(col("sid").as("cid"), col("sarr").as("carr")),
-          "gparent" -> fit.pg.select(col("gid").as("cid"), col("garr").as("carr"),
-            col("sid").as("vec_id")),
-          "parent" -> fit.pf.select(col("cid"), col("carr"), col("gid").as("vec_id"))))
-        fit.release() // frames AND checkpoint blocks (ADVICE r9)
-        pqCaches.foreach(_.unpersist(blocking = false))
-      }
+      val fit = scaledFit(s, d)
+      val (cb, codes, pqCaches) = pqTrain(s, d)
+      write(kindTagged(pqsLayout,
+        "cb" -> cb, "code" -> codes,
+        "member" -> fit.members,
+        "sseed" -> fit.sseeds.select(col("sid").as("cid"), col("sarr").as("carr")),
+        "gparent" -> fit.pg.select(col("gid").as("cid"), col("garr").as("carr"),
+          col("sid").as("vec_id")),
+        "parent" -> fit.pf.select(col("cid"), col("carr"), col("gid").as("vec_id"))))
+      fit.release() // frames AND checkpoint blocks (ADVICE r9)
+      pqCaches.foreach(_.unpersist(blocking = false))
     }
 
   /** The (cb, codes, members, sseeds, pf, pg) frame bundle sliced out of

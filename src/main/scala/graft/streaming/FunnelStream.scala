@@ -56,11 +56,11 @@ object FunnelStream {
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (uid, rows, state: GroupState[FunnelMachine]) =>
           val w = state.getCurrentWatermarkMs() * 1000L // µs
-          var st = state.getOption.getOrElse(FunnelMachine(Nil, Nil, unset, unset, unset))
+          val st = state.getOption.getOrElse(FunnelMachine(Nil, Nil, unset, unset, unset))
           // stage incoming rows into the buffer (µs event times)
           val add = rows.map(e => (e.timestamp * 1000L, e.event_type)).toSeq
-          var bufTs = st.bufTs ++ add.map(_._1)
-          var bufTy = st.bufTy ++ add.map(_._2)
+          val bufTs = st.bufTs ++ add.map(_._1)
+          val bufTy = st.bufTy ++ add.map(_._2)
           // fold everything at or behind the watermark, in event-time order
           val (ripe, pending) = (bufTs zip bufTy).partition(_._1 <= w)
           var (vt, ct, pt) = (st.vt, st.ct, st.pt)

@@ -60,7 +60,6 @@ object SensorSources {
     * byte-identical to what a replayed stream would produce. */
   def sensorBatch(spark: SparkSession, n: Long, numPartitions: Int = 1,
       startEpochMs: Long = 0L, stepMs: Long = 10L): Dataset[SensorReading] = {
-    import spark.implicits._
     val df = spark.range(0, n, 1, math.max(numPartitions, 1)).toDF("value")
       .withColumn("timestamp", timestamp_millis(lit(startEpochMs) + col("value") * stepMs))
     readingsFromValue(df, 10, numPartitions)

@@ -6,7 +6,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, Dataset, ForeachWriter, Row, SaveMode}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** Sink surface (SURVEY.md §2.2, K1–K6).
   *
@@ -105,7 +105,7 @@ object Sinks {
       checkpoint: String, orderCol: Option[String] = None): DataStreamWriter[Row] = {
     df.writeStream
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      .foreachBatch { (batch: DataFrame, _: Long) =>
         upsertBatch(batch, keyCols, targetDir, orderCol)
       }
   }
