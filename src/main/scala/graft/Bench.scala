@@ -2,7 +2,7 @@ package graft
 
 import scala.collection.immutable.{ListMap, SortedMap}
 
-import graft.core.{BenchRecord, Json, Verdict}
+import graft.core.{BenchRecord, Codegen, Json, Verdict}
 
 /** Benchmark main — one JSON line on stdout per the driver contract.
   *
@@ -316,6 +316,7 @@ object Bench {
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => if (mergeSet.nonEmpty) mergeSet(n) else only.isEmpty || only(n))
     val measured = names.map { name =>
+      val c0 = Codegen.compiles
       var sec = -1.0
       var gc = 0L
       var runs = 0
@@ -344,8 +345,10 @@ object Bench {
       if (sec >= 0 && overThreshold(sec, r, drift))
         System.err.println(f"[bench] $name still $sec%.2fs after ${runs - 1} rerun(s) " +
           f"vs committed ${r.get}%.2fs — treat this artifact as contaminated")
+      System.err.println(Codegen.line(Codegen.compiles - c0, s"query=$name"))
       QueryRun(name, sec, gc, runs - 1)
     }
+    System.err.println(Codegen.line(Codegen.compiles, "run"))
     val run = Run(sfDir, cpus, measured, calNow, loadStart, osBean.getSystemLoadAverage)
     val d = decide(run, committed, force, only, mergeSet, drift)
 

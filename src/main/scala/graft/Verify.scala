@@ -1,4 +1,7 @@
 package graft
+
+import graft.core.Codegen
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -24,11 +27,13 @@ object Verify {
       if (only.isEmpty) SparkEntry.queries
       else SparkEntry.queries.view.filterKeys(only).toMap
     selected.foreach { case (name, fn) =>
+      val c0 = Codegen.compiles
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
+      System.err.println(Codegen.line(Codegen.compiles - c0, s"query=$name"))
       // queries that persist intermediates (dedup/BPE/bm25 chains) must
       // not accumulate cached RDDs across a 100+-query session (the Bench
       // contract, same reason)
@@ -36,6 +41,7 @@ object Verify {
     }
     graft.core.Json.writeFile(s"$outDir/oracle_sql.json",
       SparkEntry.oracleSql.filter { case (k, _) => only.isEmpty || only(k) })
+    System.err.println(Codegen.line(Codegen.compiles, "run"))
     spark.stop()
   }
 }

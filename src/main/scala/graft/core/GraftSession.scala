@@ -47,6 +47,22 @@ object GraftSession {
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       // checkpoint cadence parity with the reference's 10s checkpoints is a
       // trigger setting per query, not a session conf
+      // generated code: see [[CodegenCacheEntries]]
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.sql.codegen.useIdInClassName", "false")
+
+  /** Entries of Spark's JVM-wide generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, a static conf; Spark's default
+    * is 100). One `llm_batch` lap alone needs more than 100, so a long-lived
+    * process recompiled the same classes lap after lap.
+    *
+    * Sized from a measurement: one full 194-query `graft.Verify` pass at
+    * sf0.01 (4 cores, a cap of 100 000 and stage-id-free class names, so
+    * nothing was evicted) compiled 2 069 classes, each one cache entry.
+    * The rule is that working set times two, rounded up to a power of two,
+    * as headroom for larger inputs and for plans no testdata query makes.
+    * Each entry keeps one generated class loaded. */
+  val CodegenCacheEntries: Int = 4096
 
   /** Parquet-compressed input bytes per shuffle partition. 32 MiB of
     * parquet decompresses to ≈128 MiB of row data at the ~4× ratio these

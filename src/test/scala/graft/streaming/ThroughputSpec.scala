@@ -1,7 +1,10 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
 import java.time.Instant
+
+import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 import org.apache.spark.sql.streaming.Trigger
 import graft.SparkSpec
@@ -28,6 +31,32 @@ import graft.SparkSpec
   * actual capacity margin on local[4].
   */
 class ThroughputSpec extends SparkSpec {
+
+  private val scratch = collection.mutable.Buffer.empty[Path]
+
+  /** A fresh checkpoint or output dir under `target/throughput-spec/`,
+    * deleted when its test ends. */
+  private def scratchDir(tag: String): String = {
+    val base = Files.createDirectories(Paths.get("target", "throughput-spec"))
+    val dir = Files.createTempDirectory(base.toAbsolutePath, tag)
+    scratch += dir
+    dir.toString
+  }
+
+  /** Deletes the test's dirs; a clean-up error is reported, never turned
+    * into the test's outcome. */
+  override def withFixture(test: NoArgTest): org.scalatest.Outcome =
+    try super.withFixture(test)
+    finally {
+      scratch.foreach { dir =>
+        try Using.resource(Files.walk(dir))(_.iterator().asScala.toSeq).reverse
+          .foreach(Files.deleteIfExists(_))
+        catch { case e @ (_: java.io.IOException | _: java.io.UncheckedIOException) =>
+          System.err.println(s"[throughput-spec] could not delete $dir: $e")
+        }
+      }
+      scratch.clear()
+    }
 
   /** Shared measurement harness: run `q` until SOME trailing ≥10 s window
     * of post-warmup progress sustains the floor, write that window as the
@@ -94,7 +123,7 @@ class ThroughputSpec extends SparkSpec {
     val readings = SensorSources.sensorStream(
       spark, numPartitions = numPartitions,
       readingsPerSecondPerPartition = perPartitionRate)
-    val ckpt = Files.createTempDirectory("rate_ckpt").toString
+    val ckpt = scratchDir("rate_ckpt")
     val q = EventTimePipelines.windowedAvg(readings, size = "1 second")
       .writeStream.format("memory").queryName("rate_w1")
       .outputMode("update")
@@ -129,7 +158,7 @@ class ThroughputSpec extends SparkSpec {
         expr(s"array_join(transform(sequence(0, 11), " +
           s"j -> element_at($vocabArr, cast((value * 7 + j * 13) % 50 as int) + 1)), ' ')")
           .as("text"))
-    val ckpt = Files.createTempDirectory("rate_lm_ckpt").toString
+    val ckpt = scratchDir("rate_lm_ckpt")
     val q = graft.llm.StreamingCorpusPrep.lmScoreStream(
         docs, model, stats, cutoffs, delay = "5 seconds")
       .writeStream.format("memory").queryName("rate_lm")
@@ -161,7 +190,7 @@ class ThroughputSpec extends SparkSpec {
           s"j -> element_at($vocabArr, cast((value * 11 + j * 17) % 64 as int) + 1)), ' ')")
           .as("text"))
       .as[graft.llm.DocEvent](org.apache.spark.sql.Encoders.product[graft.llm.DocEvent])
-    val ckpt = Files.createTempDirectory("rate_neardup_ckpt").toString
+    val ckpt = scratchDir("rate_neardup_ckpt")
     val q = graft.llm.StreamingDedup.dedupNearBandedStream(docs, delayMs = 5000L)
       .writeStream.format("memory").queryName("rate_neardup")
       .outputMode("append")
@@ -192,7 +221,7 @@ class ThroughputSpec extends SparkSpec {
         expr("(hash(value * 31 + 7) & 4294967295)").cast("long").as("hash_lo"))
       .as[graft.llm.StreamingDedup.SigEvent](
         org.apache.spark.sql.Encoders.product[graft.llm.StreamingDedup.SigEvent])
-    val ckpt = Files.createTempDirectory("rate_mm_ckpt").toString
+    val ckpt = scratchDir("rate_mm_ckpt")
     val q = graft.llm.StreamingDedup.dedupNearBandedSigStream(assets, delayMs = 5000L)
       .writeStream.format("memory").queryName("rate_mm")
       .outputMode("append")
@@ -223,7 +252,7 @@ class ThroughputSpec extends SparkSpec {
           "shiftleft(hash(value * 13 + i) & 4294967295, 32))").as("frames"))
       .as[graft.llm.StreamingDedup.FrameSeqEvent](
         org.apache.spark.sql.Encoders.product[graft.llm.StreamingDedup.FrameSeqEvent])
-    val ckpt = Files.createTempDirectory("rate_fseq_ckpt").toString
+    val ckpt = scratchDir("rate_fseq_ckpt")
     val q = graft.llm.StreamingDedup.dedupNearFrameSeqStream(videos, delayMs = 5000L)
       .writeStream.format("memory").queryName("rate_fseq")
       .outputMode("append")
@@ -251,7 +280,7 @@ class ThroughputSpec extends SparkSpec {
         when(col("value") % 4 < 3, lit(20000L)).otherwise(lit(100L)).as("energy"),
         unix_millis(col("timestamp")).as("timestamp"))
       .as[graft.llm.AudioWinEvent]
-    val ckpt = Files.createTempDirectory("rate_vad_ckpt").toString
+    val ckpt = scratchDir("rate_vad_ckpt")
     val q = graft.llm.StreamingSegments.activitySegmentsStream(wins, delay = "5 seconds")
       .writeStream.format("memory").queryName("rate_vad")
       .outputMode("append")
@@ -278,7 +307,7 @@ class ThroughputSpec extends SparkSpec {
         unix_millis(col("timestamp")).as("timestamp"),
         lit("view").as("event_type"))
       .as[UserEvent]
-    val ckpt = Files.createTempDirectory("rate_sess_ckpt").toString
+    val ckpt = scratchDir("rate_sess_ckpt")
     val q = SessionStream.sessionStream(events, delay = "5 seconds")
       .writeStream.format("memory").queryName("rate_sess")
       .outputMode("append")
@@ -307,7 +336,7 @@ class ThroughputSpec extends SparkSpec {
         (col("value") / 100).cast("long").as("day_idx"),
         (col("value") % 100).cast("long").as("c"))
       .as[DayCount]
-    val ckpt = Files.createTempDirectory("rate_cusum_ckpt").toString
+    val ckpt = scratchDir("rate_cusum_ckpt")
     val q = AnomalyStream.cusumAlarmStream(days, baseline, slack = 5L, h = 200L)
       .writeStream.format("memory").queryName("rate_cusum")
       .outputMode("append")
@@ -343,7 +372,7 @@ class ThroughputSpec extends SparkSpec {
           s"j -> element_at($vocabArr, cast((value * 7 + j * 13) % 50 as int) + 1)), ' ')")
           .as("text"))
       .as[graft.llm.LangDocEvent]
-    val ckpt = Files.createTempDirectory("rate_dsir_ckpt").toString
+    val ckpt = scratchDir("rate_dsir_ckpt")
     val q = graft.llm.StreamingCorpusPrep.dsirScoreStream(docs, lr, delay = "5 seconds")
       .writeStream.format("memory").queryName("rate_dsir")
       .outputMode("append")
@@ -374,7 +403,7 @@ class ThroughputSpec extends SparkSpec {
           "j -> cast((value % 97) * 0.01 + j * 0.001 as float))").as("embedding"))
       .as[graft.llm.QueryVec]
     val served = new java.util.concurrent.atomic.AtomicLong(0L)
-    val ckpt = Files.createTempDirectory("rate_ann_ckpt").toString
+    val ckpt = scratchDir("rate_ann_ckpt")
     val q = graft.llm.StreamingAnnServe.serve(queries, corpus,
         trigger = Some(Trigger.ProcessingTime("500 milliseconds")),
         checkpoint = Some(ckpt)) { df =>
@@ -405,7 +434,7 @@ class ThroughputSpec extends SparkSpec {
           "j -> cast((value % 97) * 0.01 + j * 0.001 as float))").as("embedding"))
       .as[graft.llm.QueryVec]
     val served = new java.util.concurrent.atomic.AtomicLong(0L)
-    val ckpt = Files.createTempDirectory("rate_anns_ckpt").toString
+    val ckpt = scratchDir("rate_anns_ckpt")
     val q = graft.llm.StreamingAnnServe.serveScaled(queries, corpus, None,
         trigger = Some(Trigger.ProcessingTime("500 milliseconds")),
         checkpoint = Some(ckpt)) { df =>
@@ -439,7 +468,7 @@ class ThroughputSpec extends SparkSpec {
           "j -> cast((value % 97) * 0.01 + j * 0.001 as float))").as("embedding"))
       .as[graft.llm.QueryVec]
     val served = new java.util.concurrent.atomic.AtomicLong(0L)
-    val ckpt = Files.createTempDirectory("rate_annr_ckpt").toString
+    val ckpt = scratchDir("rate_annr_ckpt")
     val q = graft.llm.StreamingAnnServe.serveScaledRerank(queries, corpus, None,
         trigger = Some(Trigger.ProcessingTime("500 milliseconds")),
         checkpoint = Some(ckpt)) { df =>
@@ -477,8 +506,8 @@ class ThroughputSpec extends SparkSpec {
           s"j -> element_at($vocabArr, cast((value * 7 + j * 13) % 50 as int) + 1)), ' '), " +
           s"' d', cast(value as string))").as("text"))
       .as[graft.llm.LangDocEvent]
-    val outDir = Files.createTempDirectory("rate_e2e_out").toString + "/data"
-    val ckpt = Files.createTempDirectory("rate_e2e_ckpt").toString
+    val outDir = scratchDir("rate_e2e_out") + "/data"
+    val ckpt = scratchDir("rate_e2e_ckpt")
     val q = graft.llm.Publish.publishStream(
         graft.llm.StreamingCorpusPrep.curateStream(
           docs, model, stats, cutoffs, delay = "5 seconds"),
@@ -510,7 +539,7 @@ class ThroughputSpec extends SparkSpec {
         ((unix_millis(col("timestamp")) / 1000L) % 10000000L).cast("long").as("day_idx"),
         (col("value") % 20000L).as("cents"))
       .as[StreamingScd2.SpendRow]
-    val ckpt = Files.createTempDirectory("rate_scd2_ckpt").toString
+    val ckpt = scratchDir("rate_scd2_ckpt")
     val q = StreamingScd2.scd2Stream(rows, watermarkDelay = "2 days")
       .writeStream.format("memory").queryName("rate_scd2")
       .outputMode("append")
