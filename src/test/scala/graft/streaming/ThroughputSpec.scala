@@ -48,14 +48,19 @@ class ThroughputSpec extends SparkSpec {
   override def withFixture(test: NoArgTest): org.scalatest.Outcome =
     try super.withFixture(test)
     finally {
-      scratch.foreach { dir =>
-        try Using.resource(Files.walk(dir))(_.iterator().asScala.toSeq).reverse
-          .foreach(Files.deleteIfExists(_))
-        catch { case e @ (_: java.io.IOException | _: java.io.UncheckedIOException) =>
-          System.err.println(s"[throughput-spec] could not delete $dir: $e")
-        }
-      }
+      scratch.foreach(deleteTree(_, attempts = 5))
       scratch.clear()
+    }
+
+  /** A stopped query's state-store maintenance can still be writing a
+    * snapshot into its checkpoint (seen as a `DirectoryNotEmptyException`
+    * on `state/0/0`), so a failed pass waits a second and walks again. */
+  private def deleteTree(dir: Path, attempts: Int): Unit =
+    try Using.resource(Files.walk(dir))(_.iterator().asScala.toSeq).reverse
+      .foreach(Files.deleteIfExists(_))
+    catch { case e @ (_: java.io.IOException | _: java.io.UncheckedIOException) =>
+      if (attempts > 1) { Thread.sleep(1000); deleteTree(dir, attempts - 1) }
+      else System.err.println(s"[throughput-spec] could not delete $dir: $e")
     }
 
   /** Shared measurement harness: run `q` until SOME trailing ≥10 s window
